@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * extracted exactly once — a per-database union would duplicate the whole
   * scan+extract subtree (Spark does not dedupe common subplans across union
   * branches). Returns array<struct<db_idx, entry_idx, prefix_len,
-  * match_type>>; db_idx indexes ScanJob's metadata table.
+  * match_type>>; (db_idx, entry_idx) keys the entry metadata (EntryMeta).
   */
 case class IntelLookupMulti(left: Expression, right: Expression,
     dbs: BcHandle[Array[IntelDb]])
@@ -102,5 +102,5 @@ object IntelLookupMulti {
   def column(value: Column, indicatorType: Column, dbs: Seq[IntelDb]): Column =
     ExpressionUtils.column(IntelLookupMulti(
       ExpressionUtils.expression(value),
-      ExpressionUtils.expression(indicatorType), BcHandle.auto(dbs.toArray)))
+      ExpressionUtils.expression(indicatorType), BcHandle.dbs(dbs)))
 }

@@ -186,6 +186,6 @@ object ScanTurn {
   def column(text: Column, dbs: Seq[IntelDb],
       config: ScanConfig = ScanConfig()): Column =
     ExpressionUtils.column(
-      ScanTurn(ExpressionUtils.expression(text), BcHandle.auto(dbs.toArray),
+      ScanTurn(ExpressionUtils.expression(text), BcHandle.dbs(dbs),
         config))
 }

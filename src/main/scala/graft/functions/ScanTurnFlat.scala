@@ -21,7 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * fields, then exploded `hits` AGAIN — a Generate -> Filter -> Project ->
   * Generate chain whose intermediate rows are all materialized per
   * candidate. The flat form emits exactly the surviving rows from inside
-  * the expression, so the plan is ONE Generate feeding the metadata join.
+  * the expression, so the plan is ONE Generate feeding the metadata read.
   * ScanJob.run keeps full ScanTurn (it needs the clean rows and the
   * per-candidate stats observer).
   */
@@ -202,6 +202,6 @@ object ScanTurnFlat {
       config: ScanConfig = ScanConfig(), fastScreen: Boolean = false): Column =
     ExpressionUtils.column(
       ScanTurnFlat(ExpressionUtils.expression(text),
-        BcHandle.auto(dbs.toArray), config,
+        BcHandle.dbs(dbs), config,
         if (fastScreen) BcHandle.auto(CleanPreScreen.build(dbs)) else null))
 }

@@ -1,7 +1,11 @@
 package graft.intel
 
 import graft.extract.Ipv6Format
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.catalyst.InternalRow
 
+import java.lang.ref.WeakReference
 import scala.collection.mutable
 
 /** IP/CIDR parsed into the unified 128-bit space: IPv4 a.b.c.d/p maps to
@@ -574,6 +578,24 @@ final class IntelDb(
 
   def hasIpSection: Boolean = !lpm.isEmpty
   def hasStringSection: Boolean = !literals.isEmpty || !globs.isEmpty
+
+  /** Per-entry metadata as Catalyst rows ([[IntelMetaRows.schema]]),
+    * indexed by entry_idx. Rendered on first use, once per instance in
+    * each JVM that reads it — on executors, not in `build`.
+    */
+  @transient lazy val metaRows: Array[InternalRow] = IntelMetaRows.render(this)
+
+  // this instance's broadcast and the context that owns it (BcHandle.dbs):
+  // one broadcast per instance per SparkContext, reused by every scan call
+  @transient private var shared:
+    (WeakReference[SparkContext], Broadcast[BcHandle.SharedDb]) = _
+
+  private[intel] def broadcastIn(sc: SparkContext)
+      : Broadcast[BcHandle.SharedDb] = synchronized {
+    if (shared == null || (shared._1.get ne sc))
+      shared = (new WeakReference(sc), sc.broadcast(new BcHandle.SharedDb(this)))
+    shared._2
+  }
 }
 
 object IntelDb {

@@ -48,8 +48,8 @@ object Sinks {
     * not.) "extra" sorts between "confidence" and "source", preserving the
     * alphabetical key order rule.
     *
-    * `inlineExtra = true` (requires the `data_json` column from
-    * `ScanJob.intelMetaDf`) switches to the reference's OWN shape instead:
+    * `inlineExtra = true` (requires the `data_json` metadata column,
+    * graft.intel.IntelMetaRows) switches to the reference's OWN shape instead:
     * the whole data object is the flat per-entry DataValue map with
     * dynamic keys inlined at the top level, alphabetical across fixed and
     * dynamic keys alike — byte parity for a consumer that reads custom
@@ -59,7 +59,7 @@ object Sinks {
       tsSeconds: Column, path: String,
       inlineExtra: Boolean = false): Unit = {
     val extraField =
-      // typed path: `extra_json` (intelMetaDf's per-entry DataValue
+      // typed path: `extra_json` (the per-entry DataValue
       // rendering) parses to a VARIANT, which to_json serializes as raw
       // typed JSON — `"ttl":3600`, `"verified":true` — matching the
       // reference's serde DataValue serialization. The map fallback keeps
@@ -72,7 +72,7 @@ object Sinks {
     val dataObj =
       if (inlineExtra) {
         require(matched.columns.contains("data_json"),
-          "inlineExtra needs the data_json column (ScanJob.intelMetaDf)")
+          "inlineExtra needs the data_json metadata column")
         parse_json(col("data_json"))
       } else struct(col("category"), col("confidence"),
         extraField.as("extra"), col("source"), col("threat_level"))

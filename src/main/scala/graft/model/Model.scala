@@ -57,7 +57,7 @@ final case class IntelEntry(
     // Attribute-level metadata fidelity (MISP S8, reference
     // misp_importer.rs:884-925): the to_ids actionability bit, analyst
     // comment, attribute type, attribute unix timestamp and merged
-    // event+attribute tags ride through the broadcast metadata join into
+    // event+attribute tags ride the per-entry metadata (IntelMetaRows) into
     // the matched output, so downstream filters like to_ids=true work.
     // Defaults = "absent" for non-MISP sources.
     to_ids: Option[Boolean] = None,
@@ -69,7 +69,7 @@ final case class IntelEntry(
     // DataValue> per entry, matchy-data-format/src/lib.rs:49-77): any feed
     // column OUTSIDE the fixed ThreatDB/MISP shape above survives here as
     // string key/values instead of being silently dropped, and rides the
-    // broadcast metadata join into the matched output + NDJSON sink.
+    // per-entry metadata into the matched output + NDJSON sink.
     extra: Map[String, String] = Map.empty,
     // DataValue type tag per extra key (intel.DataValues tags: i32/u64/
     // f64/bool/str) — captured at ingest (CSV per-cell inference,

@@ -30,7 +30,7 @@ object RiskScore {
   /** One row per conv_id: n_matches, n_indicators (distinct values),
     * risk_score, tier (`escalate` / `review` / `routine`).
     *
-    * @param matched    [[ScanJob.matched]]/[[ScanJob.enriched]]-shaped
+    * @param matched    [[ScanJob.matched]]-shaped
     *                   rows carrying (conv_id, value, threat_level)
     * @param escalateAt inclusive lower bound for tier `escalate`
     * @param elevatedAt inclusive lower bound for tier `review`

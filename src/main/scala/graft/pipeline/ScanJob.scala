@@ -1,18 +1,21 @@
 package graft.pipeline
 
-import graft.functions.{GraftFunctions, IntelLookupMulti}
-import graft.intel.IntelDb
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.functions.{EntryMeta, GraftFunctions}
+import graft.intel.{IntelDb, IntelMetaRows}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+
+import scala.jdk.CollectionConverters._
 
 /** The flagship scan pipeline (SURVEY.md §3.1), expressed as one declarative
   * Spark plan:
   *
   * {{{
-  * turns                                         // table scan (S1)
-  *   .withColumn(ioc, explode(extract_iocs(text)))  // E1-E8, one pass
-  *   .withColumn(hit, explode(intel_lookup(...)))   // L2/L3/L4 per db (L8)
-  *   .join(broadcast(intelMeta), ...)               // metadata BHJ
+  * turns                                            // table scan (S1)
+  *   .select(explode(scan_turn(text)))               // E1-E8 + L2/L3/L4
+  *                                                   // per db (L8), one pass
+  *   .select(intel_meta(db_idx, entry_idx))          // metadata read in place
   *   -> fan-out writes per indicator_type + clean sink (R4)
   *   -> gold counts + stats (A1-A6, A10) + per-partition lineage metrics
   * }}}
@@ -30,10 +33,6 @@ import org.apache.spark.sql.functions._
   */
 object ScanJob {
 
-  val CandidateCols: Seq[String] = Seq(
-    "conv_id", "turn_idx", "role", "indicator_type", "value",
-    "matched_text", "span_start", "span_end")
-
   /** Extraction stage: one row per (turn, extracted indicator). */
   def candidates(turns: DataFrame): DataFrame =
     turns
@@ -41,69 +40,38 @@ object ScanJob {
         explode(GraftFunctions.extract_iocs(col("text"))).as("ioc"))
       .select(col("conv_id"), col("turn_idx"), col("role"), col("ioc.*"))
 
-  /** Intel metadata as a DataFrame, one row per (db_idx, entry_idx) — the
-    * broadcast side of the enrichment join.
+  /** Intel metadata as a DataFrame, one row per (db_idx, entry_idx), with
+    * the columns the scan attaches in place ([[IntelMetaRows]]) — for
+    * queries that join entry metadata relationally.
     */
   def intelMetaDf(spark: SparkSession, dbs: Seq[IntelDb]): DataFrame = {
-    import spark.implicits._
-    dbs.zipWithIndex.flatMap { case (db, d) =>
-      db.entries.zipWithIndex.map { case (m, i) =>
-        (d, i, db.databaseId, m.entry, m.entryType, m.threatLevel,
-          m.category, m.source, m.confidence,
-          m.toIds, m.comment, m.attrType, m.attrTimestamp, m.tags,
-          // NULL instead of an empty map: every matched row inherits this
-          // column through the broadcast join, and a null costs one bit in
-          // the output UnsafeRow where an empty MapData costs a 16-byte
-          // body plus per-row serialization (JFR: getMap + row-copy tax on
-          // the extra-less common case). Consumers are null-safe
-          // (element_at(null)=null; size(null) keeps the NDJSON guard off).
-          if (m.extra.isEmpty) null else m.extra,
-          // typed rendering of the same extras (DataValue fidelity): a
-          // key-sorted JSON object fragment rendered ONCE per entry on the
-          // driver — the NDJSON sink parses it to a variant so numbers/
-          // bools emit unquoted (matchy-data-format/src/lib.rs:49-77)
-          graft.intel.DataValues
-            .typedJsonObject(m.extra, m.extraTypes).orNull,
-          // the COMPLETE data object with dynamic keys inlined at the top
-          // level — the reference's own NDJSON shape, for the opt-in
-          // byte-parity sink mode (Sinks.ndjsonMatched inlineExtra)
-          graft.intel.DataValues.dataObjectJson(m.category, m.confidence,
-            m.source, m.threatLevel, m.extra, m.extraTypes))
-      }
-    }.toDF("db_idx", "entry_idx", "database_id", "entry", "entry_type",
-      "threat_level", "category", "source", "confidence",
-      "to_ids", "comment", "attr_type", "attr_timestamp", "tags", "extra",
-      "extra_json", "data_json")
+    val rows = for {
+      (db, d) <- dbs.zipWithIndex
+      (m, i) <- db.entries.toSeq.zipWithIndex
+    } yield Row.fromSeq(d +: i +: IntelMetaRows.row(db, m).toSeq)
+    spark.createDataFrame(rows.asJava, StructType(
+      StructField("db_idx", IntegerType, nullable = false) +:
+        StructField("entry_idx", IntegerType, nullable = false) +:
+        IntelMetaRows.schema.fields.toSeq))
   }
 
-  /** Broadcast-metadata tail shared by `enriched` and `matched`: join the
-    * (db_idx, entry_idx) hit keys to the intel metadata and derive `cidr`.
+  /** Attach each hit's intel metadata in place — `intel_meta` reads the
+    * entry's row from the broadcast databases the scan already carries, so
+    * there is no metadata relation, exchange or join — and derive `cidr`.
+    * Column order is the one the former (db_idx, entry_idx) join gave:
+    * entry_idx, the other hit columns, the metadata columns, cidr. A null
+    * key (routed clean row) gives null metadata.
     */
-  private def attachMeta(hits: DataFrame, dbs: Seq[IntelDb],
-      spark: SparkSession): DataFrame =
+  private def withMeta(hits: DataFrame, dbs: Seq[IntelDb]): DataFrame = {
+    val rest = hits.columns.toSeq
+      .filterNot(c => c == "db_idx" || c == "entry_idx").map(col)
     hits
-      .join(broadcast(intelMetaDf(spark, dbs)), Seq("db_idx", "entry_idx"),
-        "inner")
-      .drop("db_idx")
+      .select((col("entry_idx") +: rest) :+
+        EntryMeta.column(col("db_idx"), col("entry_idx"), dbs).as("meta"): _*)
+      .select((col("entry_idx") +: rest) :+ col("meta.*"): _*)
       .withColumn("cidr",
         when(col("match_type") === "ip",
           concat(col("value"), lit("/"), col("prefix_len"))))
-
-  /** Enrichment stage (L2+L3+L4 x L8) over an ALREADY-EXTRACTED candidate
-    * frame: probe ALL broadcast databases in one generator, keep hits (F1),
-    * then attach metadata via an explicit broadcast hash join.
-    */
-  def enriched(cands: DataFrame, dbs: Seq[IntelDb],
-      spark: SparkSession): DataFrame = {
-    val hits = cands
-      .withColumn("hit", explode(
-        IntelLookupMulti.column(col("value"), col("indicator_type"), dbs)))
-      .select((CandidateCols.map(col) :+
-        col("hit.db_idx").as("db_idx") :+
-        col("hit.entry_idx").as("entry_idx") :+
-        col("hit.prefix_len").as("prefix_len") :+
-        col("hit.match_type").as("match_type")): _*)
-    attachMeta(hits, dbs, spark)
   }
 
   /** Capability-derived extractor defaults (F3, match_cmd.rs:277-303):
@@ -132,12 +100,20 @@ object ScanJob {
     * than the two-expression form, whose explode boundary re-materializes
     * every candidate row and re-decodes the value from its UTF8 bytes),
     * and the generator emits (candidate x hit) rows directly, so the plan
-    * is a single Generate feeding the metadata join with no intermediate
-    * filter/re-explode of hitless candidates.
+    * is a single Generate feeding the in-place metadata read with no
+    * intermediate filter/re-explode of hitless candidates.
     */
   def matched(turns: DataFrame, dbs: Seq[IntelDb], spark: SparkSession,
       prescreen: Boolean = false,
-      config: Option[graft.extract.ScanConfig] = None): DataFrame = {
+      config: Option[graft.extract.ScanConfig] = None): DataFrame =
+    withMeta(matchedHits(turns, dbs, prescreen, config), dbs)
+
+  /** `matched` before its metadata: one row per (candidate x hit), keyed
+    * by (db_idx, entry_idx).
+    */
+  private[pipeline] def matchedHits(turns: DataFrame, dbs: Seq[IntelDb],
+      prescreen: Boolean,
+      config: Option[graft.extract.ScanConfig]): DataFrame = {
     val scanCfg = config.getOrElse(capabilityConfig(dbs))
     val input =
       if (!prescreen) turns
@@ -145,7 +121,7 @@ object ScanJob {
         val screen = graft.intel.CleanPreScreen.build(dbs)
         turns.where(graft.functions.MightMatch.column(col("text"), screen))
       }
-    val hits = input
+    input
       .select(col("conv_id"), col("turn_idx"), col("role"),
         explode(graft.functions.ScanTurnFlat.column(col("text"), dbs,
           scanCfg)).as("m"))
@@ -159,7 +135,6 @@ object ScanJob {
         col("m.entry_idx").as("entry_idx"),
         col("m.prefix_len").as("prefix_len"),
         col("m.match_type").as("match_type"))
-    attachMeta(hits, dbs, spark)
   }
 
   /** North-rule gold aggregate (A10): per-sink match counts. */
@@ -197,17 +172,30 @@ object ScanJob {
       ndjsonInlineExtra: Boolean = false)
 
   /** The routed frame: extract + enrich + per-turn routing verdict in ONE
-    * map-side pass (ScanTurn generator), metadata attached via broadcast
-    * left join. Every pending turn contributes exactly one clean row
-    * (sink="clean", text preserved) XOR >=1 matched rows (sink="matched").
-    * `obsTurns`/`obsRows` attach the A1-A6 stat observers so `run` gets its
-    * stats for free on the write action — no second pass over the input.
+    * map-side pass (ScanTurn generator), metadata read in place (clean rows
+    * get null metadata). Every pending turn contributes exactly one clean
+    * row (sink="clean", text preserved) XOR >=1 matched rows
+    * (sink="matched"). `obsTurns`/`obsRows` attach the A1-A6 stat observers
+    * so `run` gets its stats for free on the write action — no second pass
+    * over the input.
     */
   private[pipeline] def routedFrame(spark: SparkSession, pending: DataFrame,
       dbs: Seq[IntelDb],
       obsTurns: Option[org.apache.spark.sql.Observation] = None,
       obsRows: Option[org.apache.spark.sql.Observation] = None,
-      config: Option[graft.extract.ScanConfig] = None): DataFrame = {
+      config: Option[graft.extract.ScanConfig] = None): DataFrame =
+    withMeta(routedHits(pending, dbs, obsTurns, obsRows, config), dbs)
+      // clean rows have no indicator type; 'none' keeps the partition path tidy
+      .withColumn("indicator_type",
+        coalesce(col("indicator_type"), lit("none")))
+
+  /** `routedFrame` before its metadata: matched rows keyed by (db_idx,
+    * entry_idx), clean rows with null keys.
+    */
+  private[pipeline] def routedHits(pending: DataFrame, dbs: Seq[IntelDb],
+      obsTurns: Option[org.apache.spark.sql.Observation],
+      obsRows: Option[org.apache.spark.sql.Observation],
+      config: Option[graft.extract.ScanConfig]): DataFrame = {
     // F3: derived fresh per call — streaming hot reload can change a db's
     // capabilities between micro-batches
     val scanCfg = config.getOrElse(capabilityConfig(dbs))
@@ -249,7 +237,7 @@ object ScanJob {
         count(when(col("sink") === "clean", 1)).as("clean_turns"),
         perType: _*)
     }
-    val rows = observed
+    observed
       .where(col("sink") === "clean" || size(col("hits")) > 0)
       .withColumn("sink",
         when(col("sink") === "cand", lit("matched")).otherwise(col("sink")))
@@ -260,16 +248,6 @@ object ScanJob {
         col("hit.prefix_len").as("prefix_len"),
         col("hit.match_type").as("match_type"))
       .drop("hit")
-    rows
-      .join(broadcast(intelMetaDf(spark, dbs)), Seq("db_idx", "entry_idx"),
-        "left")
-      .drop("db_idx")
-      .withColumn("cidr",
-        when(col("match_type") === "ip",
-          concat(col("value"), lit("/"), col("prefix_len"))))
-      // clean rows have no indicator type; 'none' keeps the partition path tidy
-      .withColumn("indicator_type",
-        coalesce(col("indicator_type"), lit("none")))
   }
 
   /** The routed frame without observers — the per-micro-batch body of the
@@ -294,8 +272,9 @@ object ScanJob {
     *
     * Scale shape (the 100 TB story): the routed write is ONE pass — scan ->
     * ScanTurn (extract+lookup, map-side broadcast structures) -> filter ->
-    * explode -> broadcast join -> partitioned write. No shuffle anywhere in
-    * it (the round-1 clean-sink anti-join shuffled the full table twice).
+    * explode -> in-place metadata read -> partitioned write. No join and no
+    * shuffle anywhere in it (the round-1 clean-sink anti-join shuffled the
+    * full table twice).
     * A1-A6 stats ride the same pass as `observe()` metrics; gold counts and
     * lineage metrics aggregate the OUTPUT (matched rows + one row per clean
     * turn), never rescanning the input.

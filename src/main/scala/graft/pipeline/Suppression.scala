@@ -30,7 +30,7 @@ object Suppression {
 
   /** Matched rows whose value no allowlist database can answer.
     *
-    * @param matched [[ScanJob.matched]] / [[ScanJob.enriched]]-shaped
+    * @param matched [[ScanJob.matched]]-shaped
     *                rows carrying (indicator_type, value)
     * @param allow   allowlist databases (entries veto by value)
     */

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.functions.{GraftFunctions, IntelLookup}
+import graft.functions.{EntryMeta, GraftFunctions, IntelLookup, IntelLookupMulti}
 import graft.intel.IntelDb
 import graft.model.IntelEntry
 import graft.ops.{Dedup, Similarity, TextStats}
@@ -261,11 +261,14 @@ object QueryDefs {
       IntelEntry(s"host$k.example.com", "high", "c2", "a", 90)))
     val db2 = IntelDb.build("allowlist", ks.filter(k => k >= 5 && k < 10)
       .map(k => IntelEntry(s"host$k.example.com", "unknown", "allow", "b", 99)))
-    val cands = domainCands(s, dir)
-    val matched = ScanJob.enriched(cands
-      .withColumn("conv_id", lit("c")).withColumn("turn_idx", lit(0))
-      .withColumn("role", lit("r")), Seq(db1, db2), s)
-    matched.groupBy("database_id", "value").agg(count(lit(1)).as("n"))
+    val dbs = Seq(db1, db2)
+    domainCands(s, dir)
+      .select(col("value"), explode(IntelLookupMulti.column(
+        col("value"), col("indicator_type"), dbs)).as("hit"))
+      .select(col("value"), EntryMeta.column(
+        col("hit.db_idx"), col("hit.entry_idx"), dbs)
+        .getField("database_id").as("database_id"))
+      .groupBy("database_id", "value").agg(count(lit(1)).as("n"))
       .orderBy("database_id", "value")
   }
 
@@ -1830,13 +1833,24 @@ object QueryDefs {
       .agg(count(lit(1)).as("n_user_events"))
     // the two bucketed writes are independent (different tables) — run
     // them as concurrent driver-side jobs so the dim write back-fills the
-    // fact write's task tail (guide §2.6 overlap-independent-jobs)
+    // fact write's task tail (guide §2.6 overlap-independent-jobs). Two
+    // concurrent DROP TABLE + saveAsTable on one session assume the
+    // session's in-memory catalog, whose operations are synchronized; a
+    // shared external metastore would want the writes in sequence.
     val factW = scala.concurrent.Future(
       graft.io.Bucketing.writeBucketed(events, "graft_q107_fact",
         "user_id", 8, sortCols = Seq("user_id")))(
       scala.concurrent.ExecutionContext.global)
-    graft.io.Bucketing.writeBucketed(dim, "graft_q107_dim",
+    try graft.io.Bucketing.writeBucketed(dim, "graft_q107_dim",
       "user_id", 8, sortCols = Seq("user_id"))
+    catch {
+      case t: Throwable =>
+        // never leave the fact write running unsupervised: let it settle
+        // (its own outcome is secondary to this failure) before rethrowing
+        scala.util.Try(scala.concurrent.Await.ready(factW,
+          scala.concurrent.duration.Duration.Inf))
+        throw t
+    }
     scala.concurrent.Await.result(factW,
       scala.concurrent.duration.Duration.Inf)
     graft.io.Bucketing.bucketedJoin(s, "graft_q107_fact",

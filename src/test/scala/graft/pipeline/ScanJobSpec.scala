@@ -190,10 +190,13 @@ class ScanJobSpec extends AnyFunSuite {
     assert(routedRows() == rowsBefore)
   }
 
-  test("plan shape: no shuffle before the aggregate; broadcast join used") {
+  test("plan shape: no shuffle and no join; metadata read in place") {
     val m = ScanJob.matched(turnsDf, dbs, spark)
     val plan = m.queryExecution.executedPlan.toString()
-    assert(plan.contains("BroadcastHashJoin"), plan.take(2000))
+    // intel_meta reads each hit's metadata from the broadcast databases:
+    // no join and no broadcast exchange
+    assert(!plan.contains("Join"), plan.take(2000))
+    assert(!plan.contains("BroadcastExchange"), plan.take(2000))
     // the matched plan itself must contain no shuffle exchange
     assert(!plan.contains("Exchange hashpartitioning"), plan.take(2000))
     // round 3: ONE flat generator (scan_turn_flat) — no intermediate
@@ -207,7 +210,8 @@ class ScanJobSpec extends AnyFunSuite {
       pmod(xxhash64(col("conv_id")), lit(8)))
     val routed = ScanJob.routedFrame(spark, withBucket, dbs)
     val plan = routed.queryExecution.executedPlan.toString()
-    assert(plan.contains("BroadcastHashJoin"), plan.take(2000))
+    assert(!plan.contains("Join"), plan.take(2000))
+    assert(!plan.contains("BroadcastExchange"), plan.take(2000))
     assert(!plan.contains("Exchange hashpartitioning"), plan.take(2000))
     // exactly one ScanTurn generator + one explode of its hits — the
     // extraction/lookup subtree is NOT duplicated ("size >= 1" could not

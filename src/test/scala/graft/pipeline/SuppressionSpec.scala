@@ -56,9 +56,8 @@ class SuppressionSpec extends AnyFunSuite {
       .applyAllowlist(ScanJob.matched(turns, Seq(threats), spark),
         Seq(allow))
       .queryExecution.executedPlan.toString
-    // the match plan's one BroadcastExchange (entry meta attach) is
-    // O(feed) and shuffle-free; what suppression must never add is a
-    // SHUFFLE exchange
+    // the match plan reads entry metadata in place (no exchange at all);
+    // what suppression must never add is a SHUFFLE exchange
     assert(!plan.contains("Exchange hashpartitioning") &&
       !plan.contains("Exchange rangepartitioning") &&
       !plan.contains("Exchange SinglePartition"),
