@@ -76,7 +76,7 @@ object Bench {
   /** Cache path of the materialized transcript table: keyed by row count
     * AND a content tag of the fixture generator, so editing Fixtures.turn
     * invalidates the cache instead of silently benching the OLD fixture
-    * (round-5 review find). Shared by Bench/BenchCluster/HotMain/ProfMain.
+    * (round-5 review find). Shared by Bench/BenchCluster.
     */
   private[graft] def turnsPath(nTurns: Long): String = {
     // pool digest (EVERY token pool, exact) + a 64-row structural probe
@@ -103,7 +103,7 @@ object Bench {
     if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
       val tmp = s"$dir.build-${ProcessHandle.current().pid()}"
       // only stop the session if WE created it — a caller with a live
-      // session (HotMain) gets that same session back from getOrCreate
+      // session gets that same session back from getOrCreate
       val preExisting = org.apache.spark.sql.SparkSession.getActiveSession
       val spark = newSession(cores)
       import spark.implicits._

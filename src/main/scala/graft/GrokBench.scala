@@ -4,11 +4,10 @@ import graft.functions.GrokParse
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Expression-level micro-benchmark for `grok_parse`: drives
-  * GrokParse.matchGroups directly in a plain JVM loop (the ScanFnBench
-  * pattern — no Spark session, no scheduling) to isolate the per-line
-  * parse cost: one anchored java.util.regex match producing all fields,
-  * vs the m-matches-per-row cost a per-field `regexp_extract` chain
-  * pays. Args: [nLines] [seconds].
+  * GrokParse.matchGroups directly in a plain JVM loop (no Spark session,
+  * no scheduling) to isolate the per-line parse cost: one anchored
+  * java.util.regex match producing all fields, vs the m-matches-per-row
+  * cost a per-field `regexp_extract` chain pays. Args: [nLines] [seconds].
   */
 object GrokBench {
   private val Pat = "%{TIMESTAMP_ISO8601:ts} %{LOGLEVEL:level} " +

@@ -2,7 +2,6 @@ package graft.functions
 
 import graft.extract.{IocScanner, ScanConfig}
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -57,7 +56,7 @@ object ExtractIoCs {
   private val EMPTY: ArrayData = new GenericArrayData(Array.empty[Any])
   // interned indicator-type UTF8Strings (12 constants; avoids a per-
   // candidate conversion + allocation). SHARED single source for every
-  // scan expression (ScanTurn/ScanTurnFlat/IntelLookup*) — a new
+  // scan expression (ScanTurn/IntelLookup*) — a new
   // indicator type is interned in exactly one place.
   private[functions] val typeInterned: java.util.HashMap[String, UTF8String] = {
     val m = new java.util.HashMap[String, UTF8String]()
@@ -71,7 +70,7 @@ object ExtractIoCs {
   private[functions] val PATTERN = UTF8String.fromString("pattern")
 
   /** Per-row thread scratch behind ONE ThreadLocal (text-copy buffer,
-    * candidate buffer, and ScanTurn's hit-row buffer): the per-row copies/
+    * candidate buffer, ScanTurn's hit and row buffers): the per-row copies/
     * buffers were the dominant allocations at 32 scan threads (GC-bound
     * scaling), and each separate ThreadLocal costs a hash probe in a
     * collision-prone per-thread map (JFR: getEntryAfterMiss).
@@ -79,7 +78,12 @@ object ExtractIoCs {
   final class RowScratch {
     var buf: Array[Byte] = new Array[Byte](1024)
     val iocs = new scala.collection.mutable.ArrayBuffer[graft.model.Ioc](8)
-    var hits: Array[Any] = new Array[Any](16)
+    // ScanTurn.probe's hits as (db_idx, entry_idx, prefix_len) columns
+    var hitDb: Array[Int] = new Array[Int](16)
+    var hitEntry: Array[Int] = new Array[Int](16)
+    var hitPrefix: Array[Int] = new Array[Int](16)
+    // ScanTurn.scanFlat's rows for the current turn
+    var rows: Array[Any] = new Array[Any](16)
     // direct-mapped value-intern cache (see internSpan): ~16 KB of refs
     val intern: Array[UTF8String] = new Array[UTF8String](InternSize)
     // scanner anchor scratch, carried here so one ThreadLocal probe serves
@@ -88,29 +92,6 @@ object ExtractIoCs {
   }
   val tlScratch = new ThreadLocal[RowScratch] {
     override def initialValue(): RowScratch = new RowScratch
-  }
-
-  /** Double the scratch hit buffer (shared by ScanTurn/ScanTurnFlat). */
-  def growHits(scr: RowScratch): Array[Any] = {
-    val old = scr.hits
-    val bigger = new Array[Any](old.length * 2)
-    System.arraycopy(old, 0, bigger, 0, old.length)
-    scr.hits = bigger
-    bigger
-  }
-
-  /** Direct 4-field (db_idx, entry_idx, prefix_len, match_type) hit row —
-    * InternalRow.apply's varargs path detours through Seq.toArray per hit
-    * (profiled); shared by ScanTurn, ScanTurnFlat and IntelLookupMulti.
-    */
-  def hitRow4(d: Int, entryIdx: Int, prefixLen: Int,
-      matchType: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
-    val r = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(4)
-    r.update(0, d)
-    r.update(1, entryIdx)
-    r.update(2, prefixLen)
-    r.update(3, matchType)
-    r
   }
 
   private final val InternSize = 2048 // power of two

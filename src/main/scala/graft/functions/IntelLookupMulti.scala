@@ -3,10 +3,9 @@ package graft.functions
 import graft.intel.{BcHandle, IntelDb}
 import graft.model.{IndicatorType => T}
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -17,6 +16,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * scan+extract subtree (Spark does not dedupe common subplans across union
   * branches). Returns array<struct<db_idx, entry_idx, prefix_len,
   * match_type>>; (db_idx, entry_idx) keys the entry metadata (EntryMeta).
+  * The probe loop is ScanTurn's, so a value gets the same hits here as in
+  * a scan.
   */
 case class IntelLookupMulti(left: Expression, right: Expression,
     dbs: BcHandle[Array[IntelDb]])
@@ -60,43 +61,16 @@ object IntelLookupMulti {
   ))
   val schema: DataType = ArrayType(elementSchema, containsNull = false)
 
-  private val IP = ExtractIoCs.IP
-  private val PATTERN = ExtractIoCs.PATTERN
-  private val EMPTY = new GenericArrayData(Array.empty[Any])
   private val IPV4 = UTF8String.fromString(T.Ipv4)
   private val IPV6 = UTF8String.fromString(T.Ipv6)
-
-  private def hitRow(d: Int, entryIdx: Int, prefixLen: Int,
-      matchType: UTF8String): InternalRow =
-    ExtractIoCs.hitRow4(d, entryIdx, prefixLen, matchType)
 
   def lookup(dbs: Array[IntelDb], value: UTF8String,
       itype: UTF8String): ArrayData = {
     val isV6 = itype.equals(IPV6)
     val isIp = isV6 || itype.equals(IPV4)
-    val v = value.toString
-    var out: scala.collection.mutable.ArrayBuffer[Any] = null
-    var d = 0
-    while (d < dbs.length) {
-      val db = dbs(d)
-      if (isIp) {
-        val hit = db.lookupIp(v, isV6)
-        if (hit != null) {
-          if (out == null) out = new scala.collection.mutable.ArrayBuffer[Any](4)
-          out += hitRow(d, hit._1, hit._2, IP)
-        }
-      } else {
-        val ids = db.lookupString(v)
-        var i = 0
-        while (i < ids.length) {
-          if (out == null) out = new scala.collection.mutable.ArrayBuffer[Any](4)
-          out += hitRow(d, ids(i), -1, PATTERN)
-          i += 1
-        }
-      }
-      d += 1
-    }
-    if (out == null) EMPTY else new GenericArrayData(out.toArray)
+    val scr = ExtractIoCs.tlScratch.get()
+    val n = ScanTurn.probe(scr, dbs, value.toString, isIp, isV6)
+    ScanTurn.hitArray(scr, n, isIp)
   }
 
   def column(value: Column, indicatorType: Column, dbs: Seq[IntelDb]): Column =

@@ -13,17 +13,17 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Whole-turn scan in ONE expression: extraction (E1-E8) + multi-database
-  * lookup (L2/L3/L4 x L8) + per-turn routing verdict, per text value.
+  * lookup (L2/L3/L4 x L8) per text value, emitted in one of two shapes.
   *
-  * Returns `array<struct<sink, indicator_type, value, matched_text,
-  * span_start, span_end, hits array<struct<db_idx, entry_idx, prefix_len,
-  * match_type>>>>` with:
+  * Nested (`scan`, used by ScanJob.run, streaming and the queries):
+  * `array<struct<sink, indicator_type, value, matched_text, span_start,
+  * span_end, hits array<struct<db_idx, entry_idx, prefix_len,
+  * match_type>>>>` with
   *  - one element per extracted candidate (sink = "cand"; `hits` lists every
   *    database hit for that candidate, possibly empty);
   *  - exactly one element with sink = "clean" and no candidate fields iff
   *    the turn produced ZERO hits across all candidates and databases
   *    (covers both "no candidates" and "candidates but nothing matched").
-  *
   * This makes a turn's cleanliness row-local after the explode — the matched
   * and clean sinks fan out from ONE pass with no per-turn aggregation, no
   * anti-join, and no second scan of the input (the round-1 clean sink
@@ -31,11 +31,20 @@ import org.apache.spark.unsafe.types.UTF8String
   * Mirrors the reference worker loop, which knows a line is clean the moment
   * its candidate loop ends (processing/parallel.rs:494-700).
   *
-  * Codegen: emits a direct static call, keeping the stage in whole-stage
-  * codegen like ExtractIoCs / IntelLookupMulti.
+  * Flat (`flat = true`, `scanFlat`, used by ScanJob.matched): one element
+  * per (candidate x database hit), hitless candidates and clean turns
+  * omitted — `array<struct<indicator_type, value, matched_text, span_start,
+  * span_end, db_idx, entry_idx, prefix_len, match_type>>`. Exploding the
+  * nested rows, filtering hitless candidates and exploding `hits` again
+  * materializes every intermediate row; the flat form emits only the
+  * surviving rows, so the plan is ONE Generate.
+  *
+  * Both shapes (and IntelLookupMulti) share one probe loop, [[ScanTurn.probe]].
+  * Codegen emits a direct static call, keeping the stage in whole-stage
+  * codegen.
   */
 case class ScanTurn(child: Expression, dbs: BcHandle[Array[IntelDb]],
-    config: ScanConfig)
+    config: ScanConfig, flat: Boolean = false)
     extends UnaryExpression with ImplicitCastInputTypes {
 
   @transient private lazy val scanner = new IocScanner(config)
@@ -44,21 +53,29 @@ case class ScanTurn(child: Expression, dbs: BcHandle[Array[IntelDb]],
   // non-string child must fail analysis, not ClassCastException per task
   override def inputTypes: Seq[DataType] = Seq(StringType)
 
-  override def dataType: DataType = ScanTurn.schema
+  override def dataType: DataType =
+    if (flat) ScanTurn.flatSchema else ScanTurn.schema
   override def nullable: Boolean = child.nullable
   override def prettyName: String =
-    s"scan_turn_${dbs.get.map(_.databaseId).mkString("_")}"
+    (if (flat) "scan_turn_flat_" else "scan_turn_") +
+      dbs.get.map(_.databaseId).mkString("_")
+  // the shape is already in the name
+  override protected def stringArgs: Iterator[Any] = Iterator(child, dbs, config)
 
-  override def nullSafeEval(input: Any): Any =
-    ScanTurn.scan(scanner, dbs.get, input.asInstanceOf[UTF8String])
+  override def nullSafeEval(input: Any): Any = {
+    val text = input.asInstanceOf[UTF8String]
+    if (flat) ScanTurn.scanFlat(scanner, dbs.get, text)
+    else ScanTurn.scan(scanner, dbs.get, text)
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val scannerRef =
       ctx.addReferenceObj("scanner", scanner, classOf[IocScanner].getName)
     // broadcast HANDLE: dbs deserialize once per executor, not per task
     val dbsRef = ctx.addReferenceObj("inteldbs", dbs, "graft.intel.BcHandle")
+    val method = if (flat) "scanFlat" else "scan"
     nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.ScanTurn.scan($scannerRef, " +
+      s"${ev.value} = graft.functions.ScanTurn.$method($scannerRef, " +
         s"(graft.intel.IntelDb[]) $dbsRef.get(), $c);")
   }
 
@@ -78,34 +95,111 @@ object ScanTurn {
   ))
   val schema: DataType = ArrayType(elementSchema, containsNull = false)
 
+  val flatElementSchema: StructType = StructType(
+    ExtractIoCs.elementSchema.fields ++ IntelLookupMulti.elementSchema.fields)
+  val flatSchema: DataType = ArrayType(flatElementSchema, containsNull = false)
+
   private val CAND = UTF8String.fromString("cand")
   private val CLEAN = UTF8String.fromString("clean")
   private val IP = ExtractIoCs.IP
   private val PATTERN = ExtractIoCs.PATTERN
-  private val EMPTY_HITS: ArrayData = new GenericArrayData(Array.empty[Any])
+  private val EMPTY: ArrayData = new GenericArrayData(Array.empty[Any])
   // one immutable clean-marker row shared by all threads (read-only)
   private val CLEAN_ROW: InternalRow = {
     val row = new GenericInternalRow(7)
     row.update(0, CLEAN)
-    row.update(6, EMPTY_HITS)
+    row.update(6, EMPTY)
     row
   }
   private val CLEAN_ONLY: ArrayData = new GenericArrayData(Array[Any](CLEAN_ROW))
   private def typeInterned = ExtractIoCs.typeInterned
 
-  // hit-row scratch rides ExtractIoCs.RowScratch (one ThreadLocal get per
-  // turn): the common case is 0-4 hits, and a fresh ArrayBuffer per
-  // candidate (plus the varargs InternalRow.apply -> Seq -> toArray
-  // detour) was a measured allocation hot spot at 32 scan threads.
-  // Buffer growth + the 4-field hit row are the shared ExtractIoCs helpers.
-  private def growHits(scr: ExtractIoCs.RowScratch): Array[Any] =
-    ExtractIoCs.growHits(scr)
+  /** Probe every database for one candidate value. Hit k is left in
+    * `scr.hitDb(k)`, `scr.hitEntry(k)`, `scr.hitPrefix(k)` (prefix -1 for
+    * string hits); returns the hit count. The triples are valid until the
+    * next probe on this thread.
+    */
+  private[functions] def probe(scr: ExtractIoCs.RowScratch,
+      dbs: Array[IntelDb], value: String, isIp: Boolean,
+      isV6: Boolean): Int = {
+    var n = 0
+    var d = 0
+    while (d < dbs.length) {
+      val db = dbs(d)
+      if (isIp) {
+        val hit = db.lookupIp(value, isV6)
+        if (hit != null) {
+          putHit(scr, n, d, hit._1, hit._2)
+          n += 1
+        }
+      } else {
+        val ids = db.lookupString(value)
+        var k = 0
+        while (k < ids.length) {
+          putHit(scr, n, d, ids(k), -1)
+          n += 1
+          k += 1
+        }
+      }
+      d += 1
+    }
+    n
+  }
 
-  private def hitRow(d: Int, entryIdx: Int, prefixLen: Int,
-      matchType: UTF8String): InternalRow =
-    ExtractIoCs.hitRow4(d, entryIdx, prefixLen, matchType)
+  private def putHit(scr: ExtractIoCs.RowScratch, k: Int, d: Int,
+      entryIdx: Int, prefixLen: Int): Unit = {
+    if (k == scr.hitDb.length) {
+      val cap = k * 2
+      scr.hitDb = java.util.Arrays.copyOf(scr.hitDb, cap)
+      scr.hitEntry = java.util.Arrays.copyOf(scr.hitEntry, cap)
+      scr.hitPrefix = java.util.Arrays.copyOf(scr.hitPrefix, cap)
+    }
+    scr.hitDb(k) = d
+    scr.hitEntry(k) = entryIdx
+    scr.hitPrefix(k) = prefixLen
+  }
 
-  /** Static entry point shared by interpreted eval and generated code. */
+  /** The `n` hits of the last probe as `array<struct<db_idx, entry_idx,
+    * prefix_len, match_type>>`.
+    */
+  private[functions] def hitArray(scr: ExtractIoCs.RowScratch, n: Int,
+      isIp: Boolean): ArrayData = {
+    if (n == 0) return EMPTY
+    val matchType = if (isIp) IP else PATTERN
+    val out = new Array[Any](n)
+    var k = 0
+    while (k < n) {
+      val r = new GenericInternalRow(4)
+      r.update(0, scr.hitDb(k))
+      r.update(1, scr.hitEntry(k))
+      r.update(2, scr.hitPrefix(k))
+      r.update(3, matchType)
+      out(k) = r
+      k += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  private def isIp(m: graft.model.Ioc): Boolean =
+    m.indicator_type == T.Ipv4 || m.indicator_type == T.Ipv6
+
+  // value bytes: when the canonical value IS the matched span (every type
+  // except canonicalized IPv6), intern the UTF-8 bytes straight out of the
+  // scratch buffer — no char-by-char re-encode of the String
+  private def valueBytes(scr: ExtractIoCs.RowScratch, buf: Array[Byte],
+      m: graft.model.Ioc): UTF8String =
+    if (m.matched_text eq m.value)
+      ExtractIoCs.internSpan(scr, buf, m.span_start, m.span_end)
+    else ExtractIoCs.internString(scr, m.value)
+
+  private def matchedBytes(scr: ExtractIoCs.RowScratch, m: graft.model.Ioc,
+      value: UTF8String): UTF8String =
+    if (m.matched_text eq m.value) value
+    else ExtractIoCs.internString(scr, m.matched_text)
+
+  /** Nested rows; static entry point shared by interpreted eval and
+    * generated code.
+    */
   def scan(scanner: IocScanner, dbs: Array[IntelDb],
       text: UTF8String): ArrayData = {
     val len = text.numBytes()
@@ -119,55 +213,18 @@ object ScanTurn {
     var i = 0
     while (i < n) {
       val m = iocs(i)
-      val isV6 = m.indicator_type == T.Ipv6
-      val isIp = isV6 || (m.indicator_type == T.Ipv4)
-      var hits = scr.hits
-      var nHits = 0
-      var d = 0
-      while (d < dbs.length) {
-        val db = dbs(d)
-        if (isIp) {
-          val hit = db.lookupIp(m.value, isV6)
-          if (hit != null) {
-            if (nHits == hits.length) hits = growHits(scr)
-            hits(nHits) = hitRow(d, hit._1, hit._2, IP)
-            nHits += 1
-          }
-        } else {
-          val ids = db.lookupString(m.value)
-          var k = 0
-          while (k < ids.length) {
-            if (nHits == hits.length) hits = growHits(scr)
-            hits(nHits) = hitRow(d, ids(k), -1, PATTERN)
-            nHits += 1
-            k += 1
-          }
-        }
-        d += 1
-      }
+      val ip = isIp(m)
+      val nHits = probe(scr, dbs, m.value, ip, m.indicator_type == T.Ipv6)
+      if (nHits > 0) anyHit = true
       val row = new GenericInternalRow(7)
       row.update(0, CAND)
       row.update(1, typeInterned.get(m.indicator_type))
-      // value bytes: when the canonical value IS the matched span (every
-      // type except canonicalized IPv6), intern the UTF-8 bytes straight
-      // out of the scratch buffer — no char-by-char re-encode of the String
-      val valueU8 =
-        if (m.matched_text eq m.value)
-          ExtractIoCs.internSpan(scr, buf, m.span_start, m.span_end)
-        else ExtractIoCs.internString(scr, m.value)
+      val valueU8 = valueBytes(scr, buf, m)
       row.update(2, valueU8)
-      row.update(3,
-        if (m.matched_text eq m.value) valueU8
-        else ExtractIoCs.internString(scr, m.matched_text))
+      row.update(3, matchedBytes(scr, m, valueU8))
       row.update(4, m.span_start)
       row.update(5, m.span_end)
-      if (nHits == 0) row.update(6, EMPTY_HITS)
-      else {
-        anyHit = true
-        val exact = new Array[Any](nHits)
-        System.arraycopy(hits, 0, exact, 0, nHits)
-        row.update(6, new GenericArrayData(exact))
-      }
+      row.update(6, hitArray(scr, nHits, ip))
       rows(i) = row
       i += 1
     }
@@ -176,16 +233,65 @@ object ScanTurn {
       // candidates but zero hits anywhere -> still a clean turn: append the
       // clean marker row so the turn reaches the clean sink (candidate rows
       // are kept for the stats observer and filtered before the write)
-      val withClean = new Array[Any](n + 1)
-      System.arraycopy(rows, 0, withClean, 0, n)
+      val withClean = Array.copyOf(rows, n + 1)
       withClean(n) = CLEAN_ROW
       new GenericArrayData(withClean)
     }
   }
 
+  /** Flat rows; static entry point shared by interpreted eval and
+    * generated code.
+    */
+  def scanFlat(scanner: IocScanner, dbs: Array[IntelDb],
+      text: UTF8String): ArrayData = {
+    val len = text.numBytes()
+    val scr = ExtractIoCs.tlScratch.get()
+    val buf = ExtractIoCs.copyToScratch(scr, text)
+    val iocs = scanner.scanInto(buf, len, scr.iocs, scr.scan)
+    // the turn's rows accumulate in the grow-only scratch buffer and are
+    // copied to exact size at the end
+    var rows = scr.rows
+    var nRows = 0
+    var i = 0
+    while (i < iocs.length) {
+      val m = iocs(i)
+      val ip = isIp(m)
+      val nHits = probe(scr, dbs, m.value, ip, m.indicator_type == T.Ipv6)
+      if (nHits > 0) {
+        val tpe = typeInterned.get(m.indicator_type)
+        val valueU8 = valueBytes(scr, buf, m)
+        val matchedU8 = matchedBytes(scr, m, valueU8)
+        val matchType = if (ip) IP else PATTERN
+        if (nRows + nHits > rows.length) {
+          rows = Array.copyOf(rows, Integer.highestOneBit(nRows + nHits) * 2)
+          scr.rows = rows
+        }
+        var k = 0
+        while (k < nHits) {
+          val r = new GenericInternalRow(9)
+          r.update(0, tpe)
+          r.update(1, valueU8)
+          r.update(2, matchedU8)
+          r.update(3, m.span_start)
+          r.update(4, m.span_end)
+          r.update(5, scr.hitDb(k))
+          r.update(6, scr.hitEntry(k))
+          r.update(7, scr.hitPrefix(k))
+          r.update(8, matchType)
+          rows(nRows) = r
+          nRows += 1
+          k += 1
+        }
+      }
+      i += 1
+    }
+    if (nRows == 0) EMPTY
+    else new GenericArrayData(Array.copyOf(rows, nRows))
+  }
+
   def column(text: Column, dbs: Seq[IntelDb],
-      config: ScanConfig = ScanConfig()): Column =
+      config: ScanConfig = ScanConfig(), flat: Boolean = false): Column =
     ExpressionUtils.column(
-      ScanTurn(ExpressionUtils.expression(text), BcHandle.dbs(dbs),
-        config))
+      ScanTurn(ExpressionUtils.expression(text), BcHandle.dbs(dbs), config,
+        flat))
 }

@@ -94,7 +94,7 @@ object ScanJob {
     * (F3 capability-derived defaults); pass `config` to override (the
     * `--extractors` CLI path, ExtractorOverrides).
     *
-    * Implementation: extraction AND lookup run inside ONE ScanTurnFlat
+    * Implementation: extraction AND lookup run inside ONE flat ScanTurn
     * generator per turn (not extract-explode-then-lookup) — the candidate's
     * value string is created once and probed in the same call (~20% faster
     * than the two-expression form, whose explode boundary re-materializes
@@ -123,8 +123,8 @@ object ScanJob {
       }
     input
       .select(col("conv_id"), col("turn_idx"), col("role"),
-        explode(graft.functions.ScanTurnFlat.column(col("text"), dbs,
-          scanCfg)).as("m"))
+        explode(graft.functions.ScanTurn.column(col("text"), dbs, scanCfg,
+          flat = true)).as("m"))
       .select(col("conv_id"), col("turn_idx"), col("role"),
         col("m.indicator_type").as("indicator_type"),
         col("m.value").as("value"),

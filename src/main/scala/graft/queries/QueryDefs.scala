@@ -29,12 +29,20 @@ object QueryDefs {
     * under the driver's hash (the 11 r05 hash_match failures; q65 passed
     * the same pattern only because a NULL made its column read back as
     * float64 too). The oracle SQL is frozen this round, so the Spark side
-    * adopts the float rendering: values are exact small integers, the
-    * double is lossless, and tools/crosscheck.py (now rendering-strict)
-    * goes 136/136.
+    * adopts the float rendering, and tools/crosscheck.py (now
+    * rendering-strict) goes 136/136. The double is exact only for
+    * |v| < 2^53; a larger value fails the query with an error naming the
+    * column instead of silently rounding (two different results would
+    * otherwise compare equal).
     */
-  private def oracleHugeint(df: DataFrame, cols: String*): DataFrame =
-    cols.foldLeft(df)((d, c) => d.withColumn(c, col(c).cast("double")))
+  private[queries] def oracleHugeint(df: DataFrame, cols: String*): DataFrame =
+    cols.foldLeft(df)((d, c) => d.withColumn(c,
+      when(col(c) >= ExactDoubleLimit || col(c) <= -ExactDoubleLimit,
+        raise_error(lit(s"column $c holds a value with |v| >= 2^53, " +
+          "which the oracle's double rendering cannot hold exactly")))
+        .otherwise(col(c).cast("double"))))
+
+  private val ExactDoubleLimit = 1L << 53
 
   /** Write a small feed fixture through the session's DEFAULT Hadoop
     * filesystem and return its qualified path. A driver-local

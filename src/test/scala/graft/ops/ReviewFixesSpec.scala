@@ -150,8 +150,8 @@ class ReviewFixesSpec extends AnyFunSuite {
     // int child must fail ANALYSIS (or implicit-cast), never a per-task
     // ClassCastException; Column construction + analysis happens eagerly
     // on the action
-    val bad = df.select(graft.functions.ScanTurnFlat.column(col("n"), dbs)
-      .as("r"))
+    val bad = df.select(graft.functions.ScanTurn.column(col("n"), dbs,
+      flat = true).as("r"))
     val ok =
       try {
         val rows = bad.collect()

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.SparkTestBase
-import graft.functions.{EntryMeta, ScanTurn, ScanTurnFlat}
+import graft.functions.{EntryMeta, ScanTurn}
 import graft.intel.{BcHandle, IntelDb}
 import graft.model.{IntelEntry, Turn}
 import org.apache.spark.broadcast.Broadcast
@@ -32,7 +32,6 @@ class BroadcastReuseSpec extends AnyFunSuite {
   /** The broadcasts read by a plan's scan and metadata expressions. */
   private def broadcastsOf(df: DataFrame): Seq[Broadcast[_]] =
     df.queryExecution.analyzed.flatMap(_.expressions.flatMap(_.collect {
-      case e: ScanTurnFlat => e.dbs
       case e: ScanTurn => e.dbs
       case e: EntryMeta => e.dbs
     })).flatMap(_.broadcasts)
