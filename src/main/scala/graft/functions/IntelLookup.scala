@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * deserializes once per EXECUTOR — the analog of the reference's
   * one-mmap-per-process sharing (DEVELOPMENT.md:202-206). Embedding the db
   * in the expression directly would ride the task binary and deserialize
-  * once per TASK (SerProbe: 2.1 s/task at 100k globs).
+  * once per TASK (2.1 s/task at 100k globs; BENCH.md, "Capability bench").
   *
   * Dispatch follows the reference (database.rs:760-764, 889-901): ipv4/ipv6
   * candidates walk the LPM trie; everything else takes the string path

@@ -12,8 +12,8 @@ import scala.reflect.ClassTag
   *
   * Embedding the structure directly in the expression ships it inside the
   * serialized task binary, so EVERY TASK deserializes the full compiled db
-  * — measured 2.1 s/task for a 100k-glob database (SerProbe: the same 200k
-  * lookups took 136 s at 64 partitions vs 2.5 s at 4). At 10^12-turn scale
+  * — measured 2.1 s/task for a 100k-glob database (BENCH.md capability
+  * bench: the same 200k lookups took 136 s at 64 partitions vs 2.5 s at 4). At 10^12-turn scale
   * with millions of tasks that per-task tax dominates all real work. The
   * reference's process model is "load the .mxy once, mmap it everywhere"
   * (bin/match_processor); the Spark analog is a Broadcast: one

@@ -66,24 +66,23 @@ object Cooccurrence {
           ).otherwise(col("items")))
     } else rawSets
     // Stage once: pairs, marginals and the entity total all read it.
-    val sets = guarded.localCheckpoint()
-
-    // every (items[i], items[j]) with i < j — the array is sorted and
+    // Every (items[i], items[j]) with i < j — the array is sorted and
     // deduped, so item_a < item_b holds by construction. The three
-    // consumers are tiny (|items|²/|items|/1 keys): checkpoint THEM and
+    // consumers are tiny (|items|²/|items|/1 keys): stage THEM and
     // release the corpus-sized set stage before returning.
-    val pairs = sets.select(explode(flatten(transform(
-        col("items"), (x, i) => transform(
-          slice(col("items"), i + 2, size(col("items"))),
-          y => struct(x.as("a"), y.as("b")))))).as("pr"))
-      .groupBy(col("pr.a").as("item_a"), col("pr.b").as("item_b"))
-      .agg(count(lit(1)).as("n_pair"))
-      .localCheckpoint()
-    val marginals = sets.select(explode(col("items")).as("item"))
-      .groupBy("item").agg(count(lit(1)).as("c"))
-      .localCheckpoint()
-    val total = sets.agg(count(lit(1)).as("n_entities")).localCheckpoint()
-    Checkpoints.releaseLocal(sets)
+    val (pairs, marginals, total) =
+      Staging.using(guarded, "cooc-sets") { sets =>
+        (Staging.stage(sets.select(explode(flatten(transform(
+            col("items"), (x, i) => transform(
+              slice(col("items"), i + 2, size(col("items"))),
+              y => struct(x.as("a"), y.as("b")))))).as("pr"))
+          .groupBy(col("pr.a").as("item_a"), col("pr.b").as("item_b"))
+          .agg(count(lit(1)).as("n_pair")), "cooc-pairs"),
+        Staging.stage(sets.select(explode(col("items")).as("item"))
+          .groupBy("item").agg(count(lit(1)).as("c")), "cooc-marginals"),
+        Staging.stage(sets.agg(count(lit(1)).as("n_entities")),
+          "cooc-total"))
+      }
 
     val out = pairs
       .join(broadcast(marginals.select(col("item").as("item_a"),

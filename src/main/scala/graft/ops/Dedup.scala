@@ -294,8 +294,8 @@ object Dedup {
     // stage the fingerprints ONCE (eager, tiny: doc_id + one long) — the
     // band self-join otherwise recomputes the per-token md5 vote sweep per
     // join side (same empirically-verified double execution as
-    // minhashLshPairs); the banding bit-ops stay lazy above the checkpoint
-    val fps = simhashFingerprints(docs, bits).localCheckpoint()
+    // minhashLshPairs); the banding bit-ops stay lazy above the stage
+    val fps = Staging.stage(simhashFingerprints(docs, bits), "simhash-fps")
     val banded = fps.select(col("doc_id"), col("fingerprint"),
       posexplode(array((0 until bands).map(b =>
         shiftright(col("fingerprint"), b * r)
@@ -337,15 +337,14 @@ object Dedup {
   def ngramJaccardPairs(docs: DataFrame, k: Int = 5,
       minJaccard: Double = 0.5,
       maxShingleDf: Int = DefaultMaxShingleDf): DataFrame = {
-    // stage the exploded shingle table ONCE (eager localCheckpoint): it is
+    // stage the exploded shingle table ONCE (eager Staging.stage): it is
     // read up to five times below (set sizes, the df guard, and both pair
     // join sides), and each read would otherwise re-shingle every document
     // from the source scan (empirically SIX FileScans in the unstaged
     // plan, no exchange reuse); blocks are ContextCleaner-reclaimed once
     // the returned frame is unreachable (the .cache() lifecycle)
-    val sh = docs.select(col("doc_id"),
-      explode(shingles(col("text"), k)).as("shingle"))
-      .localCheckpoint()
+    val sh = Staging.stage(docs.select(col("doc_id"),
+      explode(shingles(col("text"), k)).as("shingle")), "ngram-shingles")
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("set_size"))
     val kept =
       if (maxShingleDf <= 0) sh
@@ -381,7 +380,7 @@ object Dedup {
     * (label := min(own, neighbors' labels, label-of-label) per round) —
     * O(log diameter) rounds instead of O(diameter), each round one
     * neighbor-min shuffle + one label-table self-join. The edge list is
-    * materialized ONCE (localCheckpoint) before the loop: `pairs` is
+    * materialized ONCE (Staging.stage) before the loop: `pairs` is
     * typically the full minhash-LSH pipeline, and leaving it lazy would
     * re-execute that pipeline every iteration — the most expensive stage
     * multiplied by O(log diameter). Label lineage is likewise truncated
@@ -433,9 +432,9 @@ object Dedup {
       val changed =
         jumpedStaged.where(col("cluster_id") =!= col("prev")).count()
       converged = changed == 0L
-      // release the superseded stage's blocks (otherwise up to maxIter
-      // full label-table copies stay pinned in block storage until
-      // driver GC + ContextCleaner get around to them)
+      // release the superseded stage (otherwise up to maxIter full
+      // label-table copies stay pinned in block storage, or on disk in
+      // durable mode, until the run ends)
       Staging.release(labels)
       labels = jumpedStaged
       iter += 1
@@ -494,14 +493,6 @@ object Dedup {
         (-col("__graft_best.nid")).cast(idType).as("kept_id"),
         col("__graft_best.s").as("kept_score"))
   }
-
-  /** Unpersist the RDD behind a localCheckpoint'd DataFrame.
-    * `Dataset.unpersist` only talks to the cache manager and is a no-op for
-    * checkpoint blocks — they live on the physical RDD inside the
-    * LogicalRDD plan node.
-    */
-  private def releaseLocalCheckpoint(df: DataFrame): Unit =
-    Checkpoints.releaseLocal(df)
 
   /** Document frequency per shingle — the skew diagnostic behind
     * `maxShingleDf` (shingles are distinct per doc, so count == df).
@@ -574,7 +565,7 @@ object Dedup {
     * corpus (navigation chrome, cookie banners, boilerplate headers) and
     * reassemble each document from its surviving lines in original order.
     *
-    * Shape: one staged scan (eager localCheckpoint: split + per-line md5
+    * Shape: one staged scan (eager Staging.stage: split + per-line md5
     * run once; the hot-line aggregate and the anti-join both read the
     * stage), then three linear shuffles — count(*) per line hash (an
     * ALGEBRAIC aggregate: a banner on 10^9 pages costs one combined row),
@@ -590,14 +581,14 @@ object Dedup {
   def dedupLines(docs: DataFrame, minCount: Int = 3,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(minCount >= 2, "minCount must be >= 2 (1 would drop every line)")
-    val staged = docs
+    val staged = Staging.stage(docs
       .select(col(idCol), split(col(textCol), "\n").as("__graft_ls"))
       .select(col(idCol),
         coalesce(size(col("__graft_ls")), lit(0)).cast("long")
           .as("n_lines"),
         col("__graft_ls"),
-        transform(col("__graft_ls"), l => md5(l)).as("__graft_lh"))
-      .localCheckpoint()
+        transform(col("__graft_ls"), l => md5(l)).as("__graft_lh")),
+      "dedup-lines")
     val lines = staged
       .select(col(idCol),
         posexplode(arrays_zip(col("__graft_lh"), col("__graft_ls")))
@@ -663,7 +654,7 @@ object Dedup {
     *      pass: sum(least(n, pos - lag(pos))), first row counting n.
     * Three linear shuffles total (gram agg, flag join, doc window). The
     * scan + tokenize + md5 window sweep runs ONCE and is staged (eager
-    * localCheckpoint, the minhashLshPairs convention): three consumers
+    * Staging.stage, the minhashLshPairs convention): three consumers
     * read the staged table — the flag aggregate, the join-back, and the
     * per-doc n_tokens base — where the lazy form re-ran the full sweep
     * per consumer. Blocks are reclaimed by the ContextCleaner once the
@@ -679,7 +670,7 @@ object Dedup {
     // staged sweep: (id, n_tokens, ghs) with ghs = md5 per positional
     // window. The token array must be a materialized column before
     // gramWindows touches it (the HOF re-evaluation rule).
-    val staged = docs
+    val staged = Staging.stage(docs
       .select(col(idCol),
         Decontaminate.tokens(col(textCol)).as("__graft_toks"))
       .select(col(idCol),
@@ -687,8 +678,8 @@ object Dedup {
           .as("n_tokens"),
         gramWindows(col("__graft_toks"), n).as("__graft_w"))
       .select(col(idCol), col("n_tokens"),
-        transform(col("__graft_w"), g => md5(g)).as("__graft_ghs"))
-      .localCheckpoint()
+        transform(col("__graft_w"), g => md5(g)).as("__graft_ghs")),
+      "exact-substr")
     val grams = staged
       .select(col(idCol),
         posexplode(col("__graft_ghs")).as(Seq("pos", "gh")))

@@ -37,19 +37,18 @@ object DistCompare {
       .agg(count(lit(1)).as("__graft_na"))
     val cb = b.groupBy(key.as("__graft_k"))
       .agg(count(lit(1)).as("__graft_nb"))
-    // localCheckpoint: histogram-sized, consumed TWICE below (totals
+    // staged: histogram-sized, consumed TWICE below (totals
     // agg + crossJoin left input) — unpinned, both corpus group-bys
     // and the full outer join would execute twice (the Quantiles
     // two-consumer rule; review find)
-    val counts = ca.withColumnRenamed("__graft_k", "__graft_ka")
+    val counts = Staging.stage(ca.withColumnRenamed("__graft_k", "__graft_ka")
       .join(cb.withColumnRenamed("__graft_k", "__graft_kb"),
         col("__graft_ka") <=> col("__graft_kb"), "full_outer")
       .select(
         coalesce(col("__graft_na"), lit(0L)).cast("decimal(38,0)")
           .as("na"),
         coalesce(col("__graft_nb"), lit(0L)).cast("decimal(38,0)")
-          .as("nb"))
-      .localCheckpoint()
+          .as("nb")), "tvd-counts")
     val totals = counts.agg(
       sum(col("na")).as("ta"), sum(col("nb")).as("tb"))
     counts.crossJoin(totals)

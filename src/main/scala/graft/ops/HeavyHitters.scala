@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * memory, amortized O(1) per row — each decrement event retires k+1
   * occurrences). The candidate table is ≤ k × partitions rows BEFORE the
   * distinct and usually ≪ that after (hot items are hot everywhere);
-  * it is materialized once (eager checkpoint) and feeds both the total
+  * it is materialized once (eager stage) and feeds both the total
   * and the verify join. The verify join broadcasts the candidate set
   * when it is small (the common case) and falls back to a plain hash
   * join above `maxBroadcastCandidates` — loud in the plan, never an
@@ -68,9 +68,9 @@ object HeavyHitters {
     // surviving counter keys plus ONE marker row (null item) carrying the
     // partition's row count, so the total and the candidates come from a
     // single corpus scan. The summary frame is tiny (≤ (k+1) × partitions
-    // rows); checkpoint it eagerly so its two consumers (total, verify
+    // rows); stage it eagerly so its two consumers (total, verify
     // join) never rescan the corpus.
-    val summary = vals.as[String].mapPartitions { it =>
+    val summary = Staging.stage(vals.as[String].mapPartitions { it =>
       val counters = new scala.collection.mutable.HashMap[String, Long]
       var rows = 0L
       while (it.hasNext) {
@@ -93,7 +93,7 @@ object HeavyHitters {
       }
       Iterator.single((null: String, rows)) ++
         counters.keysIterator.map(key => (key, 0L))
-    }.toDF("item", "rows").localCheckpoint()
+    }.toDF("item", "rows"), "heavy-hitters-summary")
 
     val total = summary.where(col("item").isNull)
       .agg(sum(col("rows"))).as[Option[Long]].head().getOrElse(0L)

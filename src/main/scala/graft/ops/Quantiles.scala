@@ -39,7 +39,7 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   * combine reduces the exchange to histogram-sized rows and pass 2 to
   * the straddling buckets. On `local[*]` with memory-backed shuffle
   * and groups that fit executor memory, Tungsten's in-memory radix
-  * window sort makes the DIRECT form faster (TelemetryScaleProbe:
+  * window sort makes the DIRECT form faster (docs/ROUND5.md, q101:
   * 10M rows × 5 groups — direct ~1 s, bucketed ~4-7 s: the histogram's
   * per-row string-key hash agg costs more than the radix sort it
   * avoids). At cluster scale the regime flips: a 10^12-row group
@@ -118,12 +118,12 @@ object Quantiles {
     val psArr = array(ps.map { case (label, p) =>
       struct(lit(label).as("label"), lit(p.toLong).as("p"))
     }: _*)
-    // localCheckpoint: the target table is (groups × percentiles)-sized
-    // and is consumed by TWO joins below — without the checkpoint each
+    // staged: the target table is (groups × percentiles)-sized
+    // and is consumed by TWO joins below — without the stage each
     // broadcast would re-execute the whole corpus histogram (the
     // Dedup.nearDupClusters edge-list lesson: pin tiny reused frames,
     // or every consumer pays the full upstream pass again).
-    val targets = cum
+    val targets = Staging.stage(cum
       .withColumn("__graft_q", explode(psArr))
       .withColumn("__graft_rank",
         expr("(__graft_q.p * __graft_n + 999) div 1000"))
@@ -132,8 +132,7 @@ object Quantiles {
       .select(keys :+ col("__graft_b") :+
         col("__graft_q.label").as("__graft_label") :+
         (col("__graft_rank") - col("__graft_prev"))
-          .as("__graft_off"): _*)
-      .localCheckpoint()
+          .as("__graft_off"): _*), "quantile-targets")
 
     // pass 2: keep only rows in a straddling bucket (semi-join BEFORE
     // any sort), rank inside each (key, bucket), pick the offsets.
@@ -262,8 +261,8 @@ object Quantiles {
     val psArr = array(ps.map { case (label, p) =>
       struct(lit(label).as("label"), lit(p.toLong).as("p"))
     }: _*)
-    // localCheckpoint: same two-consumer rule as the unweighted form
-    val targets = cum
+    // staged: same two-consumer rule as the unweighted form
+    val targets = Staging.stage(cum
       .withColumn("__graft_q", explode(psArr))
       .withColumn("__graft_rank",
         expr("(__graft_q.p * __graft_n + 999) div 1000")
@@ -273,8 +272,7 @@ object Quantiles {
       .select(keys :+ col("__graft_b") :+
         col("__graft_q.label").as("__graft_label") :+
         (col("__graft_rank") - col("__graft_prev"))
-          .as("__graft_off"): _*)
-      .localCheckpoint()
+          .as("__graft_off"): _*), "quantile-targets")
 
     val hinted = (t: DataFrame) =>
       if (broadcastTargets) broadcast(t) else t.hint("shuffle_hash")

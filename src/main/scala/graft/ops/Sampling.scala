@@ -251,7 +251,7 @@ object Sampling {
     *
     * Shape: one stratum-size aggregate (strata-table-sized
     * thereafter; the quota plan is two windows over THAT table), the
-    * quota table localCheckpointed + broadcast back (the
+    * quota table staged + broadcast back (the
     * [[graft.ops.Quantiles]] rule — without the pin each consumer
     * re-runs the corpus aggregate; `broadcastQuotas = false` falls to
     * a shuffle_hash join for gigantic strata counts), and ONE key
@@ -275,7 +275,7 @@ object Sampling {
       .partitionBy(lit(1))
       .orderBy(expr(s"($k * __graft_n) % __graft_tot").desc,
         col(strataCol).asc)
-    val quotas = sizes
+    val quotas = Staging.stage(sizes
       .withColumn("__graft_tot", sum(col("__graft_n")).over(wAll))
       .withColumn("__graft_base",
         expr(s"($k * __graft_n) div __graft_tot"))
@@ -285,8 +285,7 @@ object Sampling {
       .withColumn("__graft_quota", col("__graft_base") +
         when(col("__graft_rr") <= col("__graft_left"), lit(1L))
           .otherwise(lit(0L)))
-      .select(col(strataCol), col("__graft_quota"))
-      .localCheckpoint()
+      .select(col(strataCol), col("__graft_quota")), "sample-quotas")
     val hintedQuotas = if (broadcastQuotas) broadcast(quotas)
       else quotas.hint("shuffle_hash")
     val w = org.apache.spark.sql.expressions.Window

@@ -33,13 +33,13 @@ object Seasonality {
   /** One row per (date with events): (day, dow_iso, n, dow_total,
     * n_days, deviation_permille). */
   def dowDeviation(events: DataFrame, tsCol: String): DataFrame = {
-    val perDay = events.filter(col(tsCol).isNotNull)
+    val perDay = Staging.stage(events.filter(col(tsCol).isNotNull)
       .groupBy(to_date(col(tsCol)).as("day"))
       .agg(count(lit(1)).as("n"))
       .withColumn("dow_iso",
         // dayofweek: 1=Sunday..7=Saturday -> ISO 1=Monday..7=Sunday
-        pmod(dayofweek(col("day")) + lit(5), lit(7)) + lit(1))
-      .localCheckpoint() // two consumers: the baseline fold + the join
+        pmod(dayofweek(col("day")) + lit(5), lit(7)) + lit(1)),
+      "dow-per-day") // two consumers: the baseline fold + the join
     val baseline = perDay.groupBy(col("dow_iso").as("__graft_dw"))
       .agg(sum(col("n")).as("dow_total"),
         count(lit(1)).as("n_days"))

@@ -102,26 +102,17 @@ object Similarity {
 
   /** Default `maxCollectCentroids` for [[ivfCentroids]] — below this the
     * Lloyd loop collects each round's centroid table to the driver; above
-    * it the table stays a (localCheckpoint'd) DataFrame. Shared with
+    * it the table stays a (staged) DataFrame. Shared with
     * [[ivfTopK]]/[[semDedup]] so they can tell which representation their
-    * centroid table took and release live checkpoint blocks accordingly.
+    * centroid table took and release the live stage accordingly.
     */
   val DefaultMaxCollectCentroids = 512
 
   /** True when [[ivfCentroids]] with these parameters returns a LIVE
-    * localCheckpoint whose blocks the consumer must release (the
-    * DF-resident Lloyd path).
+    * stage the consumer must release (the DF-resident Lloyd path).
     */
   private def centroidsAreLive(nlist: Int, lloydRounds: Int): Boolean =
     nlist > DefaultMaxCollectCentroids && lloydRounds > 0
-
-  /** Release the blocks of a centroid table returned by [[ivfCentroids]]'
-    * DF-resident path (nlist > maxCollectCentroids with Lloyd rounds) once
-    * nothing lazy still derives from it. No-op for non-checkpointed
-    * tables.
-    */
-  def releaseCentroids(cents: DataFrame): Unit =
-    Checkpoints.releaseLocal(cents)
 
   private[graft] def resolveCap(requested: Int, floorMin: Int,
       buckets: Int, corpusRows: => Long): Int =
@@ -228,8 +219,8 @@ object Similarity {
     *    row_number window over the (vec_id)-only projection (single
     *    partition, but nlist ids x 8 bytes, never the vectors), each
     *    round's update LEFT-joins the previous centroid table (empty
-    *    clusters keep their centroid via coalesce) and is localCheckpoint'd
-    *    to truncate lineage, superseded tables' blocks released.
+    *    clusters keep their centroid via coalesce) and is staged
+    *    ([[Staging.stage]]) to truncate lineage, superseded tables released.
     *
     * Driver footprint honesty: the assignment join still BROADCASTS the
     * centroid table up to [[MaxBroadcastCentroids]] (a broadcast is BUILT
@@ -239,24 +230,17 @@ object Similarity {
     * ceiling. (At nlist ~ 10^6 the n x nlist assignment scoring is the
     * real wall — coarse-quantize the assignment itself first.)
     *
-    * Block lifetime: with `nlist > maxCollectCentroids` and
-    * `lloydRounds > 0` the RETURNED table is a live localCheckpoint —
-    * call [[releaseCentroids]] when done with it (and with everything
-    * derived lazily from it), or its blocks stay pinned for the
-    * application lifetime. The collect path returns a driver-local table
-    * with no pinned blocks.
+    * Stage lifetime: with `nlist > maxCollectCentroids` and
+    * `lloydRounds > 0` the RETURNED table is a live stage — call
+    * [[Staging.release]] when done with it (and with everything derived
+    * lazily from it), or it is only reclaimed once unreachable. The
+    * collect path returns a driver-local table with no stage.
     */
   def ivfCentroids(corpus: DataFrame, nlist: Int,
       lloydRounds: Int = 0,
       maxCollectCentroids: Int = DefaultMaxCollectCentroids): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    // materialize the quantized corpus ONCE when Lloyd rounds will loop
-    // over it — each round otherwise re-executes the corpus scan +
-    // quantization per assignment AND per update (the q41 lesson:
-    // iterative refinement must never leave its loop input lazy)
-    val qRaw = corpus.select(col("vec_id"), quantize(col("embedding")).as("qv"))
-    val q = if (lloydRounds > 0) qRaw.localCheckpoint() else qRaw
     val cw = Window.partitionBy("vec_id")
       .orderBy(col("ccos").desc, col("centroid_id").asc)
     // one Lloyd round: assignment (argmax cosine, ties by centroid_id) +
@@ -264,7 +248,7 @@ object Similarity {
     // `div`, not `/`: Column./ on longs is DOUBLE division, which loses
     // low bits once |s| exceeds 2^53 and would diverge from the oracle's
     // exact integer arithmetic; `div` stays integral.
-    def lloydRound(cents: DataFrame): DataFrame = {
+    def lloydRound(q: DataFrame, cents: DataFrame): DataFrame = {
       val assigned = q.join(centroidSide(cents, nlist))
         .select(col("vec_id"), col("qv"), col("centroid_id"),
           cosineQ(col("qv"), col("cv")).as("ccos"))
@@ -280,47 +264,52 @@ object Similarity {
           array_sort(collect_list(struct(col("pos"), col("comp")))),
           f => f.getField("comp").cast("long")).as("cv"))
     }
-    if (nlist <= maxCollectCentroids) {
-      var cents = q.orderBy(col("vec_id").asc).limit(nlist)
-        .select(col("vec_id").as("centroid_id"), col("qv").as("cv"))
-        .as[(Long, Array[Long])].collect().toSeq
-        .sortBy(_._1).zipWithIndex
-        .map { case ((_, v), i) => (i.toLong, v) }
-      var round = 0
-      while (round < lloydRounds) {
-        val sums = lloydRound(cents.toDF("centroid_id", "cv"))
-          .as[(Long, Array[Long])].collect().toMap
-        cents = cents.map { case (id, old) => (id, sums.getOrElse(id, old)) }
-        round += 1
+    def refine(q: DataFrame): DataFrame =
+      if (nlist <= maxCollectCentroids) {
+        var cents = q.orderBy(col("vec_id").asc).limit(nlist)
+          .select(col("vec_id").as("centroid_id"), col("qv").as("cv"))
+          .as[(Long, Array[Long])].collect().toSeq
+          .sortBy(_._1).zipWithIndex
+          .map { case ((_, v), i) => (i.toLong, v) }
+        var round = 0
+        while (round < lloydRounds) {
+          val sums = lloydRound(q, cents.toDF("centroid_id", "cv"))
+            .as[(Long, Array[Long])].collect().toMap
+          cents = cents.map { case (id, old) => (id, sums.getOrElse(id, old)) }
+          round += 1
+        }
+        cents.toDF("centroid_id", "cv")
+      } else {
+        // DF-resident path: renumber init centroids 0..n-1 by vec_id order
+        // (window input = the nlist smallest ids ONLY, vectors joined after)
+        val initIds = q.select(col("vec_id")).orderBy(col("vec_id").asc)
+          .limit(nlist)
+          .select(col("vec_id"),
+            (row_number().over(Window.orderBy(col("vec_id").asc)) - 1)
+              .cast("long").as("centroid_id"))
+        var cents = q.join(initIds, "vec_id")
+          .select(col("centroid_id"), col("qv").as("cv"))
+        if (lloydRounds > 0) cents = Staging.stage(cents, "ivf-centroids")
+        var round = 0
+        while (round < lloydRounds) {
+          val next = Staging.stage(cents.as("p")
+            .join(lloydRound(q, cents).withColumnRenamed("cv", "nv"),
+              Seq("centroid_id"), "left")
+            .select(col("centroid_id"),
+              coalesce(col("nv"), col("p.cv")).as("cv")), "ivf-centroids")
+          Staging.release(cents)
+          cents = next
+          round += 1
+        }
+        cents
       }
-      if (lloydRounds > 0) Checkpoints.releaseLocal(q)
-      cents.toDF("centroid_id", "cv")
-    } else {
-      // DF-resident path: renumber init centroids 0..n-1 by vec_id order
-      // (window input = the nlist smallest ids ONLY, vectors joined after)
-      val initIds = q.select(col("vec_id")).orderBy(col("vec_id").asc)
-        .limit(nlist)
-        .select(col("vec_id"),
-          (row_number().over(Window.orderBy(col("vec_id").asc)) - 1)
-            .cast("long").as("centroid_id"))
-      var cents = q.join(initIds, "vec_id")
-        .select(col("centroid_id"), col("qv").as("cv"))
-      if (lloydRounds > 0) cents = cents.localCheckpoint()
-      var round = 0
-      while (round < lloydRounds) {
-        val next = cents.as("p")
-          .join(lloydRound(cents).withColumnRenamed("cv", "nv"),
-            Seq("centroid_id"), "left")
-          .select(col("centroid_id"),
-            coalesce(col("nv"), col("p.cv")).as("cv"))
-          .localCheckpoint()
-        Checkpoints.releaseLocal(cents)
-        cents = next
-        round += 1
-      }
-      if (lloydRounds > 0) Checkpoints.releaseLocal(q)
-      cents
-    }
+    // materialize the quantized corpus ONCE when Lloyd rounds will loop
+    // over it — each round otherwise re-executes the corpus scan +
+    // quantization per assignment AND per update (the q41 lesson:
+    // iterative refinement must never leave its loop input lazy)
+    val qRaw = corpus.select(col("vec_id"), quantize(col("embedding")).as("qv"))
+    if (lloydRounds > 0) Staging.using(qRaw, "ivf-corpus")(refine)
+    else refine(qRaw)
   }
 
   /** ANN top-k via IVF (inverted-file) coarse quantization: assign every
@@ -332,7 +321,7 @@ object Similarity {
     * Coarse quantizer: `ivfCentroids` — deterministic first-nlist init plus
     * `lloydRounds` seeded Lloyd iterations (0 = init only, the fully
     * closed-form path; 2-3 rounds markedly improve recall on clustered
-    * corpora — see the ANN recall capability bench). Both settings are
+    * corpora — recall@10 0.94 -> 1.00 in BENCH_ANN.json). Both settings are
     * DuckDB-reproducible, so either is oracle-checked end-to-end.
     * Ties rank by centroid_id ascending.
     *
@@ -354,16 +343,16 @@ object Similarity {
     val cw = Window.partitionBy("vec_id")
       .orderBy(col("ccos").desc, col("centroid_id").asc)
     val ranked = scored.withColumn("crank", row_number().over(cw))
-    // DF-resident Lloyd path: the centroid table is a LIVE localCheckpoint
-    // (see ivfCentroids). Materialize the pruned assignment table (the only
-    // thing derived from it — n x max(nprobe,1) rows) eagerly, then release
-    // the centroid blocks NOW instead of leaking them until driver GC; the
+    // DF-resident Lloyd path: the centroid table is a LIVE stage (see
+    // ivfCentroids). Stage the pruned assignment table (the only thing
+    // derived from it — n x max(nprobe,1) rows) eagerly, then release the
+    // centroid stage NOW instead of leaking it until driver GC; the
     // collect path keeps the fully lazy plan.
     val base =
       if (centroidsAreLive(nlist, lloydRounds)) {
-        val pruned = ranked.where(col("crank") <= math.max(nprobe, 1))
-          .localCheckpoint()
-        releaseCentroids(cents)
+        val pruned = Staging.stage(
+          ranked.where(col("crank") <= math.max(nprobe, 1)), "ivf-pruned")
+        Staging.release(cents)
         pruned
       } else ranked
     val corpusSide = {
@@ -486,13 +475,13 @@ object Similarity {
       .withColumn("crank", row_number().over(cw))
       .where(col("crank") === 1)
       .select("centroid_id", "vec_id", "qv")
-    // same live-checkpoint release discipline as ivfTopK: on the
-    // DF-resident Lloyd path, materialize the assignment (one row per
-    // corpus vector) and free the centroid blocks immediately
+    // same live-stage release discipline as ivfTopK: on the DF-resident
+    // Lloyd path, stage the assignment (one row per corpus vector) and
+    // release the centroid stage immediately
     val assigned =
       if (centroidsAreLive(nlist, lloydRounds)) {
-        val chk = assignedLazy.localCheckpoint()
-        releaseCentroids(cents)
+        val chk = Staging.stage(assignedLazy, "semdedup-assigned")
+        Staging.release(cents)
         chk
       } else assignedLazy
     val participants =

@@ -45,19 +45,18 @@ object Triangles {
     *
     * The canonical edge list, the degree table, and the oriented edge
     * set are each consumed by MULTIPLE downstream joins —
-    * localCheckpoint pins them once (the [[Dedup.nearDupClusters]]
+    * [[Staging.stage]] pins them once (the [[Dedup.nearDupClusters]]
     * edge-list lesson: an un-pinned frame re-executes its whole
     * upstream subtree per consumer; before the pin this op re-ran the
     * distinct + both degree joins up to three times each). The blocks
     * live until the session drops them — edge-list-sized, the same
     * budget the CC op documents. */
   def triangleCount(df: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val e = canonicalEdges(df, srcCol, dstCol).localCheckpoint()
+    val e = Staging.stage(canonicalEdges(df, srcCol, dstCol), "tri-edges")
 
-    val deg = e.select(col("src").as("node"))
+    val deg = Staging.stage(e.select(col("src").as("node"))
       .unionAll(e.select(col("dst").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
+      .groupBy("node").agg(count(lit(1)).as("deg")), "tri-degrees")
 
     // orient by (deg, node): lower order -> higher order
     val withDeg = e
@@ -67,11 +66,11 @@ object Triangles {
         .withColumnRenamed("deg", "ddeg"), "dst")
     val srcLower = col("sdeg") < col("ddeg") ||
       (col("sdeg") === col("ddeg") && col("src") < col("dst"))
-    val oriented = withDeg.select(
+    val oriented = Staging.stage(withDeg.select(
       when(srcLower, col("src")).otherwise(col("dst")).as("a"),
       when(srcLower, col("dst")).otherwise(col("src")).as("b"),
-      when(srcLower, col("ddeg")).otherwise(col("sdeg")).as("bdeg"))
-      .localCheckpoint()
+      when(srcLower, col("ddeg")).otherwise(col("sdeg")).as("bdeg")),
+      "tri-oriented")
 
     // wedges from each apex a: unordered out-neighbor pairs (v, w)
     // with order(v) < order(w); the closing oriented edge is v -> w

@@ -855,29 +855,28 @@ object QueryDefs {
     * engines), proving curate needs no numeric doc ids.
     */
   def qConvCurate(s: SparkSession, dir: String): DataFrame = {
-    // checkpoint the reconstructed transcripts ONCE: both curate inputs
+    // stage the reconstructed transcripts ONCE: both curate inputs
     // derive from this frame, and leaving it lazy re-runs the conv_id
     // shuffle + collect_list aggregation for the train AND eval sides
     // (~2x the reconstruction cost; at cluster scale, 2x the turn-table
-    // scan). curate materializes its output internally, so the blocks are
-    // released before this function returns.
-    val docs = graft.ops.Conversations.transcriptText(goldTurns(s, dir))
-      .select(col("conv_id").as("doc_id"), col("transcript"))
-      .localCheckpoint()
+    // scan). curate's returned verdict table is itself staged, so nothing
+    // downstream re-reads the transcripts and the stage is released
+    // before this function returns.
     val isEval =
       split(col("doc_id"), "-").getItem(1).cast("int") % 10 === 0
-    val out = graft.ops.Curation.curate(
-      docs.where(!isEval), docs.where(isEval),
-      minTokens = 740, maxTokens = 920,
-      minMeanTokenLen = 7.6, maxMeanTokenLen = 8.3,
-      minAlnumRatio = 0.80, minStopwordHits = 0,
-      k = 7, numHashes = 8, bands = 4, maxBandDf = 10,
-      contamN = 13, minShared = 4,
-      textCol = "transcript")
-    // curate's returned verdict table is itself materialized, so nothing
-    // downstream re-reads the transcript checkpoint — release it now
-    graft.ops.Checkpoints.releaseLocal(docs)
-    out.orderBy("doc_id")
+    graft.ops.Staging.using(
+      graft.ops.Conversations.transcriptText(goldTurns(s, dir))
+        .select(col("conv_id").as("doc_id"), col("transcript")),
+      "conv-transcripts") { docs =>
+      graft.ops.Curation.curate(
+        docs.where(!isEval), docs.where(isEval),
+        minTokens = 740, maxTokens = 920,
+        minMeanTokenLen = 7.6, maxMeanTokenLen = 8.3,
+        minAlnumRatio = 0.80, minStopwordHits = 0,
+        k = 7, numHashes = 8, bands = 4, maxBandDf = 10,
+        contamN = 13, minShared = 4,
+        textCol = "transcript")
+    }.orderBy("doc_id")
   }
 
   /** q57: ExactSubstr-style duplicate-span statistics (Lee et al. 2022,

@@ -73,7 +73,7 @@ class CurationSpec extends AnyFunSuite {
     // require every NEW pin gone: the <=1 slack alone could mask one
     // leaked staged checkpoint if the verdict pin were ever removed
     // (round-5 test-review find)
-    Checkpoints.releaseLocalDeep(out)
+    Staging.releaseDeep(out)
     assert(newIds.isEmpty,
       s"a non-verdict checkpoint stayed pinned: $newIds")
   }

@@ -130,8 +130,8 @@ class ReviewFixesSpec extends AnyFunSuite {
     // results still reference) and require every NEW pin gone — the <=2
     // slack alone is exactly the size of the centroid-checkpoint leak
     // this test exists to prevent (round-5 test-review find)
-    Checkpoints.releaseLocalDeep(topk)
-    Checkpoints.releaseLocalDeep(sem)
+    Staging.releaseDeep(topk)
+    Staging.releaseDeep(sem)
     val leftover = sc.getPersistentRDDs.keySet.toSet -- beforeIds
     assert(leftover.isEmpty,
       s"non-result checkpoints stayed pinned: $leftover")
