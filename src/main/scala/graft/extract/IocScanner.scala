@@ -57,26 +57,39 @@ final class IocScanner(val config: ScanConfig) extends Serializable {
   def scan(bytes: Array[Byte]): ArrayBuffer[Ioc] =
     scan(bytes, bytes.length)
 
-  def scan(bytes: Array[Byte], len: Int): ArrayBuffer[Ioc] =
-    scanInto(bytes, len, new ArrayBuffer[Ioc](4))
-
-  /** Scan bytes[0, len) into `out` (cleared first). The length parameter +
-    * caller-owned buffer let the Catalyst expressions reuse thread-local
-    * scratch instead of allocating a byte[] + ArrayBuffer per row — at 32
-    * scan threads that per-row garbage was the GC wall (round-2 scaling).
+  /** The candidates of bytes[0, len) as `Ioc`s (Strings built for every
+    * candidate) — for the reference paths and tests; the scan expressions
+    * read [[scanSpans]] directly.
     */
-  def scanInto(bytes: Array[Byte], n: Int,
-      out: ArrayBuffer[Ioc]): ArrayBuffer[Ioc] =
-    scanInto(bytes, n, out, scratch.get())
+  def scan(bytes: Array[Byte], len: Int): ArrayBuffer[Ioc] = {
+    val sp = scanSpans(bytes, len, scratch.get())
+    val out = new ArrayBuffer[Ioc](math.max(4, sp.n))
+    var i = 0
+    while (i < sp.n) {
+      val raw = new String(bytes, sp.start(i), sp.end(i) - sp.start(i),
+        StandardCharsets.UTF_8)
+      val value = if (sp.kind(i) == Kind.Ipv6) sp.canon(i) else raw
+      out += Ioc(Kind.names(sp.kind(i)), value, raw, sp.start(i), sp.end(i))
+      i += 1
+    }
+    out
+  }
 
-  /** Caller-supplied-scratch variant: lets the expression layer reuse the
-    * ScanScratch it hangs off its own per-row scratch holder, so a scan
-    * costs ONE ThreadLocal probe total (every extra ThreadLocal is a hash
-    * probe in a collision-prone per-thread map — JFR: getEntryAfterMiss).
+  /** Scan bytes[0, n) into `scr.spans` (cleared first) and return it: one
+    * (kind, start, end) per candidate in emission order, plus the parsed
+    * address of an IPv4 candidate and the canonical form of an IPv6 one.
+    * No String is built for a candidate. The spans are valid until the
+    * next scan with `scr`. The caller-supplied scratch lets the expression
+    * layer reuse the ScanScratch it hangs off its own per-row scratch
+    * holder, so a scan costs ONE ThreadLocal probe total (every extra
+    * ThreadLocal is a hash probe in a collision-prone per-thread map — JFR:
+    * getEntryAfterMiss), and the reused buffers keep per-row garbage off
+    * the GC (round-2 scaling).
     */
-  def scanInto(bytes: Array[Byte], n: Int, out: ArrayBuffer[Ioc],
-      scr: IocScanner.ScanScratch): ArrayBuffer[Ioc] = {
-    out.clear()
+  def scanSpans(bytes: Array[Byte], n: Int,
+      scr: IocScanner.ScanScratch): Spans = {
+    val out = scr.spans
+    out.n = 0
     // ONE fused anchor pass over the bytes (the reference's shared
     // precompute, lib.rs:412-447): token boundaries + '.', '@', "::", "0x"
     // anchor positions collected together — the per-type scans previously
@@ -150,7 +163,7 @@ final class IocScanner(val config: ScanConfig) extends Serializable {
 
   // ------------------------------------------------------------- domains
   private def scanDomains(b: Array[Byte], n: Int, dots: IntVec,
-      out: ArrayBuffer[Ioc]): Unit = {
+      out: Spans): Unit = {
     var lastSpanEnd = 0
     var di = 0
     while (di < dots.length) {
@@ -167,10 +180,8 @@ final class IocScanner(val config: ScanConfig) extends Serializable {
               ((start == 0 || isBoundary(b(start - 1))) &&
                 (end == n || isBoundary(b(end))))
             if (boundaryOk && validLabels(b, start, end) &&
-              utf8Valid(b, start, end)) {
-              val s = new String(b, start, end - start, StandardCharsets.UTF_8)
-              out += Ioc(T.Domain, s, s, start, end)
-            }
+              utf8Valid(b, start, end))
+              out.add(Kind.Domain, start, end)
           }
         }
         // skip the span's remaining dots on REJECTION too (round 6):
@@ -205,7 +216,7 @@ final class IocScanner(val config: ScanConfig) extends Serializable {
 
   // --------------------------------------------------------------- ipv4
   private def scanIpv4(b: Array[Byte], n: Int, dots: IntVec,
-      out: ArrayBuffer[Ioc]): Unit = {
+      out: Spans): Unit = {
     // dot positions come from the fused anchor pass
     var lastEnd = 0
     // every dot of one digit/dot run walks back to the SAME start, and
@@ -229,12 +240,10 @@ final class IocScanner(val config: ScanConfig) extends Serializable {
           while (dj < dots.length && dots(dj) < endSearch) { cnt += 1; dj += 1 }
           if (cnt >= 3) {
             val parsed = tryParseIpv4(b, n, start)
-            if (parsed != null) {
-              val end = parsed._2
-              val s = parsed._1
-              out += Ioc(T.Ipv4, s,
-                new String(b, start, end - start, StandardCharsets.UTF_8),
-                start, end)
+            if (parsed >= 0) {
+              val end = (parsed >>> 32).toInt
+              out.add(Kind.Ipv4, start, end)
+              out.addr(out.n - 1) = parsed.toInt
               lastEnd = end
             } else lastFailedStart = start
           }
@@ -245,14 +254,14 @@ final class IocScanner(val config: ScanConfig) extends Serializable {
   }
 
   /** Strict dotted-quad parse from `start`: 4 octets of 1-3 digits, each
-    * 0-255, no leading zeros, word boundaries both ends. Returns
-    * (canonical, end) or null.
+    * 0-255, no leading zeros, word boundaries both ends — so the span IS
+    * the canonical form. Returns (end << 32) | address, or -1.
     */
-  private def tryParseIpv4(b: Array[Byte], n: Int, start: Int): (String, Int) = {
+  private def tryParseIpv4(b: Array[Byte], n: Int, start: Int): Long = {
     if (config.requireWordBoundaries && start > 0 && !isBoundary(b(start - 1)))
-      return null
+      return -1L
     var pos = start
-    val octets = new Array[Int](4)
+    var addr = 0L
     var oi = 0
     while (oi < 4) {
       var value = 0
@@ -263,24 +272,24 @@ final class IocScanner(val config: ScanConfig) extends Serializable {
         pos += 1
         digits += 1
       }
-      if (digits == 0) return null
-      if (value > 255) return null
-      if (digits > 1 && b(octetStart) == '0') return null
-      octets(oi) = value
+      if (digits == 0) return -1L
+      if (value > 255) return -1L
+      if (digits > 1 && b(octetStart) == '0') return -1L
+      addr = (addr << 8) | value
       if (oi < 3) {
-        if (pos >= n || b(pos) != '.') return null
+        if (pos >= n || b(pos) != '.') return -1L
         pos += 1
       }
       oi += 1
     }
     if (config.requireWordBoundaries && pos < n && !isBoundary(b(pos)))
-      return null
-    (s"${octets(0)}.${octets(1)}.${octets(2)}.${octets(3)}", pos)
+      return -1L
+    (pos.toLong << 32) | addr
   }
 
   // -------------------------------------------------------------- emails
   private def scanEmails(b: Array[Byte], n: Int, ats: IntVec,
-      out: ArrayBuffer[Ioc]): Unit = {
+      out: Spans): Unit = {
     var ai = 0
     while (ai < ats.length) {
       val at = ats(ai)
@@ -312,11 +321,8 @@ final class IocScanner(val config: ScanConfig) extends Serializable {
                 i = at + 1
                 while (i < end && !hasDot) { if (b(i) == '.') hasDot = true; i += 1 }
                 if (hasDot && Psl.tldSuffixPos(b, at + 1, end) >= 0 &&
-                  utf8Valid(b, start, end)) {
-                  val s =
-                    new String(b, start, end - start, StandardCharsets.UTF_8)
-                  out += Ioc(T.Email, s, s, start, end)
-                }
+                  utf8Valid(b, start, end))
+                  out.add(Kind.Email, start, end)
               }
             }
           }
@@ -328,7 +334,7 @@ final class IocScanner(val config: ScanConfig) extends Serializable {
 
   // --------------------------------------------------------------- ipv6
   private def scanIpv6(b: Array[Byte], n: Int, dcolons: IntVec,
-      out: ArrayBuffer[Ioc]): Unit = {
+      out: Spans): Unit = {
     var lastEnd = 0
     var search = 0
     var ci = 0
@@ -356,7 +362,8 @@ final class IocScanner(val config: ScanConfig) extends Serializable {
             val raw = new String(b, start, len, StandardCharsets.US_ASCII)
             val canonical = Ipv6Format.canonicalize(raw)
             if (canonical != null) {
-              out += Ioc(T.Ipv6, canonical, raw, start, end)
+              out.add(Kind.Ipv6, start, end)
+              out.canon(out.n - 1) = canonical
               lastEnd = end
             } else lastEnd = dc + 2
           }
@@ -381,31 +388,28 @@ final class IocScanner(val config: ScanConfig) extends Serializable {
 
   // -------------------------------------------------------------- hashes
   private def scanHashes(b: Array[Byte], tokens: IntVec,
-      out: ArrayBuffer[Ioc]): Unit = {
+      out: Spans): Unit = {
     var t = 0
     while (t + 1 < tokens.length) {
       val start = tokens(t)
       val end = tokens(t + 1)
       val len = end - start
-      val tpe = len match {
-        case 32  => T.Md5
-        case 40  => T.Sha1
-        case 64  => T.Sha256
-        case 96  => T.Sha384
-        case 128 => T.Sha512
-        case _   => null
+      val kind = len match {
+        case 32  => Kind.Md5
+        case 40  => Kind.Sha1
+        case 64  => Kind.Sha256
+        case 96  => Kind.Sha384
+        case 128 => Kind.Sha512
+        case _   => -1
       }
-      if (tpe != null && allHex(b, start, end)) {
-        val s = new String(b, start, len, StandardCharsets.US_ASCII)
-        out += Ioc(tpe, s, s, start, end)
-      }
+      if (kind >= 0 && allHex(b, start, end)) out.add(kind, start, end)
       t += 2
     }
   }
 
   // ------------------------------------------------------------- bitcoin
   private def scanBitcoin(b: Array[Byte], tokens: IntVec,
-      out: ArrayBuffer[Ioc]): Unit = {
+      out: Spans): Unit = {
     var t = 0
     while (t + 1 < tokens.length) {
       val start = tokens(t)
@@ -417,13 +421,13 @@ final class IocScanner(val config: ScanConfig) extends Serializable {
           if (asciiOnly(b, start, end)) {
             val s = new String(b, start, len, StandardCharsets.US_ASCII)
             if (Checksums.validBitcoinBech32(s))
-              out += Ioc(T.Bitcoin, s, s, start, end)
+              out.add(Kind.Bitcoin, start, end)
           }
         } else if (b(start) == '1' || b(start) == '3') {
           if (asciiOnly(b, start, end)) {
             val s = new String(b, start, len, StandardCharsets.US_ASCII)
             if (Checksums.validBase58Check(s))
-              out += Ioc(T.Bitcoin, s, s, start, end)
+              out.add(Kind.Bitcoin, start, end)
           }
         }
       }
@@ -433,7 +437,7 @@ final class IocScanner(val config: ScanConfig) extends Serializable {
 
   // ------------------------------------------------------------ ethereum
   private def scanEthereum(b: Array[Byte], n: Int, zx: IntVec,
-      out: ArrayBuffer[Ioc]): Unit = {
+      out: Spans): Unit = {
     // "0x" starts from the fused pass; pairs cannot overlap
     var zi = 0
     while (zi < zx.length) {
@@ -443,12 +447,9 @@ final class IocScanner(val config: ScanConfig) extends Serializable {
         val end = start + 42
         if ((!config.requireWordBoundaries || end == n || isBoundary(b(end))) &&
           allHex(b, start + 2, end) &&
-          // validate on the raw bytes (zero-alloc EIP-55, round 6); the
-          // String is built only for the accepted address
-          Checksums.validEthereumBytes(b, start)) {
-          val s = new String(b, start, 42, StandardCharsets.US_ASCII)
-          out += Ioc(T.Ethereum, s, s, start, end)
-        }
+          // validate on the raw bytes (zero-alloc EIP-55, round 6)
+          Checksums.validEthereumBytes(b, start))
+          out.add(Kind.Ethereum, start, end)
       }
       zi += 1
     }
@@ -456,7 +457,7 @@ final class IocScanner(val config: ScanConfig) extends Serializable {
 
   // -------------------------------------------------------------- monero
   private def scanMonero(b: Array[Byte], tokens: IntVec,
-      out: ArrayBuffer[Ioc]): Unit = {
+      out: Spans): Unit = {
     var t = 0
     while (t + 1 < tokens.length) {
       val start = tokens(t)
@@ -466,7 +467,7 @@ final class IocScanner(val config: ScanConfig) extends Serializable {
         asciiOnly(b, start, end)) {
         val s = new String(b, start, len, StandardCharsets.US_ASCII)
         if (Checksums.validMonero(s))
-          out += Ioc(T.Monero, s, s, start, end)
+          out.add(Kind.Monero, start, end)
       }
       t += 2
     }
@@ -497,6 +498,55 @@ object IocScanner {
     t
   }
 
+  /** Candidate kinds: indexes into `names`, in IndicatorType.all order. */
+  object Kind {
+    final val Domain = 0
+    final val Email = 1
+    final val Ipv4 = 2
+    final val Ipv6 = 3
+    final val Md5 = 4
+    final val Sha1 = 5
+    final val Sha256 = 6
+    final val Sha384 = 7
+    final val Sha512 = 8
+    final val Bitcoin = 9
+    final val Ethereum = 10
+    final val Monero = 11
+    val names: Array[String] = Array(T.Domain, T.Email, T.Ipv4, T.Ipv6,
+      T.Md5, T.Sha1, T.Sha256, T.Sha384, T.Sha512, T.Bitcoin, T.Ethereum,
+      T.Monero)
+  }
+
+  /** One scan's candidates as primitive columns (grow-only, reused): the
+    * kind, the byte span [start, end), the 32-bit address of an IPv4
+    * candidate (its span is already canonical) and the RFC 5952 form of an
+    * IPv6 one (null for every other kind).
+    */
+  final class Spans {
+    var n = 0
+    var kind = new Array[Int](16)
+    var start = new Array[Int](16)
+    var end = new Array[Int](16)
+    var addr = new Array[Int](16)
+    var canon = new Array[String](16)
+
+    private[extract] def add(k: Int, s: Int, e: Int): Unit = {
+      if (n == kind.length) {
+        val cap = n * 2
+        kind = java.util.Arrays.copyOf(kind, cap)
+        start = java.util.Arrays.copyOf(start, cap)
+        end = java.util.Arrays.copyOf(end, cap)
+        addr = java.util.Arrays.copyOf(addr, cap)
+        canon = java.util.Arrays.copyOf(canon, cap)
+      }
+      kind(n) = k; start(n) = s; end(n) = e; canon(n) = null
+      n += 1
+    }
+
+    /** The IPv4 address of candidate i as a non-negative long. */
+    def ipv4(i: Int): Long = addr(i) & 0xffffffffL
+  }
+
   /** Per-thread scanner scratch, consolidated behind ONE ThreadLocal. */
   final class ScanScratch {
     val tokens = new IntVec(64)
@@ -504,6 +554,7 @@ object IocScanner {
     val ats = new IntVec(8)
     val dcolons = new IntVec(8)
     val zx = new IntVec(8)
+    val spans = new Spans
   }
   private val scratch = new ThreadLocal[ScanScratch] {
     override def initialValue(): ScanScratch = new ScanScratch

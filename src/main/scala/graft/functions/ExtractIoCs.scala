@@ -54,30 +54,27 @@ object ExtractIoCs {
   val schema: DataType = ArrayType(elementSchema, containsNull = false)
 
   private val EMPTY: ArrayData = new GenericArrayData(Array.empty[Any])
-  // interned indicator-type UTF8Strings (12 constants; avoids a per-
-  // candidate conversion + allocation). SHARED single source for every
-  // scan expression (ScanTurn/IntelLookup*) — a new
-  // indicator type is interned in exactly one place.
-  private[functions] val typeInterned: java.util.HashMap[String, UTF8String] = {
-    val m = new java.util.HashMap[String, UTF8String]()
-    graft.model.IndicatorType.all.foreach(t =>
-      m.put(t, UTF8String.fromString(t)))
-    m
-  }
+  // interned indicator-type UTF8Strings by IocScanner.Kind (12 constants;
+  // avoids a per-candidate conversion + allocation). SHARED single source
+  // for every scan expression — a new indicator type is interned in
+  // exactly one place.
+  private[functions] val typeInterned: Array[UTF8String] =
+    IocScanner.Kind.names.map(UTF8String.fromString)
 
   /** Shared match_type constants (ip vs pattern/literal/glob families). */
   private[functions] val IP = UTF8String.fromString("ip")
   private[functions] val PATTERN = UTF8String.fromString("pattern")
 
   /** Per-row thread scratch behind ONE ThreadLocal (text-copy buffer,
-    * candidate buffer, ScanTurn's hit and row buffers): the per-row copies/
+    * scanner spans, probe key, ScanTurn's hit and row buffers): the per-row copies/
     * buffers were the dominant allocations at 32 scan threads (GC-bound
     * scaling), and each separate ThreadLocal costs a hash probe in a
     * collision-prone per-thread map (JFR: getEntryAfterMiss).
     */
   final class RowScratch {
     var buf: Array[Byte] = new Array[Byte](1024)
-    val iocs = new scala.collection.mutable.ArrayBuffer[graft.model.Ioc](8)
+    // ScanTurn.probe's string-path key, set from a candidate's span
+    val key = new graft.intel.ProbeKey
     // ScanTurn.probe's hits as (db_idx, entry_idx, prefix_len) columns
     var hitDb: Array[Int] = new Array[Int](16)
     var hitEntry: Array[Int] = new Array[Int](16)
@@ -86,8 +83,8 @@ object ExtractIoCs {
     var rows: Array[Any] = new Array[Any](16)
     // direct-mapped value-intern cache (see internSpan): ~16 KB of refs
     val intern: Array[UTF8String] = new Array[UTF8String](InternSize)
-    // scanner anchor scratch, carried here so one ThreadLocal probe serves
-    // the whole row (scanInto's own ThreadLocal is only the fallback path)
+    // scanner anchor and span scratch, carried here so one ThreadLocal
+    // probe serves the whole row
     val scan = new graft.extract.IocScanner.ScanScratch
   }
   val tlScratch = new ThreadLocal[RowScratch] {
@@ -196,33 +193,32 @@ object ExtractIoCs {
   def copyToScratch(text: UTF8String): Array[Byte] =
     copyToScratch(tlScratch.get(), text)
 
+  /** Candidate i's value: its matched text (the span's interned bytes),
+    * except that an IPv6 value is its canonical form.
+    */
+  private[functions] def valueOf(scr: RowScratch, sp: IocScanner.Spans,
+      i: Int, matched: UTF8String): UTF8String =
+    if (sp.kind(i) == IocScanner.Kind.Ipv6) internString(scr, sp.canon(i))
+    else matched
+
   /** Static entry point shared by interpreted eval and generated code. */
   def scanToArrayData(scanner: IocScanner, text: UTF8String): ArrayData = {
     val len = text.numBytes()
     val scr = tlScratch.get()
     val buf = copyToScratch(scr, text)
-    val iocs = scanner.scanInto(buf, len, scr.iocs, scr.scan)
-    val n = iocs.length
+    val sp = scanner.scanSpans(buf, len, scr.scan)
+    val n = sp.n
     if (n == 0) return EMPTY
     val rows = new Array[Any](n)
     var i = 0
     while (i < n) {
-      val m = iocs(i)
       val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(5)
-      row.update(0, typeInterned.get(m.indicator_type))
-      // when the canonical value IS the matched span (every type except
-      // canonicalized IPv6), intern the UTF-8 bytes straight out of the
-      // scratch buffer instead of re-encoding the String char by char
-      val valueU8 =
-        if (m.matched_text eq m.value)
-          internSpan(scr, buf, m.span_start, m.span_end)
-        else internString(scr, m.value)
-      row.update(1, valueU8)
-      row.update(2,
-        if (m.matched_text eq m.value) valueU8
-        else internString(scr, m.matched_text))
-      row.update(3, m.span_start)
-      row.update(4, m.span_end)
+      row.update(0, typeInterned(sp.kind(i)))
+      val matched = internSpan(scr, buf, sp.start(i), sp.end(i))
+      row.update(1, valueOf(scr, sp, i, matched))
+      row.update(2, matched)
+      row.update(3, sp.start(i))
+      row.update(4, sp.end(i))
       rows(i) = row
       i += 1
     }

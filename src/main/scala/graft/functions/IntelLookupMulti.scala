@@ -1,6 +1,7 @@
 package graft.functions
 
-import graft.intel.{BcHandle, IntelDb}
+import graft.extract.Ipv6Format
+import graft.intel.{BcHandle, Cidr, IntelDb}
 import graft.model.{IndicatorType => T}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -69,7 +70,11 @@ object IntelLookupMulti {
     val isV6 = itype.equals(IPV6)
     val isIp = isV6 || itype.equals(IPV4)
     val scr = ExtractIoCs.tlScratch.get()
-    val n = ScanTurn.probe(scr, dbs, value.toString, isIp, isV6)
+    val s = value.toString
+    val n =
+      if (isV6) ScanTurn.probeIp(scr, dbs, -1L, Ipv6Format.parse(s))
+      else if (isIp) ScanTurn.probeIp(scr, dbs, Cidr.parseV4(s), null)
+      else ScanTurn.probeString(scr, dbs, scr.key.set(s))
     ScanTurn.hitArray(scr, n, isIp)
   }
 

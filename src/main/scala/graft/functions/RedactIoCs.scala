@@ -51,42 +51,40 @@ case class RedactIoCs(child: Expression, config: ScanConfig)
 }
 
 object RedactIoCs {
-  // placeholder bytes per indicator type, precomputed (ASCII)
-  private val placeholder: java.util.HashMap[String, Array[Byte]] = {
-    val m = new java.util.HashMap[String, Array[Byte]]()
-    graft.model.IndicatorType.all.foreach(t =>
-      m.put(t, s"[REDACTED:$t]".getBytes("US-ASCII")))
-    m
-  }
+  // placeholder bytes per IocScanner.Kind, precomputed (ASCII)
+  private val placeholder: Array[Array[Byte]] =
+    IocScanner.Kind.names.map(t => s"[REDACTED:$t]".getBytes("US-ASCII"))
 
   /** Static entry point shared by interpreted eval and generated code. */
   def redact(scanner: IocScanner, text: UTF8String): UTF8String = {
     val len = text.numBytes()
     val scr = ExtractIoCs.tlScratch.get()
     val buf = ExtractIoCs.copyToScratch(scr, text)
-    val iocs = scanner.scanInto(buf, len, scr.iocs, scr.scan)
-    if (iocs.isEmpty) return text
-    // spans by (start asc, end desc): greedy keep => leftmost-longest,
-    // contained/overlapping later spans dropped
-    val sorted = iocs.toArray
-    java.util.Arrays.sort(sorted, (a: graft.model.Ioc, b: graft.model.Ioc) =>
-      if (a.span_start != b.span_start) Integer.compare(a.span_start, b.span_start)
-      else Integer.compare(b.span_end, a.span_end))
-    val out = new java.io.ByteArrayOutputStream(len + 16 * sorted.length)
+    val sp = scanner.scanSpans(buf, len, scr.scan)
+    val n = sp.n
+    if (n == 0) return text
+    // spans by (start asc, end desc), ties in emission order (a stable
+    // sort): greedy keep => leftmost-longest, contained/overlapping later
+    // spans dropped
+    val order = Array.tabulate[Integer](n)(Integer.valueOf)
+    java.util.Arrays.sort(order, (a: Integer, b: Integer) =>
+      if (sp.start(a) != sp.start(b)) Integer.compare(sp.start(a), sp.start(b))
+      else Integer.compare(sp.end(b), sp.end(a)))
+    val out = new java.io.ByteArrayOutputStream(len + 16 * n)
     var cur = 0
     var i = 0
-    while (i < sorted.length) {
-      val m = sorted(i)
-      if (m.span_start >= cur) {
-        out.write(buf, cur, m.span_start - cur)
-        out.write(placeholder.get(m.indicator_type))
-        cur = m.span_end
-      } else if (m.span_end > cur) {
+    while (i < n) {
+      val m: Int = order(i)
+      if (sp.start(m) >= cur) {
+        out.write(buf, cur, sp.start(m) - cur)
+        out.write(placeholder(sp.kind(m)))
+        cur = sp.end(m)
+      } else if (sp.end(m) > cur) {
         // PARTIALLY-overlapping dropped span (reachable with word
         // boundaries off): its overhanging tail is still part of a
         // detected indicator — extend the redacted region instead of
         // copying those bytes verbatim into the "scrubbed" output
-        cur = m.span_end
+        cur = sp.end(m)
       }
       i += 1
     }

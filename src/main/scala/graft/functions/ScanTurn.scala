@@ -1,8 +1,8 @@
 package graft.functions
 
-import graft.extract.{IocScanner, ScanConfig}
-import graft.intel.{BcHandle, IntelDb}
-import graft.model.{IndicatorType => T}
+import graft.extract.{IocScanner, Ipv6Format, ScanConfig}
+import graft.extract.IocScanner.Kind
+import graft.intel.{BcHandle, IntelDb, LpmIndex, ProbeKey}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -39,9 +39,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * materializes every intermediate row; the flat form emits only the
   * surviving rows, so the plan is ONE Generate.
   *
-  * Both shapes (and IntelLookupMulti) share one probe loop, [[ScanTurn.probe]].
-  * Codegen emits a direct static call, keeping the stage in whole-stage
-  * codegen.
+  * Both shapes (and IntelLookupMulti) share ScanTurn's probe loops, which
+  * probe from the candidate's bytes in the scan buffer (the string path)
+  * or its parsed address (the IP path); UTF8Strings are built only for
+  * emitted rows. Codegen emits a direct static call, keeping the stage in
+  * whole-stage codegen.
   */
 case class ScanTurn(child: Expression, dbs: BcHandle[Array[IntelDb]],
     config: ScanConfig, flat: Boolean = false)
@@ -114,32 +116,49 @@ object ScanTurn {
   private val CLEAN_ONLY: ArrayData = new GenericArrayData(Array[Any](CLEAN_ROW))
   private def typeInterned = ExtractIoCs.typeInterned
 
-  /** Probe every database for one candidate value. Hit k is left in
-    * `scr.hitDb(k)`, `scr.hitEntry(k)`, `scr.hitPrefix(k)` (prefix -1 for
-    * string hits); returns the hit count. The triples are valid until the
-    * next probe on this thread.
+  /** Probe every database for candidate i of a scan of `buf`. Hit k is
+    * left in `scr.hitDb(k)`, `scr.hitEntry(k)`, `scr.hitPrefix(k)` (prefix
+    * -1 for string hits); returns the hit count. The triples are valid
+    * until the next probe on this thread.
     */
-  private[functions] def probe(scr: ExtractIoCs.RowScratch,
-      dbs: Array[IntelDb], value: String, isIp: Boolean,
-      isV6: Boolean): Int = {
+  private def probe(scr: ExtractIoCs.RowScratch, dbs: Array[IntelDb],
+      sp: IocScanner.Spans, i: Int, buf: Array[Byte]): Int =
+    sp.kind(i) match {
+      case Kind.Ipv4 => probeIp(scr, dbs, sp.ipv4(i), null)
+      case Kind.Ipv6 => probeIp(scr, dbs, -1L, Ipv6Format.parse(sp.canon(i)))
+      case _ => probeString(scr, dbs, scr.key.set(buf, sp.start(i), sp.end(i)))
+    }
+
+  /** [[probe]] on the IP path: the IPv6 address `v6` (its groups) if not
+    * null, else the IPv4 address `v4` (negative = not an address).
+    */
+  private[functions] def probeIp(scr: ExtractIoCs.RowScratch,
+      dbs: Array[IntelDb], v4: Long, v6: Array[Int]): Int = {
     var n = 0
     var d = 0
     while (d < dbs.length) {
-      val db = dbs(d)
-      if (isIp) {
-        val hit = db.lookupIp(value, isV6)
-        if (hit != null) {
-          putHit(scr, n, d, hit._1, hit._2)
-          n += 1
-        }
-      } else {
-        val ids = db.lookupString(value)
-        var k = 0
-        while (k < ids.length) {
-          putHit(scr, n, d, ids(k), -1)
-          n += 1
-          k += 1
-        }
+      val hit = if (v6 != null) dbs(d).lookupIpv6(v6) else dbs(d).lookupIpv4(v4)
+      if (hit >= 0) {
+        putHit(scr, n, d, LpmIndex.entryOf(hit), LpmIndex.prefixOf(hit))
+        n += 1
+      }
+      d += 1
+    }
+    n
+  }
+
+  /** [[probe]] on the string path. */
+  private[functions] def probeString(scr: ExtractIoCs.RowScratch,
+      dbs: Array[IntelDb], key: ProbeKey): Int = {
+    var n = 0
+    var d = 0
+    while (d < dbs.length) {
+      val ids = dbs(d).lookupString(key)
+      var k = 0
+      while (k < ids.length) {
+        putHit(scr, n, d, ids(k), -1)
+        n += 1
+        k += 1
       }
       d += 1
     }
@@ -180,22 +199,7 @@ object ScanTurn {
     new GenericArrayData(out)
   }
 
-  private def isIp(m: graft.model.Ioc): Boolean =
-    m.indicator_type == T.Ipv4 || m.indicator_type == T.Ipv6
-
-  // value bytes: when the canonical value IS the matched span (every type
-  // except canonicalized IPv6), intern the UTF-8 bytes straight out of the
-  // scratch buffer — no char-by-char re-encode of the String
-  private def valueBytes(scr: ExtractIoCs.RowScratch, buf: Array[Byte],
-      m: graft.model.Ioc): UTF8String =
-    if (m.matched_text eq m.value)
-      ExtractIoCs.internSpan(scr, buf, m.span_start, m.span_end)
-    else ExtractIoCs.internString(scr, m.value)
-
-  private def matchedBytes(scr: ExtractIoCs.RowScratch, m: graft.model.Ioc,
-      value: UTF8String): UTF8String =
-    if (m.matched_text eq m.value) value
-    else ExtractIoCs.internString(scr, m.matched_text)
+  private def isIp(kind: Int): Boolean = kind == Kind.Ipv4 || kind == Kind.Ipv6
 
   /** Nested rows; static entry point shared by interpreted eval and
     * generated code.
@@ -205,26 +209,24 @@ object ScanTurn {
     val len = text.numBytes()
     val scr = ExtractIoCs.tlScratch.get()
     val buf = ExtractIoCs.copyToScratch(scr, text)
-    val iocs = scanner.scanInto(buf, len, scr.iocs, scr.scan)
-    val n = iocs.length
+    val sp = scanner.scanSpans(buf, len, scr.scan)
+    val n = sp.n
     if (n == 0) return CLEAN_ONLY
     val rows = new Array[Any](n)
     var anyHit = false
     var i = 0
     while (i < n) {
-      val m = iocs(i)
-      val ip = isIp(m)
-      val nHits = probe(scr, dbs, m.value, ip, m.indicator_type == T.Ipv6)
+      val nHits = probe(scr, dbs, sp, i, buf)
       if (nHits > 0) anyHit = true
       val row = new GenericInternalRow(7)
       row.update(0, CAND)
-      row.update(1, typeInterned.get(m.indicator_type))
-      val valueU8 = valueBytes(scr, buf, m)
-      row.update(2, valueU8)
-      row.update(3, matchedBytes(scr, m, valueU8))
-      row.update(4, m.span_start)
-      row.update(5, m.span_end)
-      row.update(6, hitArray(scr, nHits, ip))
+      row.update(1, typeInterned(sp.kind(i)))
+      val matched = ExtractIoCs.internSpan(scr, buf, sp.start(i), sp.end(i))
+      row.update(2, ExtractIoCs.valueOf(scr, sp, i, matched))
+      row.update(3, matched)
+      row.update(4, sp.start(i))
+      row.update(5, sp.end(i))
+      row.update(6, hitArray(scr, nHits, isIp(sp.kind(i))))
       rows(i) = row
       i += 1
     }
@@ -247,21 +249,20 @@ object ScanTurn {
     val len = text.numBytes()
     val scr = ExtractIoCs.tlScratch.get()
     val buf = ExtractIoCs.copyToScratch(scr, text)
-    val iocs = scanner.scanInto(buf, len, scr.iocs, scr.scan)
+    val sp = scanner.scanSpans(buf, len, scr.scan)
     // the turn's rows accumulate in the grow-only scratch buffer and are
-    // copied to exact size at the end
+    // copied to exact size at the end; UTF8Strings are built only for the
+    // candidates that hit
     var rows = scr.rows
     var nRows = 0
     var i = 0
-    while (i < iocs.length) {
-      val m = iocs(i)
-      val ip = isIp(m)
-      val nHits = probe(scr, dbs, m.value, ip, m.indicator_type == T.Ipv6)
+    while (i < sp.n) {
+      val nHits = probe(scr, dbs, sp, i, buf)
       if (nHits > 0) {
-        val tpe = typeInterned.get(m.indicator_type)
-        val valueU8 = valueBytes(scr, buf, m)
-        val matchedU8 = matchedBytes(scr, m, valueU8)
-        val matchType = if (ip) IP else PATTERN
+        val tpe = typeInterned(sp.kind(i))
+        val matchedU8 = ExtractIoCs.internSpan(scr, buf, sp.start(i), sp.end(i))
+        val valueU8 = ExtractIoCs.valueOf(scr, sp, i, matchedU8)
+        val matchType = if (isIp(sp.kind(i))) IP else PATTERN
         if (nRows + nHits > rows.length) {
           rows = Array.copyOf(rows, Integer.highestOneBit(nRows + nHits) * 2)
           scr.rows = rows
@@ -272,8 +273,8 @@ object ScanTurn {
           r.update(0, tpe)
           r.update(1, valueU8)
           r.update(2, matchedU8)
-          r.update(3, m.span_start)
-          r.update(4, m.span_end)
+          r.update(3, sp.start(i))
+          r.update(4, sp.end(i))
           r.update(5, scr.hitDb(k))
           r.update(6, scr.hitEntry(k))
           r.update(7, scr.hitPrefix(k))

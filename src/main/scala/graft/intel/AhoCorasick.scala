@@ -1,18 +1,24 @@
 package graft.intel
 
-/** Aho-Corasick multi-pattern substring automaton over chars — the
+/** Aho-Corasick multi-pattern substring automaton over bytes — the
   * prefilter core of the paraglob structure (reference:
   * crates/matchy-paraglob, which compiles pattern meta-words into an AC
   * automaton and glob-verifies only candidate patterns; SURVEY.md §4.1).
+  * Words and texts are UTF-8 ([[ProbeKey]] encoding), so the walk runs on a
+  * candidate's bytes where they lie.
   *
   * Build: trie + BFS fail links, per-node output lists merged through the
   * fail chain (so probing never walks fail links for outputs). Probe:
   * goto/fail walk, O(text + matches).
   *
-  * Transitions live in one open-addressing long->int table keyed by
-  * (node << 32 | char) — no per-node maps, no boxing on the probe path.
+  * The root's transitions are one dense 256-entry row: most bytes of a
+  * text start no word, so the walk sits at the root and a step there is
+  * one array read. The other nodes' transitions live in one
+  * open-addressing long->int table keyed by (node << 8 | byte) — no
+  * per-node maps, no boxing on the probe path.
   */
 final class AhoCorasick private (
+    root: Array[Int],
     keys: Array[Long],
     vals: Array[Int],
     mask: Int,
@@ -21,37 +27,38 @@ final class AhoCorasick private (
     val nWords: Int
 ) extends Serializable {
 
-  @inline private def step(state: Int, c: Char): Int = {
+  @inline private def step(state: Int, c: Int): Int = {
     var s = state
-    while (true) {
-      val key = (s.toLong << 32) | c.toLong
-      var idx = (java.lang.Long.hashCode(key * 0x9e3779b97f4a7c15L)) & mask
-      var found = -1
-      var probing = true
-      while (probing) {
-        val k = keys(idx)
-        if (k == key) { found = vals(idx); probing = false }
-        else if (k == -1L) probing = false
-        else idx = (idx + 1) & mask
+    while (s != 0) {
+      val key = (s.toLong << 8) | c
+      var idx = java.lang.Long.hashCode(key * 0x9e3779b97f4a7c15L) & mask
+      while (keys(idx) != -1L) {
+        if (keys(idx) == key) return vals(idx)
+        idx = (idx + 1) & mask
       }
-      if (found >= 0) return found
-      if (s == 0) return 0
       s = fail(s)
     }
-    0
+    root(c)
   }
 
-  /** Walk `text`, stamping found word ids into `seen` with `gen` (a
-    * generation-stamped scratch: seen(w) == gen means found). Returns the
-    * number of DISTINCT words found and appends their ids to `foundIds`.
+  /** Walk text[from, from + len), stamping found word ids into `seen` with
+    * `gen` (a generation-stamped scratch: seen(w) == gen means found).
+    * Returns the number of DISTINCT words found and appends their ids to
+    * `foundIds`.
     */
-  def findWords(text: String, seen: Array[Int], gen: Int,
-      foundIds: Array[Int]): Int = {
+  def findWords(text: Array[Byte], from: Int, len: Int, seen: Array[Int],
+      gen: Int, foundIds: Array[Int]): Int = {
     var n = 0
     var state = 0
-    var i = 0
-    while (i < text.length) {
-      state = step(state, text.charAt(i))
+    var i = from
+    val end = from + len
+    while (i < end) {
+      if (state == 0) {
+        // at the root: skip the bytes that start no word, one read each
+        while (i < end && root(text(i) & 0xff) == 0) i += 1
+        if (i == end) return n
+      }
+      state = step(state, text(i) & 0xff)
       val os = out(state)
       var j = 0
       while (j < os.length) {
@@ -71,13 +78,13 @@ final class AhoCorasick private (
 
 object AhoCorasick {
 
-  /** Build from distinct words; word i gets id i. */
-  def build(words: Array[String]): AhoCorasick = {
+  /** Build from distinct non-empty words; word i gets id i. */
+  def build(words: Array[Array[Byte]]): AhoCorasick = {
     // trie with per-node HashMap (construction only)
-    val trans = new scala.collection.mutable.ArrayBuffer[java.util.HashMap[Character, Integer]]()
+    val trans = new scala.collection.mutable.ArrayBuffer[java.util.HashMap[Integer, Integer]]()
     val outB = new scala.collection.mutable.ArrayBuffer[scala.collection.mutable.ArrayBuffer[Int]]()
     def newNode(): Int = {
-      trans += new java.util.HashMap[Character, Integer]()
+      trans += new java.util.HashMap[Integer, Integer]()
       outB += new scala.collection.mutable.ArrayBuffer[Int](1)
       trans.length - 1
     }
@@ -88,7 +95,7 @@ object AhoCorasick {
       var s = 0
       var i = 0
       while (i < word.length) {
-        val c = Character.valueOf(word.charAt(i))
+        val c = Integer.valueOf(word(i) & 0xff)
         val nxt = trans(s).get(c)
         s = if (nxt != null) nxt.intValue()
         else { val n = newNode(); trans(s).put(c, Integer.valueOf(n)); n }
@@ -115,20 +122,23 @@ object AhoCorasick {
         outB(v.intValue()) ++= outB(fv)
       }
     }
-    // flatten transitions into one open-addressing table
+    val root = new Array[Int](256)
+    trans(0).forEach { (c, v) => root(c.intValue()) = v.intValue() }
+    // flatten the other nodes' transitions into one open-addressing table
     var nEdges = 0
-    trans.foreach(m => nEdges += m.size())
+    var s = 1
+    while (s < n) { nEdges += trans(s).size(); s += 1 }
     var cap = 16
     while (cap < nEdges * 2) cap <<= 1
     val keys = Array.fill[Long](cap)(-1L)
     val vals = new Array[Int](cap)
     val mask = cap - 1
-    var s = 0
+    s = 1
     while (s < n) {
       val st = s
       trans(s).forEach { (c, v) =>
-        val key = (st.toLong << 32) | c.charValue().toLong
-        var idx = (java.lang.Long.hashCode(key * 0x9e3779b97f4a7c15L)) & mask
+        val key = (st.toLong << 8) | c.intValue()
+        var idx = java.lang.Long.hashCode(key * 0x9e3779b97f4a7c15L) & mask
         while (keys(idx) != -1L) idx = (idx + 1) & mask
         keys(idx) = key
         vals(idx) = v.intValue()
@@ -136,7 +146,7 @@ object AhoCorasick {
       s += 1
     }
     val out = outB.map(b => if (b.isEmpty) EMPTY else b.toArray).toArray
-    new AhoCorasick(keys, vals, mask, fail, out, words.length)
+    new AhoCorasick(root, keys, vals, mask, fail, out, words.length)
   }
 
   private val EMPTY = Array.emptyIntArray

@@ -103,24 +103,31 @@ object Glob {
       matchImpl(text, 0, segments, steps)
     }
 
-    /** Verify assuming every literal segment is ALREADY PROVEN a substring
-      * of `text` (the GlobIndex AC path establishes exactly that before
-      * calling — its meta-words are the patterns' literal segments), so the
-      * contains() prefilter is skipped. `hay` is the CI-folded text (== text
-      * in case-sensitive mode), letting the simple shapes reuse the fold the
-      * index already computed instead of folding per pattern.
+    /** Verdict of the simple shapes on the UTF-8 bytes of a text whose
+      * literal segments are ALL PROVEN substrings (the GlobIndex AC path
+      * establishes exactly that before calling — its meta-words are the
+      * patterns' literal segments), so no contains() prefilter runs and no
+      * String is needed. `hay` is the CI-folded encoding (the raw one in
+      * case-sensitive mode). Returns 1 on a match, 0 on none and -1 when
+      * the pattern is not a simple shape: the caller then decodes the text
+      * and runs [[matchesAnchored]]. Byte-level starts/ends agree with the
+      * char-level ones because simple-shape literals are surrogate-free
+      * and UTF-8 is self-synchronizing.
       */
-    def matchesLitsProven(text: String, hay: String): Boolean = {
-      if (isPureLiteral) return true
-      shape match {
+    def provenShape(hay: Array[Byte], from: Int, len: Int): Int = {
+      if (isPureLiteral) return 1
+      val ok = shape match {
         case 1 => true // *lit*: substring presence IS the match
-        case 2 => hay.startsWith(shapeLits(0))
-        case 3 => hay.endsWith(shapeLits(0))
-        case 4 => hay.length >= shapeLits(0).length + shapeLits(1).length &&
-          hay.startsWith(shapeLits(0)) && hay.endsWith(shapeLits(1))
-        case _ => matchImpl(text, 0, segments, new Steps(100000))
+        case 2 => startsWith(hay, from, len, shapeBytes(0))
+        case 3 => endsWith(hay, from, len, shapeBytes(0))
+        case 4 => len >= shapeBytes(0).length + shapeBytes(1).length &&
+          startsWith(hay, from, len, shapeBytes(0)) &&
+          endsWith(hay, from, len, shapeBytes(1))
+        case _ => return -1
       }
+      if (ok) 1 else 0
     }
+    private val shapeBytes: Array[Array[Byte]] = shapeLits.map(ProbeKey.encode)
 
     private def matchImpl(text: String, pos0: Int, segs: List[Segment],
         steps: Steps): Boolean = {
@@ -188,6 +195,15 @@ object Glob {
   }
 
   private final class Steps(var n: Int)
+
+  private def startsWith(b: Array[Byte], from: Int, len: Int,
+      lit: Array[Byte]): Boolean =
+    len >= lit.length && ProbeKey.equal(b, from, lit, 0, lit.length)
+
+  private def endsWith(b: Array[Byte], from: Int, len: Int,
+      lit: Array[Byte]): Boolean =
+    len >= lit.length &&
+      ProbeKey.equal(b, from + len - lit.length, lit, 0, lit.length)
 
   @inline private def asciiLowerCp(c: Int): Int =
     if (c >= 'A' && c <= 'Z') c + 32 else c

@@ -56,7 +56,7 @@ object Cidr {
     if (slash < 0) {
       val v4 = parseV4(key)
       if (v4 >= 0)
-        return Cidr(0L, 0x0000ffff00000000L | v4, 96 + 32, isV4 = true)
+        return Cidr(0L, V4Mapped | v4, 96 + 32, isV4 = true)
       val g = Ipv6Format.parse(key)
       if (g != null) return fromGroups(g, 128, isV4 = false)
       null
@@ -69,7 +69,7 @@ object Cidr {
       val v4 = parseV4(addrStr)
       if (v4 >= 0) {
         if (p > 32) return null
-        return Cidr(0L, 0x0000ffff00000000L | v4, 96 + p, isV4 = true)
+        return Cidr(0L, V4Mapped | v4, 96 + p, isV4 = true)
       }
       val g = Ipv6Format.parse(addrStr)
       if (g != null && p <= 128) return fromGroups(g, p, isV4 = false)
@@ -86,7 +86,10 @@ object Cidr {
     Cidr(hi, lo, prefixLen, isV4)
   }
 
-  def v4ToUnified(v4: Long): (Long, Long) = (0L, 0x0000ffff00000000L | v4)
+  /** The v4-mapped bits of an IPv4 address's unified `lo` (::ffff:0:0/96). */
+  val V4Mapped = 0x0000ffff00000000L
+
+  def v4ToUnified(v4: Long): (Long, Long) = (0L, V4Mapped | v4)
 
   /** True when this CIDR's range intersects the v4-mapped block
     * ::ffff:0:0/96 — i.e. some IPv4 candidate (which LpmIndex looks up at
@@ -104,7 +107,7 @@ object Cidr {
     // ::ffff:0:1/96 (which contains the whole v4-mapped block) as
     // non-intersecting and drop every IPv4 match under the prescreen
     if (c.prefixLen <= 96)
-      mask(0L, 0x0000ffff00000000L, c.prefixLen) ==
+      mask(0L, V4Mapped, c.prefixLen) ==
         mask(c.hi, c.lo, c.prefixLen)
     else c.hi == 0L && (c.lo >>> 32) == 0x0000ffffL
 
@@ -127,16 +130,18 @@ object Cidr {
   */
 final class LongPairIntMap private (capacity: Int) extends Serializable {
   private val mask = capacity - 1
+  private val shift = 64 - Integer.numberOfTrailingZeros(capacity)
   private val his = new Array[Long](capacity)
   private val los = new Array[Long](capacity)
   private val vals = new Array[Int](capacity)
   private val used = new Array[Boolean](capacity)
 
-  @inline private def slot(hi: Long, lo: Long): Int = {
-    var h = hi * -0x61c8864680b583ebL ^ lo // golden-ratio mix
-    h ^= (h >>> 32)
-    (h.toInt * -1640531527) & mask // Fibonacci scramble
-  }
+  // the HIGH bits of a multiplicative mix: they depend on every key bit.
+  // A CIDR key is all zeros below its prefix, and the low bits of a
+  // product see only the low bits of its input (they would put a feed's
+  // 1,667 /24s on 16 of 4,096 home slots)
+  @inline private def slot(hi: Long, lo: Long): Int =
+    (((hi * -0x61c8864680b583ebL) ^ lo) * -0x61c8864680b583ebL >>> shift).toInt
 
   def put(hi: Long, lo: Long, v: Int): Unit = {
     var i = slot(hi, lo)
@@ -153,6 +158,18 @@ final class LongPairIntMap private (capacity: Int) extends Serializable {
     }
     -1
   }
+
+  /** Longest run of occupied slots (wrapping): what a miss can walk. */
+  private[intel] def longestRun: Int = {
+    var best = 0
+    var run = 0
+    var i = 0
+    while (i < 2 * capacity) { // twice round, for a run across the end
+      if (used(i & mask)) { run += 1; best = math.max(best, run) } else run = 0
+      i += 1
+    }
+    math.min(best, capacity)
+  }
 }
 
 object LongPairIntMap {
@@ -167,15 +184,16 @@ object LongPairIntMap {
   * executors. Most-specific prefix wins regardless of insert order
   * (reference matchy-ip-trie builder semantics, lib.rs:88-100, 233-252).
   * Probe = one hash lookup per distinct prefix length, longest first —
-  * O(distinct lengths) per candidate, allocation-free on miss.
+  * O(distinct lengths) per candidate, allocation-free. A hit is one packed
+  * long, (entryIdx << 32) | prefixLen ([[LpmIndex.pack]]); -1 is a miss.
   */
 final class LpmIndex private (
     lengths: Array[Int], // distinct prefix lengths, descending
     maps: Array[LongPairIntMap]
 ) extends Serializable {
 
-  /** Returns (entryIdx, unifiedPrefixLen) or null. */
-  def lookup(hi: Long, lo: Long): (Int, Int) = {
+  /** Packed hit for a unified 128-bit address, unified prefix length. */
+  def lookup(hi: Long, lo: Long): Long = {
     var i = 0
     while (i < lengths.length) {
       val len = lengths(i)
@@ -188,33 +206,54 @@ final class LpmIndex private (
         if (len > 64) lo & (-1L << (128 - len))
         else 0L
       val hit = maps(i).get(mh, ml)
-      if (hit >= 0) return (hit, len)
+      if (hit >= 0) return LpmIndex.pack(hit, len)
       i += 1
     }
-    null
+    -1L
+  }
+
+  /** Packed hit for a 32-bit IPv4 address (as from [[Cidr.parseV4]]),
+    * reporting the v4 prefix length.
+    */
+  def lookupV4(addr: Long): Long = {
+    val p = lookup(0L, Cidr.V4Mapped | addr)
+    if (p < 0) p
+    else LpmIndex.pack(LpmIndex.entryOf(p), math.max(0, LpmIndex.prefixOf(p) - 96))
+  }
+
+  /** Packed hit for an IPv6 address given as its 8 groups. */
+  def lookupV6(groups: Array[Int]): Long = {
+    val c = Cidr.fromGroups(groups, 128, isV4 = false)
+    lookup(c.hi, c.lo)
   }
 
   /** LPM for a canonical dotted-quad string; reports v4 prefix length. */
   def lookupV4(value: String): (Int, Int) = {
     val v4 = Cidr.parseV4(value)
-    if (v4 < 0) return null
-    val (hi, lo) = Cidr.v4ToUnified(v4)
-    val r = lookup(hi, lo)
-    if (r == null) null else (r._1, math.max(0, r._2 - 96))
+    if (v4 < 0) null else LpmIndex.unpack(lookupV4(v4))
   }
 
   /** LPM for a canonical IPv6 string; reports v6 prefix length. */
   def lookupV6(value: String): (Int, Int) = {
     val g = Ipv6Format.parse(value)
-    if (g == null) return null
-    val c = Cidr.fromGroups(g, 128, isV4 = false)
-    lookup(c.hi, c.lo)
+    if (g == null) null else LpmIndex.unpack(lookupV6(g))
   }
 
   def isEmpty: Boolean = lengths.isEmpty
+
+  private[intel] def longestRun: Int =
+    if (maps.isEmpty) 0 else maps.map(_.longestRun).max
 }
 
 object LpmIndex {
+  def pack(entryIdx: Int, prefixLen: Int): Long =
+    (entryIdx.toLong << 32) | prefixLen
+  def entryOf(packed: Long): Int = (packed >>> 32).toInt
+  def prefixOf(packed: Long): Int = packed.toInt
+  /** (entryIdx, prefixLen), or null for a miss. */
+  def unpack(packed: Long): (Int, Int) =
+    if (packed < 0) null else (entryOf(packed), prefixOf(packed))
+
   def build(cidrs: Seq[(Cidr, Int)]): LpmIndex = {
     val byLen = cidrs.groupBy(_._1.prefixLen).toSeq.sortBy(-_._1)
     val lengths = byLen.map(_._1).toArray
@@ -232,52 +271,134 @@ object LpmIndex {
 
 /** Exact-literal index (reference matchy-literal-hash semantics: key
   * normalized to lowercase iff case-insensitive, verified by full equality;
-  * lib.rs:162-166, 469-473).
+  * lib.rs:162-166, 469-473), as one flat open-addressing table over the
+  * keys' UTF-8 bytes — the reference's layout (a 64-bit hash of the bytes,
+  * XXH64 there and [[ProbeKey.hash]] here, and linear probing; PAPER.md
+  * §0).
+  *
+  * Each slot is one long: a 32-bit fingerprint (the hash's low half) and
+  * the key number + 1 (0 = empty); the home slot comes from the hash's
+  * high bits. The distinct keys' bytes lie back to back in one arena, and
+  * a fingerprint match is confirmed by an exact byte compare. Load factor
+  * <= 0.5, build-time inserts only.
+  *
+  * Case-insensitive keys are stored as `toLowerCase(Locale.ROOT)`. An
+  * all-ASCII probe is folded A-Z -> a-z, which is that lowercase; a probe
+  * with any non-ASCII byte is lowercased through its String, so results
+  * equal a lookup of `value.toLowerCase(Locale.ROOT)` in a String map.
   */
 final class LiteralIndex private (
-    map: java.util.HashMap[String, Array[Int]],
+    slots: Array[Long],
+    shift: Int,
+    arena: Array[Byte],
+    offsets: Array[Int], // key k = arena[offsets(k), offsets(k + 1))
+    ids: Array[Array[Int]], // entry indices of key k, in feed order
+    hashMask: Long, // -1 except where a spec forces hash collisions
     val caseInsensitive: Boolean
 ) extends Serializable {
-  def lookup(value: String): Array[Int] = {
-    val key = if (caseInsensitive)
-      value.toLowerCase(java.util.Locale.ROOT) else value
-    val r = map.get(key)
-    if (r == null) LiteralIndex.empty else r
+
+  def lookup(value: String): Array[Int] = lookup(new ProbeKey().set(value))
+
+  def lookup(key: ProbeKey): Array[Int] =
+    if (ids.length == 0) LiteralIndex.empty
+    else if (!caseInsensitive) probe(key.bytes, key.from, key.len, key.hash)
+    else if (key.foldAscii()) probe(key.lower, 0, key.len, key.lowerHash)
+    else {
+      val b = ProbeKey.encode(key.string.toLowerCase(java.util.Locale.ROOT))
+      probe(b, 0, b.length, ProbeKey.hash(b, 0, b.length))
+    }
+
+  private def probe(b: Array[Byte], from: Int, len: Int,
+      hash: Long): Array[Int] = {
+    val h = hash & hashMask
+    val fp = h.toInt
+    val mask = slots.length - 1
+    var i = (h >>> shift).toInt
+    while (true) {
+      val e = slots(i)
+      if (e == 0L) return LiteralIndex.empty
+      if ((e >>> 32).toInt == fp) {
+        val k = e.toInt - 1
+        val off = offsets(k)
+        if (offsets(k + 1) - off == len && ProbeKey.equal(arena, off, b, from, len))
+          return ids(k)
+      }
+      i = (i + 1) & mask
+    }
+    LiteralIndex.empty
   }
-  def isEmpty: Boolean = map.isEmpty
-  def size: Int = map.size
+
+  def isEmpty: Boolean = ids.length == 0
+  def size: Int = ids.length
 }
 
 object LiteralIndex {
   private val empty = Array.emptyIntArray
+
   def build(literals: Seq[(String, Int)], caseInsensitive: Boolean)
-      : LiteralIndex = {
-    val m = new java.util.HashMap[String, Array[Int]](literals.size * 2)
+      : LiteralIndex = build(literals, caseInsensitive, -1L)
+
+  /** `hashMask` narrows every key's hash (specs pass a small mask to force
+    * fingerprint and home-slot collisions).
+    */
+  private[intel] def build(literals: Seq[(String, Int)],
+      caseInsensitive: Boolean, hashMask: Long): LiteralIndex = {
+    val keyOf = new java.util.HashMap[String, Integer]()
+    val keys = new mutable.ArrayBuffer[Array[Byte]]()
+    val ids = new mutable.ArrayBuffer[mutable.ArrayBuffer[Int]]()
     literals.foreach { case (lit, idx) =>
       val key = if (caseInsensitive)
         lit.toLowerCase(java.util.Locale.ROOT) else lit
-      val prev = m.get(key)
-      m.put(key, if (prev == null) Array(idx) else prev :+ idx)
+      val k = keyOf.get(key)
+      if (k != null) ids(k.intValue()) += idx
+      else {
+        keyOf.put(key, Integer.valueOf(keys.length))
+        keys += ProbeKey.encode(key)
+        ids += mutable.ArrayBuffer(idx)
+      }
     }
-    new LiteralIndex(m, caseInsensitive)
+    val offsets = new Array[Int](keys.length + 1)
+    var k = 0
+    while (k < keys.length) { offsets(k + 1) = offsets(k) + keys(k).length; k += 1 }
+    val arena = new Array[Byte](offsets(keys.length))
+    k = 0
+    while (k < keys.length) {
+      System.arraycopy(keys(k), 0, arena, offsets(k), keys(k).length); k += 1
+    }
+    var cap = 8
+    while (cap < keys.length * 2) cap <<= 1
+    val shift = 64 - Integer.numberOfTrailingZeros(cap)
+    val slots = new Array[Long](cap)
+    k = 0
+    while (k < keys.length) {
+      val h = ProbeKey.hash(keys(k), 0, keys(k).length) & hashMask
+      var i = (h >>> shift).toInt
+      while (slots(i) != 0L) i = (i + 1) & (cap - 1)
+      slots(i) = (h << 32) | (k + 1)
+      k += 1
+    }
+    new LiteralIndex(slots, shift, arena, offsets, ids.map(_.toArray).toArray,
+      hashMask, caseInsensitive)
   }
 }
 
 /** Glob pattern set with paraglob semantics: per query, returns the sorted,
   * deduplicated entry indices of all matching patterns
   * (paraglob_offset.rs:1028-1182). Pure-literal patterns match as
-  * substring; globs are anchored; each pattern carries a longest-literal
-  * contains() prefilter.
+  * substring; globs are anchored.
   */
 final class GlobIndex private (
     patterns: Array[Glob.GlobPattern],
     entryIdx: Array[Int],
     ci: Boolean,
     // paraglob structure: AC automaton over the distinct literal meta-words
-    // of all patterns; a pattern is a CANDIDATE only when every one of its
-    // meta-words occurs in the probe text (necessary condition — literal
-    // segments must appear for the glob to match), then glob-verified.
-    // Patterns with no literal segment are always candidates.
+    // of all patterns (UTF-8, ASCII-folded in CI mode); a pattern is a
+    // CANDIDATE only when every one of its meta-words occurs in the probe
+    // text (necessary condition — literal segments must appear for the
+    // glob to match), then verified. Patterns with no literal segment are
+    // always candidates, and so are patterns with an unpaired surrogate in
+    // a literal (ProbeKey.hasUnpairedSurrogate: its bytes can miss a
+    // char-level occurrence).
     ac: AhoCorasick,
     wordsOfPattern: Array[Array[Int]],
     patternsOfWord: Array[Array[Int]],
@@ -288,54 +409,50 @@ final class GlobIndex private (
   // is a primitive accumulation buffer — the previous ArrayBuffer[Int]
   // boxed every matched id and its toArray unboxed them back (~7% of scan
   // CPU in the JFR profile)
-  @transient private lazy val scratch =
-    new ThreadLocal[(Array[Int], Array[Int], Array[Int], Array[Int], Array[Int])] {
-      override def initialValue() = (
-        new Array[Int](if (ac == null) 0 else ac.nWords), // seen words (gen)
-        new Array[Int](if (ac == null) 0 else ac.nWords), // found word ids
-        new Array[Int](patterns.length), // pattern seen (gen)
-        new Array[Int](1), // generation counter
-        new Array[Int](math.max(4, patterns.length))) // hit ids
-    }
+  private[intel] final class Scratch {
+    val seenW = new Array[Int](if (ac == null) 0 else ac.nWords) // gen stamps
+    val foundW = new Array[Int](if (ac == null) 0 else ac.nWords)
+    val seenP = new Array[Int](patterns.length) // gen stamps
+    var gen = 0
+    val hits = new Array[Int](math.max(4, patterns.length))
+  }
+  /** Probe scratch for one thread (IntelDb keeps one in its thread state). */
+  private[intel] def newScratch: Scratch = new Scratch
+  @transient private lazy val scratch = ThreadLocal.withInitial(() => new Scratch)
 
-  def findAll(value: String): Array[Int] = {
+  def findAll(value: String): Array[Int] = findAll(new ProbeKey().set(value))
+
+  def findAll(key: ProbeKey): Array[Int] = findAll(key, scratch.get())
+
+  private[intel] def findAll(key: ProbeKey, s: Scratch): Array[Int] = {
     if (patterns.length == 0) return Array.emptyIntArray
-    val (seenW, foundW, seenP, genBox, hits) = scratch.get()
+    val hits = s.hits
     var nOut = 0
-    @inline def tryPattern(p: Int): Unit =
-      if (patterns(p).matches(value)) {
-        hits(nOut) = entryIdx(p) // bounded by patterns.length
-        nOut += 1
-      }
-    // AC-path verifier: all of p's literal segments are proven substrings,
-    // so the per-pattern contains() prefilter (and its CI re-fold) is skipped
-    @inline def tryPatternProven(p: Int, hay: String): Unit =
-      if (patterns(p).matchesLitsProven(value, hay)) {
-        hits(nOut) = entryIdx(p)
-        nOut += 1
-      }
     if (ac == null) {
       // no meta-words anywhere: verify all (degenerate tiny sets)
       var i = 0
-      while (i < patterns.length) { tryPattern(i); i += 1 }
+      while (i < patterns.length) { nOut = tryPattern(i, key, hits, nOut); i += 1 }
     } else {
-      if (genBox(0) == Int.MaxValue) { // wrap: clear stamps, restart
-        java.util.Arrays.fill(seenW, 0)
-        java.util.Arrays.fill(seenP, 0)
-        genBox(0) = 0
+      if (s.gen == Int.MaxValue) { // wrap: clear stamps, restart
+        java.util.Arrays.fill(s.seenW, 0)
+        java.util.Arrays.fill(s.seenP, 0)
+        s.gen = 0
       }
-      genBox(0) += 1
-      val gen = genBox(0)
-      val hay = if (ci) Glob.asciiLower(value) else value
-      val nFound = ac.findWords(hay, seenW, gen, foundW)
+      s.gen += 1
+      val gen = s.gen
+      val seenW = s.seenW
+      if (ci) key.foldAscii()
+      val hay = if (ci) key.lower else key.bytes
+      val off = if (ci) 0 else key.from
+      val nFound = ac.findWords(hay, off, key.len, seenW, gen, s.foundW)
       var f = 0
       while (f < nFound) {
-        val pats = patternsOfWord(foundW(f))
+        val pats = patternsOfWord(s.foundW(f))
         var k = 0
         while (k < pats.length) {
           val p = pats(k)
-          if (seenP(p) != gen) {
-            seenP(p) = gen
+          if (s.seenP(p) != gen) {
+            s.seenP(p) = gen
             // candidate iff ALL of p's words were found
             val ws = wordsOfPattern(p)
             var all = true
@@ -344,7 +461,15 @@ final class GlobIndex private (
               if (seenW(ws(j)) != gen) all = false
               j += 1
             }
-            if (all) tryPatternProven(p, hay)
+            // every literal segment is a proven substring: the simple
+            // shapes decide on the bytes, the rest on the decoded text
+            if (all) {
+              val v = patterns(p).provenShape(hay, off, key.len)
+              if (v > 0 || (v < 0 && patterns(p).matchesAnchored(key.string))) {
+                hits(nOut) = entryIdx(p)
+                nOut += 1
+              }
+            }
           }
           k += 1
         }
@@ -352,7 +477,7 @@ final class GlobIndex private (
       }
       var a = 0
       while (a < alwaysCandidates.length) {
-        tryPattern(alwaysCandidates(a))
+        nOut = tryPattern(alwaysCandidates(a), key, hits, nOut)
         a += 1
       }
     }
@@ -370,6 +495,13 @@ final class GlobIndex private (
       arr
     }
   }
+
+  // verify p in full; hits grow to at most patterns.length
+  private def tryPattern(p: Int, key: ProbeKey, hits: Array[Int],
+      nOut: Int): Int =
+    if (patterns(p).matches(key.string)) { hits(nOut) = entryIdx(p); nOut + 1 }
+    else nOut
+
   def isEmpty: Boolean = patterns.isEmpty
 }
 
@@ -385,7 +517,7 @@ object GlobIndex {
     }
     val patterns = ps.toArray
     // meta-words: the literal segments of each pattern (lowercased in CI
-    // mode to match the lowercased probe text)
+    // mode to match the folded probe bytes)
     val wordId = new java.util.HashMap[String, Integer]()
     val wordsB = new mutable.ArrayBuffer[String]()
     val wordsOfPattern = new Array[Array[Int]](patterns.length)
@@ -395,8 +527,9 @@ object GlobIndex {
       val lits = patterns(p).segments.collect { case Glob.Lit(s) => s }
         .map(s => if (caseInsensitive) Glob.asciiLower(s) else s)
         .distinct
-      if (lits.isEmpty) { always += p; wordsOfPattern(p) = Array.emptyIntArray }
-      else wordsOfPattern(p) = lits.map { w =>
+      if (lits.isEmpty || lits.exists(ProbeKey.hasUnpairedSurrogate)) {
+        always += p; wordsOfPattern(p) = Array.emptyIntArray
+      } else wordsOfPattern(p) = lits.map { w =>
         val existing = wordId.get(w)
         if (existing != null) existing.intValue()
         else {
@@ -408,7 +541,8 @@ object GlobIndex {
       }.toArray
       p += 1
     }
-    val ac = if (wordsB.isEmpty) null else AhoCorasick.build(wordsB.toArray)
+    val ac = if (wordsB.isEmpty) null
+      else AhoCorasick.build(wordsB.map(ProbeKey.encode).toArray)
     val patternsOfWord = Array.fill(wordsB.length)(
       new mutable.ArrayBuffer[Int](2))
     var q = 0
@@ -479,24 +613,21 @@ final class IntelDb(
   // reference's Relaxed atomics give. Process-local by design, exactly
   // like the reference's — cluster-wide A1-A6 rates ride `observe()`
   // metrics in ScanJob, not this API.
-  // Direct-mapped (not chained-HashMap) memo: slot = spread(hashCode) &
-  // mask, overwrite on collision. A cache may evict, so collisions cost a
-  // recompute, never correctness — and the structure has no resizes, no
-  // treeified bins (JFR showed patterned feed values treeifying
-  // java.util.HashMap bins at ~4% of pipeline samples), no flush
-  // bookkeeping, and O(1) worst-case probes.
-  private final class ThreadState {
-    val strKeys = new Array[String](IntelDb.MemoSlots)
-    val strVals = new Array[Array[Int]](IntelDb.MemoSlots)
-    // one cache per IP family: the caller-supplied itype is not guaranteed
-    // to agree with the value's grammar (the public lookup expressions
-    // accept arbitrary (value, indicator_type) pairs), and a wrong-family
-    // probe memoized under a family-less key would poison later
-    // correct-family lookups into order-dependent wrong results
-    val ipKeys: Array[Array[String]] =
-      Array.fill(2)(new Array[String](IntelDb.MemoSlots))
-    val ipVals: Array[Array[(Int, Int)]] =
-      Array.fill(2)(new Array[(Int, Int)](IntelDb.MemoSlots))
+  // Direct-mapped (not chained-HashMap) memo, overwrite on collision. A
+  // cache may evict, so collisions cost a recompute, never correctness —
+  // and the structure has no resizes, no treeified bins (JFR showed
+  // patterned feed values treeifying java.util.HashMap bins at ~4% of
+  // pipeline samples), no flush bookkeeping, and O(1) worst-case probes.
+  // The string memo is keyed by the key's bytes and their 64-bit hash:
+  // each slot keeps (hash, length + 1) side by side, compared before the
+  // key bytes, and a stored miss copies its key bytes — up to KeyStride
+  // of them inline at a fixed offset of one shared array (few cache lines
+  // a probe, no allocation), longer ones into the slot's own buffer. The
+  // IP memo is keyed by the numeric address: (address, result) side by
+  // side for IPv4, (hi, lo, result) for IPv6, allocated on the first IPv6
+  // probe. Only the counters outlive their thread (`stats` reads them);
+  // a finished thread's memo goes with its ThreadLocal entry.
+  private final class Counters {
     var ipLookups = 0L
     var ipMemoHits = 0L
     var ipMatches = 0L
@@ -504,11 +635,28 @@ final class IntelDb(
     var strMemoHits = 0L
     var strMatches = 0L
   }
-  @transient private lazy val allStates =
-    new java.util.concurrent.ConcurrentLinkedQueue[ThreadState]()
+  private final class ThreadState {
+    val n = new Counters
+    val key = new ProbeKey // for the String entry points
+    val glob = globs.newScratch
+    val strMeta = new Array[Long](2 * IntelDb.MemoSlots) // 0 length = empty
+    val strBytes = new Array[Byte](IntelDb.MemoSlots * IntelDb.KeyStride)
+    val strLong = new Array[Array[Byte]](IntelDb.MemoSlots)
+    val strVals = new Array[Array[Int]](IntelDb.MemoSlots)
+    // one cache per IP family: the caller-supplied itype is not guaranteed
+    // to agree with the value's grammar (the public lookup expressions
+    // accept arbitrary (value, indicator_type) pairs), and a wrong-family
+    // probe memoized under a family-less key would poison later
+    // correct-family lookups into order-dependent wrong results. Results
+    // are packed LpmIndex hits; -1 = cached miss, IpEmpty = empty slot
+    val v4Memo: Array[Long] = IntelDb.ipMemo(2)
+    var v6Memo: Array[Long] = _
+  }
+  @transient private lazy val allCounters =
+    new java.util.concurrent.ConcurrentLinkedQueue[Counters]()
   @transient private lazy val threadState: ThreadLocal[ThreadState] =
     ThreadLocal.withInitial { () =>
-      val s = new ThreadState; allStates.add(s); s
+      val s = new ThreadState; allCounters.add(s.n); s
     }
 
   /** A8 snapshot: fold all threads' counters (this JVM, this db instance).
@@ -519,7 +667,7 @@ final class IntelDb(
   def stats: IntelDb.LookupStats = {
     var ipL = 0L; var ipH = 0L; var ipM = 0L
     var stL = 0L; var stH = 0L; var stM = 0L
-    val it = allStates.iterator()
+    val it = allCounters.iterator()
     while (it.hasNext) {
       val s = it.next()
       ipL += s.ipLookups; ipH += s.ipMemoHits; ipM += s.ipMatches
@@ -528,26 +676,59 @@ final class IntelDb(
     IntelDb.LookupStats(ipL, ipH, ipM, stL, stH, stM)
   }
 
-  /** IP-path lookup (L2): canonical string + family. Returns
+  /** IP-path lookup (L2) of a canonical string + family. Returns
     * (entryIdx, familyPrefixLen) or null.
     */
-  def lookupIp(value: String, isV6: Boolean): (Int, Int) = {
+  def lookupIp(value: String, isV6: Boolean): (Int, Int) =
+    LpmIndex.unpack(
+      if (isV6) lookupIpv6(Ipv6Format.parse(value))
+      else lookupIpv4(Cidr.parseV4(value)))
+
+  /** IP-path lookup of a 32-bit IPv4 address (negative = not an address:
+    * counted, never a hit). Returns the packed hit ([[LpmIndex.pack]],
+    * v4 prefix length) or -1. Memoized (L7).
+    */
+  def lookupIpv4(addr: Long): Long = {
     val st = threadState.get()
-    st.ipLookups += 1
-    val fam = if (isV6) 1 else 0
-    val slot = IntelDb.memoSlot(value)
-    val keys = st.ipKeys(fam)
-    if (value == keys(slot)) {
-      st.ipMemoHits += 1
-      val hit = st.ipVals(fam)(slot)
-      if (hit eq IntelDb.IpNotFound) return null
-      st.ipMatches += 1
-      return hit
+    st.n.ipLookups += 1
+    if (addr < 0) return -1L
+    val m = st.v4Memo
+    val at = 2 * IntelDb.ipSlot(0L, addr)
+    val cached = m(at + 1)
+    if (cached != IntelDb.IpEmpty && m(at) == addr) {
+      st.n.ipMemoHits += 1
+      if (cached >= 0) st.n.ipMatches += 1
+      return cached
     }
-    val r = if (isV6) lpm.lookupV6(value) else lpm.lookupV4(value)
-    keys(slot) = value
-    st.ipVals(fam)(slot) = if (r == null) IntelDb.IpNotFound else r
-    if (r != null) st.ipMatches += 1
+    val r = lpm.lookupV4(addr)
+    m(at) = addr
+    m(at + 1) = r
+    if (r >= 0) st.n.ipMatches += 1
+    r
+  }
+
+  /** IP-path lookup of an IPv6 address as its 8 groups (null = not an
+    * address). Returns the packed hit or -1. Memoized (L7).
+    */
+  def lookupIpv6(groups: Array[Int]): Long = {
+    val st = threadState.get()
+    st.n.ipLookups += 1
+    if (groups == null) return -1L
+    val c = Cidr.fromGroups(groups, 128, isV4 = false)
+    if (st.v6Memo == null) st.v6Memo = IntelDb.ipMemo(3)
+    val m = st.v6Memo
+    val at = 3 * IntelDb.ipSlot(c.hi, c.lo)
+    val cached = m(at + 2)
+    if (cached != IntelDb.IpEmpty && m(at + 1) == c.lo && m(at) == c.hi) {
+      st.n.ipMemoHits += 1
+      if (cached >= 0) st.n.ipMatches += 1
+      return cached
+    }
+    val r = lpm.lookup(c.hi, c.lo)
+    m(at) = c.hi
+    m(at + 1) = c.lo
+    m(at + 2) = r
+    if (r >= 0) st.n.ipMatches += 1
     r
   }
 
@@ -556,23 +737,48 @@ final class IntelDb(
     */
   def lookupString(value: String): Array[Int] = {
     val st = threadState.get()
-    st.strLookups += 1
-    val slot = IntelDb.memoSlot(value)
-    if (value == st.strKeys(slot)) {
-      st.strMemoHits += 1
+    lookupString(st, st.key.set(value))
+  }
+
+  /** String-path lookup of a key already in bytes (the scan's path). */
+  def lookupString(key: ProbeKey): Array[Int] =
+    lookupString(threadState.get(), key)
+
+  private def lookupString(st: ThreadState, key: ProbeKey): Array[Int] = {
+    st.n.strLookups += 1
+    val h = key.hash
+    val slot = IntelDb.strSlot(h)
+    val meta = st.strMeta
+    val inline = key.len <= IntelDb.KeyStride
+    if (meta(2 * slot) == h && meta(2 * slot + 1) == key.len + 1 &&
+      (if (inline) key.sameBytes(st.strBytes, slot * IntelDb.KeyStride, key.len)
+      else key.sameBytes(st.strLong(slot), 0, key.len))) {
+      st.n.strMemoHits += 1
       val hit = st.strVals(slot)
-      if (hit.length > 0) st.strMatches += 1
+      if (hit.length > 0) st.n.strMatches += 1
       return hit
     }
-    val lit = literals.lookup(value)
-    val glob = globs.findAll(value)
+    val lit = literals.lookup(key)
+    val glob = globs.findAll(key, st.glob)
     val r =
       if (glob.isEmpty) lit
       else if (lit.isEmpty) glob
       else lit ++ glob
-    st.strKeys(slot) = value
+    if (inline)
+      System.arraycopy(key.bytes, key.from, st.strBytes,
+        slot * IntelDb.KeyStride, key.len)
+    else {
+      var kb = st.strLong(slot)
+      if (kb == null || kb.length < key.len) {
+        kb = new Array[Byte](key.len)
+        st.strLong(slot) = kb
+      }
+      System.arraycopy(key.bytes, key.from, kb, 0, key.len)
+    }
+    meta(2 * slot) = h
+    meta(2 * slot + 1) = key.len + 1
     st.strVals(slot) = r
-    if (r.length > 0) st.strMatches += 1
+    if (r.length > 0) st.n.strMatches += 1
     r
   }
 
@@ -600,19 +806,44 @@ final class IntelDb(
 
 object IntelDb {
 
-  /** lookupIp miss sentinel for the L7 memo (a slot can't distinguish
-    * "cached null" from "absent" without a second flag). */
-  private val IpNotFound: (Int, Int) = (-1, -1)
+  /** Empty-slot marker of the L7 IP memo (a packed hit is >= 0, a cached
+    * miss -1). */
+  private val IpEmpty = Long.MinValue
 
-  /** L7 memo geometry: 16k direct-mapped slots per thread per path. */
+  /** L7 memo geometry: 16k direct-mapped slots per thread per path, and
+    * the key bytes a string slot holds inline (domains, emails and md5s
+    * mostly fit).
+    */
   private val MemoSlots = 16384
-  // package-visible so the memo spec can construct REAL slot collisions
-  // (a blind key flood provably never evicted the hot keys it meant to)
+  private val KeyStride = 32
+
+  /** An empty IP memo of `stride` longs per slot, result last. */
+  private def ipMemo(stride: Int): Array[Long] = {
+    val m = new Array[Long](stride * MemoSlots)
+    var s = 0
+    while (s < MemoSlots) { m(stride * s + stride - 1) = IpEmpty; s += 1 }
+    m
+  }
+  private val MemoShift = 64 - 14
+
+  private def strSlot(hash: Long): Int = hash.toInt & (MemoSlots - 1)
+
+  // the high bits of a multiplicative mix (see LongPairIntMap.slot)
+  private def ipSlot(hi: Long, lo: Long): Int =
+    (((hi * -0x61c8864680b583ebL) ^ lo) * -0x61c8864680b583ebL >>> MemoShift).toInt
+
+  /** The L7 slot a lookup of `value` takes: the IPv4 memo's for a dotted
+    * quad, the string memo's otherwise. Package-visible so the memo spec
+    * can construct REAL slot collisions (a blind key flood provably never
+    * evicted the hot keys it meant to).
+    */
   private[intel] def memoSlot(value: String): Int = {
-    // String.hashCode is cached in the String; spread the high bits like
-    // java.util.HashMap does so patterned feed values don't cluster slots
-    val h = value.hashCode
-    (h ^ (h >>> 16)) & (MemoSlots - 1)
+    val v4 = Cidr.parseV4(value)
+    if (v4 >= 0) ipSlot(0L, v4)
+    else {
+      val b = ProbeKey.encode(value)
+      strSlot(ProbeKey.hash(b, 0, b.length))
+    }
   }
 
   /** A8: per-process lookup statistics (the reference's DatabaseStats,

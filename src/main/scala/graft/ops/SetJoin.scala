@@ -65,27 +65,28 @@ object SetJoin {
     * from the JOIN KEYS without re-joining df — plus the plain token
     * array and set size. The exploded token table is staged ONCE
     * (it feeds the df aggregate AND the df-annotation join — unstaged,
-    * each consumer re-splits every document, the q31 lesson), and so
-    * is the result (it feeds the prefix explode and BOTH verify
-    * sides). Staging = [[Staging.stage]]: localCheckpoint by default,
-    * durable parquet when a staging dir is configured (round 6).
+    * each consumer re-splits every document, the q31 lesson) and
+    * released once the result is staged; the result is staged too (it
+    * feeds the prefix explode and BOTH verify sides). Staging =
+    * [[Staging.stage]]: localCheckpoint by default, durable parquet when
+    * a staging dir is configured (round 6).
     */
   private def stagedOrderedTokens(docs: DataFrame, idCol: String,
-      textCol: String): DataFrame = {
-    val tok = Staging.stage(docs
+      textCol: String): DataFrame =
+    Staging.using(docs
       .where(col(idCol).isNotNull && col(textCol).isNotNull)
       .select(col(idCol).as("doc_id"),
         explode(array_distinct(Decontaminate.tokens(col(textCol))))
-          .as("token")), "setjoin-tok")
-    val df = tok.groupBy("token").agg(count(lit(1)).as("df"))
-    Staging.stage(tok.join(df, "token")
-      .groupBy("doc_id")
-      .agg(sort_array(collect_list(struct(col("df"), col("token"))))
-        .as("ord"))
-      .select(col("doc_id"), col("ord"),
-        transform(col("ord"), s => s.getField("token")).as("toks"),
-        size(col("ord")).as("n")), "setjoin-ordered")
-  }
+          .as("token")), "setjoin-tok") { tok =>
+      val df = tok.groupBy("token").agg(count(lit(1)).as("df"))
+      Staging.stage(tok.join(df, "token")
+        .groupBy("doc_id")
+        .agg(sort_array(collect_list(struct(col("df"), col("token"))))
+          .as("ord"))
+        .select(col("doc_id"), col("ord"),
+          transform(col("ord"), s => s.getField("token")).as("toks"),
+          size(col("ord")).as("n")), "setjoin-ordered")
+    }
 
   /** Explode a staged frame's (df, token) structs — the first
     * `prefixLen(n)` of them, or all when `prefixLen` is None — into

@@ -1,7 +1,11 @@
 package graft.extract
 
+import graft.functions.ScanTurn
+import org.apache.spark.unsafe.types.UTF8String
+
 /** Micro-benchmark main (not a test): single-thread scanner throughput on
-  * fixture texts, to separate scanner cost from Spark overhead.
+  * fixture texts, to separate scanner cost from Spark overhead. Times the
+  * production scan (`scanSpans`: spans, no candidate Strings).
   * Run: sbt "Test/runMain graft.extract.ScannerBench"
   */
 object ScannerBench {
@@ -11,13 +15,15 @@ object ScannerBench {
     val bytes = texts.map(_.getBytes("UTF-8"))
     val totalBytes = bytes.map(_.length.toLong).sum
     val sc = IocScanner.default
+    val scr = new IocScanner.ScanScratch
+    def scan(s: IocScanner, b: Array[Byte]): Int = s.scanSpans(b, b.length, scr).n
     // warmup
     var found = 0L
-    bytes.foreach(b => found += sc.scan(b).length)
+    bytes.foreach(b => found += scan(sc, b))
     (1 to 2).foreach { _ =>
       found = 0
       val t0 = System.nanoTime()
-      bytes.foreach(b => found += sc.scan(b).length)
+      bytes.foreach(b => found += scan(sc, b))
       val dt = (System.nanoTime() - t0) / 1e9
       println(f"scan: $n rows, $totalBytes bytes, $dt%.3f s, " +
         f"${totalBytes / dt / 1e6}%.1f MB/s, ${n / dt}%.0f rows/s, $found iocs")
@@ -26,7 +32,6 @@ object ScannerBench {
     // per-byte loop (verbatim pre-round-6 body) vs the tight-run form now
     // in collectAnchors, same JVM, alternating — host drift hits both
     locally {
-      val scr = new IocScanner.ScanScratch
       val tbl = IocScanner.anchorClassTable
       def oldAnchors(b: Array[Byte], n: Int): Unit = {
         val tokens = scr.tokens; tokens.clear()
@@ -61,7 +66,6 @@ object ScannerBench {
       val none = new IocScanner(ScanConfig(domains = false, emails = false,
         ipv4 = false, ipv6 = false, hashes = false, bitcoin = false,
         ethereum = false, monero = false))
-      val sink = new scala.collection.mutable.ArrayBuffer[graft.model.Ioc](4)
       def runOld(): Double = {
         val t0 = System.nanoTime()
         bytes.foreach(b => oldAnchors(b, b.length))
@@ -69,7 +73,7 @@ object ScannerBench {
       }
       def runNew(): Double = {
         val t0 = System.nanoTime()
-        bytes.foreach(b => none.scanInto(b, b.length, sink, scr))
+        bytes.foreach(b => scan(none, b))
         (System.nanoTime() - t0) / 1e9
       }
       runOld(); runNew() // warm
@@ -104,10 +108,10 @@ object ScannerBench {
       for ((name, cfg) <- steps) {
         val s = new IocScanner(cfg)
         var f = 0L
-        bytes.foreach(b => f += s.scan(b).length) // warm
+        bytes.foreach(b => f += scan(s, b)) // warm
         val t0 = System.nanoTime()
         f = 0
-        bytes.foreach(b => f += s.scan(b).length)
+        bytes.foreach(b => f += scan(s, b))
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"cfg $name%-14s $dt%.3f s ${totalBytes / dt / 1e6}%6.1f MB/s ($f iocs)")
       }
@@ -127,31 +131,22 @@ object ScannerBench {
   }
 }
 
-/** scan + lookup microbench: the full per-row work without Spark. */
+/** scan + lookup microbench: the full per-row work without Spark — the
+  * production generator body (`ScanTurn.scanFlat`: spans, byte-keyed
+  * probes, rows only for hits); "hits" counts (candidate x database) rows.
+  */
 object LookupBench {
   def main(args: Array[String]): Unit = {
     val n = 100000
-    val texts = (0 until n).map(i => graft.pipeline.Fixtures.text(i.toLong))
-    val bytes = texts.map(_.getBytes("UTF-8"))
+    val texts = (0 until n).map(i =>
+      UTF8String.fromString(graft.pipeline.Fixtures.text(i.toLong)))
     val sc = IocScanner.default
-    val dbs = Seq(
+    val dbs = Array(
       graft.intel.IntelDb.build("threats", graft.pipeline.Fixtures.intelThreats),
       graft.intel.IntelDb.build("allowlist", graft.pipeline.Fixtures.intelAllowlist))
     def run(): Long = {
       var hits = 0L
-      bytes.foreach { b =>
-        val iocs = sc.scan(b)
-        var i = 0
-        while (i < iocs.length) {
-          val m = iocs(i)
-          dbs.foreach { db =>
-            if (m.indicator_type == "ipv4" || m.indicator_type == "ipv6") {
-              if (db.lookupIp(m.value, m.indicator_type == "ipv6") != null) hits += 1
-            } else hits += db.lookupString(m.value).length
-          }
-          i += 1
-        }
-      }
+      texts.foreach(t => hits += ScanTurn.scanFlat(sc, dbs, t).numElements())
       hits
     }
     run()
@@ -234,11 +229,12 @@ object DegradeProbe {
   }
 }
 
-/** Raw-thread scaling probe: scanner+lookup in N threads, no Spark. */
+/** Raw-thread scaling probe: scanner+lookup (`ScanTurn.scanFlat`) in N
+  * threads, no Spark. */
 object ThreadScaleProbe {
   def main(args: Array[String]): Unit = {
-    val texts = (0 until 200000).map(i => graft.pipeline.Fixtures.text(i.toLong))
-    val bytes = texts.map(_.getBytes("UTF-8")).toArray
+    val texts = (0 until 200000).map(i =>
+      UTF8String.fromString(graft.pipeline.Fixtures.text(i.toLong))).toArray
     val sc = IocScanner.default
     val dbs = Array(
       graft.intel.IntelDb.build("threats", graft.pipeline.Fixtures.intelThreats),
@@ -248,20 +244,8 @@ object ThreadScaleProbe {
       var r = 0
       while (r < reps) {
         var j = 0
-        while (j < bytes.length) {
-          val iocs = sc.scan(bytes(j))
-          var i = 0
-          while (i < iocs.length) {
-            val m = iocs(i)
-            var d = 0
-            while (d < dbs.length) {
-              if (m.indicator_type == "ipv4" || m.indicator_type == "ipv6") {
-                if (dbs(d).lookupIp(m.value, m.indicator_type == "ipv6") != null) hits += 1
-              } else hits += dbs(d).lookupString(m.value).length
-              d += 1
-            }
-            i += 1
-          }
+        while (j < texts.length) {
+          hits += ScanTurn.scanFlat(sc, dbs, texts(j)).numElements()
           j += 1
         }
         r += 1

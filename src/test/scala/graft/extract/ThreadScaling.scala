@@ -6,6 +6,7 @@ import java.util.concurrent.atomic.AtomicLong
 /** Pure-JVM thread-scaling probe (no Spark): raw scanner throughput at T
   * threads over deterministic fixture texts. Separates "the machine/JVM
   * stops scaling past N threads" from "Spark overhead stops scaling".
+  * Times the production scan (`scanSpans`, no candidate Strings).
   */
 object ThreadScaling {
   def run(threads: Int, seconds: Double): Double = {
@@ -14,14 +15,14 @@ object ThreadScaling {
     val total = new AtomicLong(0)
     val ts = (0 until threads).map { t =>
       new Thread(() => {
-        val out = new scala.collection.mutable.ArrayBuffer[graft.model.Ioc](8)
+        val scr = new IocScanner.ScanScratch
         var i = t.toLong * 10000000L
         var n = 0L
         var found = 0L
         while (System.nanoTime() < stop) {
           val text = Fixtures.text(i)
           val bytes = text.getBytes("UTF-8")
-          found += scanner.scanInto(bytes, bytes.length, out).length
+          found += scanner.scanSpans(bytes, bytes.length, scr).n
           i += 1; n += 1
         }
         require(found >= 0)

@@ -69,14 +69,16 @@ class StagingSpec extends AnyFunSuite {
 
   /** One op under the identity check: `run` builds its inputs in the
     * given session and returns the op's output; `wrote` names staged
-    * tables the durable run must leave behind; `check` adds per-op
-    * assertions on the (local) result. */
+    * tables the durable run must leave behind and `released` staged
+    * tables it must not; `check` adds per-op assertions on the (local)
+    * result. */
   private case class Op(name: String, run: SparkSession => DataFrame,
-      wrote: Seq[String] = Nil, check: Set[Row] => Unit = _ => ())
+      wrote: Seq[String] = Nil, released: Seq[String] = Nil,
+      check: Set[Row] => Unit = _ => ())
 
   private val ops = Seq(
     Op("jaccardJoin", s => SetJoin.jaccardJoin(docs(s), 500),
-      wrote = Seq("setjoin-tok", "setjoin-ordered")),
+      wrote = Seq("setjoin-ordered"), released = Seq("setjoin-tok")),
     Op("containmentJoin", s => SetJoin.containmentJoin(docs(s), 700)),
     Op("curate (incl. minhash banding + CC loop)", s => Curation.curate(
         docs(s),
@@ -147,6 +149,9 @@ class StagingSpec extends AnyFunSuite {
           assert(staged.exists(_.contains(w)),
             s"expected a staged $w table under $dir, found " +
               staged.mkString(", "))
+        for (r <- op.released)
+          assert(!staged.exists(_.contains(r)),
+            s"staged $r table left under $dir: " + staged.mkString(", "))
         out
       }
       assert(durable == local && local.nonEmpty)
