@@ -21,7 +21,7 @@ import java.security.MessageDigest
 object Checksums {
 
   // ---------------------------------------------------------------- base58
-  private val Base58Alphabet =
+  private[extract] val Base58Alphabet =
     "123456789ABCDEFGHJKLMNPQRSTUVWXYZabcdefghijkmnopqrstuvwxyz"
   private val base58Index: Array[Int] = {
     val idx = Array.fill(128)(-1)

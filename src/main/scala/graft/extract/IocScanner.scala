@@ -96,23 +96,41 @@ final class IocScanner(val config: ScanConfig) extends Serializable {
     // each swept the full byte range again (6 passes; fused is the single
     // biggest scanner win in the JFR profile).
     collectAnchors(bytes, n, scr)
-    if (config.domains) scanDomains(bytes, n, scr.dots, out)
+    if (config.domains) scanDomains(bytes, n, scr, out)
     if (config.ipv4) scanIpv4(bytes, n, scr.dots, out)
-    if (config.emails) scanEmails(bytes, n, scr.ats, out)
+    if (config.emails) scanEmails(bytes, n, scr, out)
     if (config.ipv6) scanIpv6(bytes, n, scr.dcolons, out)
     if (config.hashes) scanHashes(bytes, scr.tokens, out)
     if (config.bitcoin) scanBitcoin(bytes, scr.tokens, out)
     if (config.ethereum) scanEthereum(bytes, n, scr.zx, out)
     if (config.monero) scanMonero(bytes, scr.tokens, out)
+    scr.release()
     out
   }
 
   /** The fused anchor pass: token spans of maximal non-boundary runs
     * (reference find_word_boundaries_into, lib.rs:1742-1782), RESTRICTED
-    * to spans >= 26 bytes (the fixed-width consumers' floor — see the
-    * comment in the body), dot/at positions, "::" pair starts (all,
-    * including overlapping — the consumer applies the non-overlap skip),
-    * and "0x" starts (overlap impossible: b(i+1)=='x' excludes a '0').
+    * to spans >= 26 bytes (the fixed-width consumers' floor: hashes >= 32,
+    * bitcoin >= 26, monero >= 90 bytes; most tokens are short words),
+    * dot/at positions, "::" pair starts (all, including overlapping — the
+    * consumer applies the non-overlap skip), "0x" starts (overlap
+    * impossible: b(i+1)=='x' excludes a '0'), and the positions of the
+    * non-domain bytes, with each dot's count of them before it: the
+    * domain-char run around a dot lies between two of them.
+    *
+    * Two passes per chunk of [[ChunkBytes]] bytes. Pass 1 is branch-free:
+    * it writes every position into `scr.anchorPos` and advances only past
+    * a byte of non-zero class (a boundary, an anchor char or a non-domain
+    * byte). Pass 2 walks just those positions. It appends each to the dot
+    * and non-domain lists the same way (write, then advance by the class
+    * bit), a token is the gap between two boundaries, and only the rare
+    * events (a gap of 27+ bytes, '@', "::", "0x") take a branch. The
+    * one-pass loop this replaces branched on every byte's class, and on
+    * text those branches mispredict: on 40k match_wide texts a plain
+    * class-table sum ran at ~1,040 MB/s, the same loop with the per-byte
+    * branches at ~290 MB/s and the one-pass anchor collection at ~173 MB/s
+    * (one thread, 4-vCPU host). Chunking bounds the position buffer
+    * whatever the text length.
     */
   private def collectAnchors(b: Array[Byte], n: Int,
       scr: IocScanner.ScanScratch): Unit = {
@@ -121,58 +139,69 @@ final class IocScanner(val config: ScanConfig) extends Serializable {
     val ats = scr.ats; ats.clear()
     val dcolons = scr.dcolons; dcolons.clear()
     val zx = scr.zx; zx.clear()
-    // one combined class-table read per byte (anchorClassTable); the
-    // common class-0 byte (non-boundary, non-anchor — most of any text)
-    // costs a single well-predicted branch. Semantics identical to the
-    // per-char compare chain this replaces (the anchor chars '.': '@' '0'
-    // are mutually exclusive, and the boundary bit mirrors isBoundary).
+    val nonDomain = scr.nonDomain; nonDomain.clear()
+    val dotRun = scr.dotRun; dotRun.clear()
+    val atRun = scr.atRun; atRun.clear()
     val tbl = IocScanner.anchorClassTable
-    // token spans feed ONLY the fixed-width scanners (hashes >= 32,
-    // bitcoin >= 26, monero >= 90 bytes): spans shorter than 26 can never
-    // produce a candidate, and most tokens in real text are short words —
-    // filtering here keeps the span vector (and the three consumers'
-    // iteration) proportional to rare long tokens instead of every word.
-    // NOTE (round 6): a tight-run restructure of this loop (inner
-    // `while (tbl(b(i)) == 0)` skip) was tried and measured SLOWER in an
-    // interleaved same-JVM A/B (430 vs 561 MB/s anchors-only median of
-    // 5) — the single flat loop JIT-compiles better. Keep it flat.
-    var tokenStart = -1
-    var i = 0
-    while (i < n) {
-      val k = tbl(b(i) & 0xff)
-      if (k == 0) {
-        if (tokenStart < 0) tokenStart = i
-      } else {
-        if ((k & 1) != 0) {
-          if (tokenStart >= 0) {
-            if (i - tokenStart >= 26) { tokens.add(tokenStart); tokens.add(i) }
-            tokenStart = -1
-          }
-        } else if (tokenStart < 0) tokenStart = i
-        if ((k & 2) != 0) dots.add(i)
-        else if ((k & 4) != 0) ats.add(i)
-        else if ((k & 8) != 0) { if (i + 1 < n && b(i + 1) == ':') dcolons.add(i) }
-        else if ((k & 16) != 0) { if (i + 1 < n && b(i + 1) == 'x') zx.add(i) }
+    val pairTbl = IocScanner.pairClassTable
+    val pos = scr.anchorPos
+    var lastBoundary = -1
+    var base = 0
+    while (base < n) {
+      val lim = math.min(n, base + ChunkBytes)
+      var np = 0
+      var i = base
+      while (i < lim) {
+        pos(np) = i
+        np += (tbl(b(i) & 0xff) + 255) >>> 8
+        i += 1
       }
-      i += 1
+      val dotA = dots.reserve(np); var nd = dots.length
+      val ndA = nonDomain.reserve(np); var nn = nonDomain.length
+      val runA = dotRun.reserve(np)
+      var j = 0
+      while (j < np) {
+        val p = pos(j)
+        val k = tbl(b(p) & 0xff)
+        ndA(nn) = p; nn += (k >> 5) & 1
+        dotA(nd) = p; runA(nd) = nn; nd += (k >> 1) & 1
+        val isB = k & 1
+        val gap = p - lastBoundary
+        if ((isB & ((26 - gap) >>> 31)) != 0) {
+          tokens.add(lastBoundary + 1); tokens.add(p)
+        }
+        lastBoundary += gap & -isB
+        // '@', "::" and "0x" are rare: a branch on them predicts well
+        val pair = k & (if (p + 1 < n) pairTbl(b(p + 1) & 0xff) else 0)
+        if (((k & 4) | pair) != 0) {
+          if ((k & 4) != 0) { ats.add(p); atRun.add(nn) }
+          else if (pair == 8) dcolons.add(p)
+          else zx.add(p)
+        }
+        j += 1
+      }
+      dots.length = nd; dotRun.length = nd; nonDomain.length = nn
+      base = lim
     }
-    if (tokenStart >= 0 && n - tokenStart >= 26) {
-      tokens.add(tokenStart); tokens.add(n)
-    }
+    if (n - lastBoundary > 26) { tokens.add(lastBoundary + 1); tokens.add(n) }
   }
 
   // ------------------------------------------------------------- domains
-  private def scanDomains(b: Array[Byte], n: Int, dots: IntVec,
-      out: Spans): Unit = {
+  private def scanDomains(b: Array[Byte], n: Int,
+      scr: IocScanner.ScanScratch, out: Spans): Unit = {
+    val dots = scr.dots
+    val nonDomain = scr.nonDomain
     var lastSpanEnd = 0
     var di = 0
     while (di < dots.length) {
       val dot = dots(di)
       if (dot >= lastSpanEnd) {
-        var start = dot
-        while (start > 0 && isDomainChar(b(start - 1))) start -= 1
-        var end = dot + 1
-        while (end < n && isDomainChar(b(end))) end += 1
+        // the maximal domain-char run around the dot: between the
+        // non-domain bytes before and after it (the anchor pass counted
+        // them), in place of a byte walk each way
+        val r = scr.dotRun(di)
+        val start = if (r == 0) 0 else nonDomain(r - 1) + 1
+        val end = if (r < nonDomain.length) nonDomain(r) else n
         if (start < dot && end > dot + 1) {
           val tldStart = Psl.tldSuffixPos(b, start, end)
           if (tldStart > 0) { // -1 = no TLD; 0 = bare TLD, rejected
@@ -196,58 +225,60 @@ final class IocScanner(val config: ScanConfig) extends Serializable {
     }
   }
 
-  /** Labels: non-empty, no leading/trailing hyphen, count >= min. */
+  /** Labels: non-empty, no leading/trailing hyphen, count >= min. One
+    * branch-free pass over the span (`end - start >= 3`): the first and
+    * last byte must not be a dot or a hyphen, and no inner dot may have a
+    * dot or a hyphen beside it.
+    */
   private def validLabels(b: Array[Byte], start: Int, end: Int): Boolean = {
-    var count = 0
-    var labelStart = start
-    var i = start
-    while (i <= end) {
-      if (i == end || b(i) == '.') {
-        val len = i - labelStart
-        if (len == 0) return false
-        if (b(labelStart) == '-' || b(i - 1) == '-') return false
-        count += 1
-        labelStart = i + 1
-      }
+    val t = labelClassTable
+    val first = t(b(start) & 0xff)
+    if (((first | t(b(end - 1) & 0xff)) & 3) != 0) return false
+    var bad = 0
+    var dots = 0
+    var prev = first
+    var c = t(b(start + 1) & 0xff)
+    var i = start + 1
+    while (i < end - 1) {
+      val next = t(b(i + 1) & 0xff)
+      val around = prev | next
+      bad |= c & (around | (around >> 1)) & 1
+      dots += c & 1
+      prev = c
+      c = next
       i += 1
     }
-    count >= config.minDomainLabels
+    bad == 0 && dots + 1 >= config.minDomainLabels
   }
 
   // --------------------------------------------------------------- ipv4
   private def scanIpv4(b: Array[Byte], n: Int, dots: IntVec,
       out: Spans): Unit = {
-    // dot positions come from the fused anchor pass
-    var lastEnd = 0
-    // every dot of one digit/dot run walks back to the SAME start, and
-    // tryParseIpv4 parses from that start only — a failed start fails
-    // identically for the run's other dots, so remember it (round 6;
-    // "999.1.2.3" paid the parse once per dot before)
-    var lastFailedStart = -1
+    // every dot of one maximal digit/dot run walks back to the SAME start,
+    // and tryParseIpv4 parses from that start only, so the run's verdict is
+    // reached at its first dot that passes the guard; `runEnd` is where that
+    // run ends, and the run's later dots are skipped ("999.1.2.3" paid the
+    // walk and the parse once per dot before). A parsed address lies inside
+    // its run, so a later run never starts inside an emitted span. The
+    // first guard-passing dot of a run that parses is the address's first
+    // dot, so the old ">= 3 dots within 15 bytes" prefilter never turned
+    // away an address and is gone.
+    var runEnd = 0
     var di = 0
     while (di < dots.length) {
       val dotPos = dots(di)
-      if (dotPos != 0 && dotPos + 6 <= n &&
+      if (dotPos >= runEnd && dotPos != 0 && dotPos + 6 <= n &&
         isDigit(b(dotPos - 1)) && isDigit(b(dotPos + 1))) {
         var start = dotPos
-        while (start > 0 && (isDigit(b(start - 1)) || b(start - 1) == '.'))
-          start -= 1
-        if (start >= lastEnd && start != lastFailedStart) {
-          // need >=3 dots within [this dot, start+15)
-          val endSearch = math.min(start + 15, n)
-          var cnt = 0
-          var dj = di
-          while (dj < dots.length && dots(dj) < endSearch) { cnt += 1; dj += 1 }
-          if (cnt >= 3) {
-            val parsed = tryParseIpv4(b, n, start)
-            if (parsed >= 0) {
-              val end = (parsed >>> 32).toInt
-              out.add(Kind.Ipv4, start, end)
-              out.addr(out.n - 1) = parsed.toInt
-              lastEnd = end
-            } else lastFailedStart = start
-          }
+        while (start > 0 && isIpv4Char(b(start - 1))) start -= 1
+        runEnd = dotPos + 1
+        val parsed = tryParseIpv4(b, n, start)
+        if (parsed >= 0) {
+          runEnd = (parsed >>> 32).toInt
+          out.add(Kind.Ipv4, start, runEnd)
+          out.addr(out.n - 1) = parsed.toInt
         }
+        while (runEnd < n && isIpv4Char(b(runEnd))) runEnd += 1
       }
       di += 1
     }
@@ -255,7 +286,10 @@ final class IocScanner(val config: ScanConfig) extends Serializable {
 
   /** Strict dotted-quad parse from `start`: 4 octets of 1-3 digits, each
     * 0-255, no leading zeros, word boundaries both ends — so the span IS
-    * the canonical form. Returns (end << 32) | address, or -1.
+    * the canonical form. Returns (end << 32) | address, or -1. An octet is
+    * read from three table lookups without a per-digit branch: the digit
+    * count is the length of the run of non-negative [[digitTable]] values
+    * (at most 3, like the digit loop this replaces).
     */
   private def tryParseIpv4(b: Array[Byte], n: Int, start: Int): Long = {
     if (config.requireWordBoundaries && start > 0 && !isBoundary(b(start - 1)))
@@ -264,17 +298,19 @@ final class IocScanner(val config: ScanConfig) extends Serializable {
     var addr = 0L
     var oi = 0
     while (oi < 4) {
-      var value = 0
-      var digits = 0
-      val octetStart = pos
-      while (pos < n && isDigit(b(pos)) && digits < 3) {
-        value = value * 10 + (b(pos) - '0')
-        pos += 1
-        digits += 1
-      }
+      val d0 = digitAt(b, n, pos)
+      val d1 = digitAt(b, n, pos + 1)
+      val d2 = digitAt(b, n, pos + 2)
+      // 1 where the digit run reaches that byte, else 0
+      val h0 = ~d0 >>> 31
+      val h1 = h0 & (~d1 >>> 31)
+      val h2 = h1 & (~d2 >>> 31)
+      val digits = h0 + h1 + h2
       if (digits == 0) return -1L
+      val value = (d0 * (1 + 9 * h1) + (d1 & -h1)) * (1 + 9 * h2) + (d2 & -h2)
       if (value > 255) return -1L
-      if (digits > 1 && b(octetStart) == '0') return -1L
+      if (digits > 1 && d0 == 0) return -1L
+      pos += digits
       addr = (addr << 8) | value
       if (oi < 3) {
         if (pos >= n || b(pos) != '.') return -1L
@@ -288,8 +324,9 @@ final class IocScanner(val config: ScanConfig) extends Serializable {
   }
 
   // -------------------------------------------------------------- emails
-  private def scanEmails(b: Array[Byte], n: Int, ats: IntVec,
-      out: Spans): Unit = {
+  private def scanEmails(b: Array[Byte], n: Int,
+      scr: IocScanner.ScanScratch, out: Spans): Unit = {
+    val ats = scr.ats
     var ai = 0
     while (ai < ats.length) {
       val at = ats(ai)
@@ -300,22 +337,26 @@ final class IocScanner(val config: ScanConfig) extends Serializable {
         if (ok && config.requireWordBoundaries && start > 0 &&
           !isBoundary(b(start - 1))) ok = false
         if (ok) {
-          var end = at + 1
-          while (end < n && isDomainChar(b(end))) end += 1
+          // the domain-char run after the '@' ends at the next non-domain
+          // byte the anchor pass listed
+          val r = scr.atRun(ai)
+          val end = if (r < scr.nonDomain.length) scr.nonDomain(r) else n
           if (end > at + 1) {
             if (!config.requireWordBoundaries || end == n || isBoundary(b(end))) {
               // local part: no "..", at least one ASCII letter
-              var hasLetter = false
-              var dd = false
+              val t = labelClassTable
+              var classes = 0
+              var dd = 0
+              var prev = 0
               var i = start
               while (i < at) {
-                val c = b(i)
-                if ((c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z'))
-                  hasLetter = true
-                if (c == '.' && i + 1 < at && b(i + 1) == '.') dd = true
+                val c = t(b(i) & 0xff)
+                classes |= c
+                dd |= prev & c & 1
+                prev = c
                 i += 1
               }
-              if (hasLetter && !dd) {
+              if ((classes & 4) != 0 && dd == 0) {
                 // domain part: at least one dot + PSL TLD
                 var hasDot = false
                 i = at + 1
@@ -349,10 +390,9 @@ final class IocScanner(val config: ScanConfig) extends Serializable {
         val hexAfter = dc + 2 < n && isHex(b(dc + 2))
         if (hexBefore || hexAfter) {
           var start = dc
-          while (start > 0 && (isHex(b(start - 1)) || b(start - 1) == ':'))
-            start -= 1
+          while (start > 0 && isIpv6Char(b(start - 1))) start -= 1
           var end = dc + 2
-          while (end < n && (isHex(b(end)) || b(end) == ':')) end += 1
+          while (end < n && isIpv6Char(b(end))) end += 1
           val len = end - start
           if (len < 8) { lastEnd = end }
           else if (b(start) == ':' && b(start + 1) == ':') { lastEnd = end }
@@ -424,7 +464,10 @@ final class IocScanner(val config: ScanConfig) extends Serializable {
               out.add(Kind.Bitcoin, start, end)
           }
         } else if (b(start) == '1' || b(start) == '3') {
-          if (asciiOnly(b, start, end)) {
+          // base58Decode rejects any byte outside the alphabet, so the table
+          // check only skips the String and the decode (a hex token has a
+          // '0' ~87% of the time)
+          if (allBase58(b, start, end)) {
             val s = new String(b, start, len, StandardCharsets.US_ASCII)
             if (Checksums.validBase58Check(s))
               out.add(Kind.Bitcoin, start, end)
@@ -464,7 +507,7 @@ final class IocScanner(val config: ScanConfig) extends Serializable {
       val end = tokens(t + 1)
       val len = end - start
       if (len >= 90 && len <= 110 && (b(start) == '4' || b(start) == '8') &&
-        asciiOnly(b, start, end)) {
+        allBase58(b, start, end)) {
         val s = new String(b, start, len, StandardCharsets.US_ASCII)
         if (Checksums.validMonero(s))
           out.add(Kind.Monero, start, end)
@@ -495,6 +538,32 @@ object IocScanner {
     t('-'.toInt) = true
     t('.'.toInt) = true
     i = 0x80; while (i <= 0xff) { t(i) = true; i += 1 }
+    t
+  }
+
+  /** Bytes per chunk of the anchor pass: its position buffer holds one
+    * chunk, so a huge text pins no large buffer on the thread.
+    */
+  private[extract] final val ChunkBytes = 2048
+
+  /** 1 for a byte in `chars`, 0 otherwise. */
+  private def table(chars: String): Array[Int] = {
+    val t = new Array[Int](256)
+    chars.foreach(c => t(c.toInt) = 1)
+    t
+  }
+  private val HexChars = "0123456789abcdefABCDEF"
+  private val hexTable = table(HexChars)
+  private val ipv6CharTable = table(HexChars + ":")
+  private val ipv4CharTable = table("0123456789.")
+  private val base58Table = table(Checksums.Base58Alphabet)
+  private val emailLocalTable = table(
+    "0123456789abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ.-_+")
+  /** The digit's value for '0'-'9', -1 for any other byte. */
+  private val digitTable: Array[Int] = {
+    val t = Array.fill(256)(-1)
+    var i = 0
+    while (i < 10) { t('0' + i) = i; i += 1 }
     t
   }
 
@@ -554,14 +623,27 @@ object IocScanner {
     val ats = new IntVec(8)
     val dcolons = new IntVec(8)
     val zx = new IntVec(8)
+    val nonDomain = new IntVec(32)
+    val dotRun = new IntVec(16) // per dot: non-domain bytes before it
+    val atRun = new IntVec(8) // per '@': non-domain bytes up to it
     val spans = new Spans
+    val anchorPos = new Array[Int](ChunkBytes)
+
+    /** Drop the anchor lists a huge text grew (the non-domain list holds
+      * about one position per word), so no thread keeps them.
+      */
+    private[extract] def release(): Unit = {
+      tokens.shrink(); dots.shrink(); ats.shrink(); dcolons.shrink()
+      zx.shrink(); nonDomain.shrink(); dotRun.shrink(); atRun.shrink()
+    }
   }
   private val scratch = new ThreadLocal[ScanScratch] {
     override def initialValue(): ScanScratch = new ScanScratch
   }
 
   /** Fused anchor-pass byte classes: bit0 boundary, bit1 '.', bit2 '@',
-    * bit3 ':', bit4 '0'. Class 0 = plain token byte (the fast path).
+    * bit3 ':', bit4 '0', bit5 not a domain char (every boundary too).
+    * Class 0 = plain domain-char token byte.
     */
   private[extract] val anchorClassTable: Array[Byte] = {
     val t = new Array[Byte](256)
@@ -571,24 +653,59 @@ object IocScanner {
     t('@') = (t('@') | 4).toByte
     t(':') = (t(':') | 8).toByte
     t('0') = (t('0') | 16).toByte
+    i = 0
+    while (i < 256) { if (!domainCharTable(i)) t(i) = (t(i) | 32).toByte; i += 1 }
+    t
+  }
+
+  /** Label classes: bit 0 '.', bit 1 '-', bit 2 an ASCII letter. */
+  private val labelClassTable: Array[Int] = {
+    val t = new Array[Int](256)
+    t('.') = 1
+    t('-') = 2
+    ('a' to 'z').foreach(c => t(c) = 4)
+    ('A' to 'Z').foreach(c => t(c) = 4)
+    t
+  }
+
+  /** The class bit a byte completes as the second byte of a pair: ':'
+    * the "::" bit, 'x' the "0x" bit.
+    */
+  private[extract] val pairClassTable: Array[Int] = {
+    val t = new Array[Int](256)
+    t(':') = 8
+    t('x') = 16
     t
   }
 
   @inline def isBoundary(b: Byte): Boolean = boundaryTable(b & 0xff)
-  @inline def isDomainChar(b: Byte): Boolean = domainCharTable(b & 0xff)
-  @inline def isDigit(b: Byte): Boolean = b >= '0' && b <= '9'
-  @inline def isHex(b: Byte): Boolean =
-    (b >= '0' && b <= '9') || (b >= 'a' && b <= 'f') || (b >= 'A' && b <= 'F')
-  @inline def isEmailLocalChar(b: Byte): Boolean =
-    (b >= '0' && b <= '9') || (b >= 'a' && b <= 'z') ||
-      (b >= 'A' && b <= 'Z') || b == '.' || b == '-' || b == '_' || b == '+'
+  @inline def isDigit(b: Byte): Boolean = digitTable(b & 0xff) >= 0
+  @inline def isHex(b: Byte): Boolean = hexTable(b & 0xff) != 0
+  @inline private def isIpv6Char(b: Byte): Boolean = ipv6CharTable(b & 0xff) != 0
+  @inline private def isIpv4Char(b: Byte): Boolean = ipv4CharTable(b & 0xff) != 0
+  /** The digit value of b(i), -1 if it is not a digit or i >= n. */
+  @inline private def digitAt(b: Array[Byte], n: Int, i: Int): Int =
+    if (i < n) digitTable(b(i) & 0xff) else -1
+  @inline def isEmailLocalChar(b: Byte): Boolean = emailLocalTable(b & 0xff) != 0
   @inline private def lower(b: Byte): Int =
     if (b >= 'A' && b <= 'Z') b + 32 else b.toInt
 
-  def allHex(b: Array[Byte], from: Int, to: Int): Boolean = {
+  /** Every byte of [from, to) is hex. AND-accumulates the table with no
+    * exit per byte: on random hex the range-compare chain mispredicted
+    * about every other byte.
+    */
+  def allHex(b: Array[Byte], from: Int, to: Int): Boolean =
+    allIn(hexTable, b, from, to)
+
+  /** Every byte of [from, to) is in the base58 alphabet. */
+  def allBase58(b: Array[Byte], from: Int, to: Int): Boolean =
+    allIn(base58Table, b, from, to)
+
+  private def allIn(t: Array[Int], b: Array[Byte], from: Int, to: Int): Boolean = {
+    var acc = 1
     var i = from
-    while (i < to) { if (!isHex(b(i))) return false; i += 1 }
-    true
+    while (i < to) { acc &= t(b(i) & 0xff); i += 1 }
+    acc != 0
   }
 
   def asciiOnly(b: Array[Byte], from: Int, to: Int): Boolean = {
@@ -605,14 +722,24 @@ object IocScanner {
     var length: Int = 0
     def clear(): Unit = length = 0
     def add(v: Int): Unit = {
-      if (length == arr.length) {
-        val next = new Array[Int](arr.length * 2)
-        System.arraycopy(arr, 0, next, 0, arr.length)
-        arr = next
-      }
+      if (length == arr.length) reserve(1)
       arr(length) = v
       length += 1
     }
+    /** The backing array, with room for `extra` more values past `length`
+      * (a caller that writes them sets `length` itself).
+      */
+    private[extract] def reserve(extra: Int): Array[Int] = {
+      if (length + extra > arr.length) {
+        val next = new Array[Int](math.max(arr.length * 2, length + extra))
+        System.arraycopy(arr, 0, next, 0, length)
+        arr = next
+      }
+      arr
+    }
+    /** Back to the initial capacity if grown past [[ChunkBytes]]. */
+    private[extract] def shrink(): Unit =
+      if (arr.length > ChunkBytes + initial) arr = new Array[Int](initial)
     def apply(i: Int): Int = arr(i)
   }
 

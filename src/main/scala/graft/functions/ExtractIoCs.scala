@@ -79,6 +79,10 @@ object ExtractIoCs {
     var hitDb: Array[Int] = new Array[Int](16)
     var hitEntry: Array[Int] = new Array[Int](16)
     var hitPrefix: Array[Int] = new Array[Int](16)
+    // each database's probe state, held only during one call (see
+    // ScanTurn.resolveStates)
+    var states: Array[graft.intel.IntelDb.ProbeState] =
+      new Array[graft.intel.IntelDb.ProbeState](4)
     // ScanTurn.scanFlat's rows for the current turn
     var rows: Array[Any] = new Array[Any](16)
     // direct-mapped value-intern cache (see internSpan): ~16 KB of refs

@@ -71,10 +71,13 @@ object IntelLookupMulti {
     val isIp = isV6 || itype.equals(IPV4)
     val scr = ExtractIoCs.tlScratch.get()
     val s = value.toString
+    ScanTurn.resolveStates(scr, dbs)
     val n =
-      if (isV6) ScanTurn.probeIp(scr, dbs, -1L, Ipv6Format.parse(s))
-      else if (isIp) ScanTurn.probeIp(scr, dbs, Cidr.parseV4(s), null)
-      else ScanTurn.probeString(scr, dbs, scr.key.set(s))
+      try {
+        if (isV6) ScanTurn.probeIp(scr, dbs, -1L, Ipv6Format.parse(s))
+        else if (isIp) ScanTurn.probeIp(scr, dbs, Cidr.parseV4(s), null)
+        else ScanTurn.probeString(scr, dbs, scr.key.set(s))
+      } finally ScanTurn.releaseStates(scr, dbs)
     ScanTurn.hitArray(scr, n, isIp)
   }
 

@@ -116,10 +116,31 @@ object ScanTurn {
   private val CLEAN_ONLY: ArrayData = new GenericArrayData(Array[Any](CLEAN_ROW))
   private def typeInterned = ExtractIoCs.typeInterned
 
-  /** Probe every database for candidate i of a scan of `buf`. Hit k is
-    * left in `scr.hitDb(k)`, `scr.hitEntry(k)`, `scr.hitPrefix(k)` (prefix
-    * -1 for string hits); returns the hit count. The triples are valid
-    * until the next probe on this thread.
+  /** Each database's probe state for this thread, resolved once into
+    * `scr.states` for one call's probes ([[IntelDb.probeState]]: one
+    * ThreadLocal probe per database per call instead of one per lookup).
+    * The caller must [[releaseStates]] before it returns, so no database
+    * stays reachable from the thread's scratch.
+    */
+  private[functions] def resolveStates(scr: ExtractIoCs.RowScratch,
+      dbs: Array[IntelDb]): Unit = {
+    if (scr.states.length < dbs.length)
+      scr.states = new Array[IntelDb.ProbeState](dbs.length)
+    var d = 0
+    while (d < dbs.length) { scr.states(d) = dbs(d).probeState; d += 1 }
+  }
+
+  private[functions] def releaseStates(scr: ExtractIoCs.RowScratch,
+      dbs: Array[IntelDb]): Unit = {
+    var d = 0
+    while (d < dbs.length) { scr.states(d) = null; d += 1 }
+  }
+
+  /** Probe every database for candidate i of a scan of `buf`, with the
+    * states of [[resolveStates]]. Hit k is left in `scr.hitDb(k)`,
+    * `scr.hitEntry(k)`, `scr.hitPrefix(k)` (prefix -1 for string hits);
+    * returns the hit count. The triples are valid until the next probe on
+    * this thread.
     */
   private def probe(scr: ExtractIoCs.RowScratch, dbs: Array[IntelDb],
       sp: IocScanner.Spans, i: Int, buf: Array[Byte]): Int =
@@ -134,10 +155,13 @@ object ScanTurn {
     */
   private[functions] def probeIp(scr: ExtractIoCs.RowScratch,
       dbs: Array[IntelDb], v4: Long, v6: Array[Int]): Int = {
+    val states = scr.states
     var n = 0
     var d = 0
     while (d < dbs.length) {
-      val hit = if (v6 != null) dbs(d).lookupIpv6(v6) else dbs(d).lookupIpv4(v4)
+      val hit =
+        if (v6 != null) dbs(d).lookupIpv6(states(d), v6)
+        else dbs(d).lookupIpv4(states(d), v4)
       if (hit >= 0) {
         putHit(scr, n, d, LpmIndex.entryOf(hit), LpmIndex.prefixOf(hit))
         n += 1
@@ -150,10 +174,11 @@ object ScanTurn {
   /** [[probe]] on the string path. */
   private[functions] def probeString(scr: ExtractIoCs.RowScratch,
       dbs: Array[IntelDb], key: ProbeKey): Int = {
+    val states = scr.states
     var n = 0
     var d = 0
     while (d < dbs.length) {
-      val ids = dbs(d).lookupString(key)
+      val ids = dbs(d).lookupString(states(d), key)
       var k = 0
       while (k < ids.length) {
         putHit(scr, n, d, ids(k), -1)
@@ -214,22 +239,25 @@ object ScanTurn {
     if (n == 0) return CLEAN_ONLY
     val rows = new Array[Any](n)
     var anyHit = false
-    var i = 0
-    while (i < n) {
-      val nHits = probe(scr, dbs, sp, i, buf)
-      if (nHits > 0) anyHit = true
-      val row = new GenericInternalRow(7)
-      row.update(0, CAND)
-      row.update(1, typeInterned(sp.kind(i)))
-      val matched = ExtractIoCs.internSpan(scr, buf, sp.start(i), sp.end(i))
-      row.update(2, ExtractIoCs.valueOf(scr, sp, i, matched))
-      row.update(3, matched)
-      row.update(4, sp.start(i))
-      row.update(5, sp.end(i))
-      row.update(6, hitArray(scr, nHits, isIp(sp.kind(i))))
-      rows(i) = row
-      i += 1
-    }
+    resolveStates(scr, dbs)
+    try {
+      var i = 0
+      while (i < n) {
+        val nHits = probe(scr, dbs, sp, i, buf)
+        if (nHits > 0) anyHit = true
+        val row = new GenericInternalRow(7)
+        row.update(0, CAND)
+        row.update(1, typeInterned(sp.kind(i)))
+        val matched = ExtractIoCs.internSpan(scr, buf, sp.start(i), sp.end(i))
+        row.update(2, ExtractIoCs.valueOf(scr, sp, i, matched))
+        row.update(3, matched)
+        row.update(4, sp.start(i))
+        row.update(5, sp.end(i))
+        row.update(6, hitArray(scr, nHits, isIp(sp.kind(i))))
+        rows(i) = row
+        i += 1
+      }
+    } finally releaseStates(scr, dbs)
     if (anyHit) new GenericArrayData(rows)
     else {
       // candidates but zero hits anywhere -> still a clean turn: append the
@@ -253,39 +281,43 @@ object ScanTurn {
     // the turn's rows accumulate in the grow-only scratch buffer and are
     // copied to exact size at the end; UTF8Strings are built only for the
     // candidates that hit
+    if (sp.n == 0) return EMPTY
     var rows = scr.rows
     var nRows = 0
-    var i = 0
-    while (i < sp.n) {
-      val nHits = probe(scr, dbs, sp, i, buf)
-      if (nHits > 0) {
-        val tpe = typeInterned(sp.kind(i))
-        val matchedU8 = ExtractIoCs.internSpan(scr, buf, sp.start(i), sp.end(i))
-        val valueU8 = ExtractIoCs.valueOf(scr, sp, i, matchedU8)
-        val matchType = if (isIp(sp.kind(i))) IP else PATTERN
-        if (nRows + nHits > rows.length) {
-          rows = Array.copyOf(rows, Integer.highestOneBit(nRows + nHits) * 2)
-          scr.rows = rows
+    resolveStates(scr, dbs)
+    try {
+      var i = 0
+      while (i < sp.n) {
+        val nHits = probe(scr, dbs, sp, i, buf)
+        if (nHits > 0) {
+          val tpe = typeInterned(sp.kind(i))
+          val matchedU8 = ExtractIoCs.internSpan(scr, buf, sp.start(i), sp.end(i))
+          val valueU8 = ExtractIoCs.valueOf(scr, sp, i, matchedU8)
+          val matchType = if (isIp(sp.kind(i))) IP else PATTERN
+          if (nRows + nHits > rows.length) {
+            rows = Array.copyOf(rows, Integer.highestOneBit(nRows + nHits) * 2)
+            scr.rows = rows
+          }
+          var k = 0
+          while (k < nHits) {
+            val r = new GenericInternalRow(9)
+            r.update(0, tpe)
+            r.update(1, valueU8)
+            r.update(2, matchedU8)
+            r.update(3, sp.start(i))
+            r.update(4, sp.end(i))
+            r.update(5, scr.hitDb(k))
+            r.update(6, scr.hitEntry(k))
+            r.update(7, scr.hitPrefix(k))
+            r.update(8, matchType)
+            rows(nRows) = r
+            nRows += 1
+            k += 1
+          }
         }
-        var k = 0
-        while (k < nHits) {
-          val r = new GenericInternalRow(9)
-          r.update(0, tpe)
-          r.update(1, valueU8)
-          r.update(2, matchedU8)
-          r.update(3, sp.start(i))
-          r.update(4, sp.end(i))
-          r.update(5, scr.hitDb(k))
-          r.update(6, scr.hitEntry(k))
-          r.update(7, scr.hitPrefix(k))
-          r.update(8, matchType)
-          rows(nRows) = r
-          nRows += 1
-          k += 1
-        }
+        i += 1
       }
-      i += 1
-    }
+    } finally releaseStates(scr, dbs)
     if (nRows == 0) EMPTY
     else new GenericArrayData(Array.copyOf(rows, nRows))
   }

@@ -635,7 +635,8 @@ final class IntelDb(
     var strMemoHits = 0L
     var strMatches = 0L
   }
-  private final class ThreadState {
+  private final class ThreadState(val owner: AnyRef)
+      extends IntelDb.ProbeState {
     val n = new Counters
     val key = new ProbeKey // for the String entry points
     val glob = globs.newScratch
@@ -654,10 +655,29 @@ final class IntelDb(
   }
   @transient private lazy val allCounters =
     new java.util.concurrent.ConcurrentLinkedQueue[Counters]()
+  // identifies this instance's states (a state must not refer to the db:
+  // its ThreadLocal entry would then keep the db reachable from the thread)
+  @transient private lazy val stateOwner = new AnyRef
   @transient private lazy val threadState: ThreadLocal[ThreadState] =
     ThreadLocal.withInitial { () =>
-      val s = new ThreadState; allCounters.add(s.n); s
+      val s = new ThreadState(stateOwner); allCounters.add(s.n); s
     }
+
+  /** This thread's probe state for this database (its L7 memo, probe
+    * scratch and A8 counters). A caller that probes many times in one call
+    * resolves it once and passes it to the `lookup*(state, ...)` overloads,
+    * which saves a ThreadLocal probe per lookup. It must not be kept past
+    * that call: a dropped database has to stay collectable.
+    */
+  def probeState: IntelDb.ProbeState = threadState.get()
+
+  private def own(ps: IntelDb.ProbeState): ThreadState = {
+    val st = ps.asInstanceOf[ThreadState]
+    if (st.owner ne stateOwner)
+      throw new IllegalArgumentException(
+        s"probe state of another database passed to $databaseId")
+    st
+  }
 
   /** A8 snapshot: fold all threads' counters (this JVM, this db instance).
     * Misses = lookups - memoHits; rates derived. Racy long reads — counts
@@ -688,8 +708,11 @@ final class IntelDb(
     * counted, never a hit). Returns the packed hit ([[LpmIndex.pack]],
     * v4 prefix length) or -1. Memoized (L7).
     */
-  def lookupIpv4(addr: Long): Long = {
-    val st = threadState.get()
+  def lookupIpv4(addr: Long): Long = lookupIpv4(threadState.get(), addr)
+
+  /** [[lookupIpv4]] with the caller's [[probeState]]. */
+  def lookupIpv4(ps: IntelDb.ProbeState, addr: Long): Long = {
+    val st = own(ps)
     st.n.ipLookups += 1
     if (addr < 0) return -1L
     val m = st.v4Memo
@@ -710,8 +733,11 @@ final class IntelDb(
   /** IP-path lookup of an IPv6 address as its 8 groups (null = not an
     * address). Returns the packed hit or -1. Memoized (L7).
     */
-  def lookupIpv6(groups: Array[Int]): Long = {
-    val st = threadState.get()
+  def lookupIpv6(groups: Array[Int]): Long = lookupIpv6(threadState.get(), groups)
+
+  /** [[lookupIpv6]] with the caller's [[probeState]]. */
+  def lookupIpv6(ps: IntelDb.ProbeState, groups: Array[Int]): Long = {
+    val st = own(ps)
     st.n.ipLookups += 1
     if (groups == null) return -1L
     val c = Cidr.fromGroups(groups, 128, isV4 = false)
@@ -744,7 +770,9 @@ final class IntelDb(
   def lookupString(key: ProbeKey): Array[Int] =
     lookupString(threadState.get(), key)
 
-  private def lookupString(st: ThreadState, key: ProbeKey): Array[Int] = {
+  /** [[lookupString]] of a key in bytes with the caller's [[probeState]]. */
+  def lookupString(ps: IntelDb.ProbeState, key: ProbeKey): Array[Int] = {
+    val st = own(ps)
     st.n.strLookups += 1
     val h = key.hash
     val slot = IntelDb.strSlot(h)
@@ -805,6 +833,9 @@ final class IntelDb(
 }
 
 object IntelDb {
+
+  /** A thread's probe state for one database ([[IntelDb.probeState]]). */
+  sealed trait ProbeState
 
   /** Empty-slot marker of the L7 IP memo (a packed hit is >= 0, a cached
     * miss -1). */

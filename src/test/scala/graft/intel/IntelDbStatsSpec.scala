@@ -14,6 +14,25 @@ class IntelDbStatsSpec extends AnyFunSuite {
   private def freshDb = IntelDb.build("t", Seq(
     entry("1.2.3.0/24"), entry("evil.com"), entry("*.bad.com")))
 
+  test("a caller-held probe state counts and memoizes like the plain " +
+    "lookups, and only its own database takes it") {
+    val db = freshDb
+    val st = db.probeState
+    assert(db.lookupIpv4(st, Cidr.parseV4("1.2.3.4")) >= 0)
+    assert(db.lookupIpv6(st, null) == -1L)
+    assert(db.lookupString(st, new ProbeKey().set("evil.com")).nonEmpty)
+    assert(db.stats == IntelDb.LookupStats(2, 0, 1, 1, 0, 1))
+    // the plain entry points use the same per-thread state
+    assert(db.lookupIp("1.2.3.4", isV6 = false) != null)
+    assert(db.lookupString("evil.com").nonEmpty)
+    assert(db.stats == IntelDb.LookupStats(3, 1, 2, 2, 1, 2))
+    val other = freshDb
+    intercept[IllegalArgumentException](other.lookupIpv4(st, 0L))
+    intercept[IllegalArgumentException](
+      other.lookupString(st, new ProbeKey().set("evil.com")))
+    assert(other.stats == IntelDb.LookupStats(0, 0, 0, 0, 0, 0))
+  }
+
   test("stats: counts lookups, memo hits, and matches per path") {
     val db = freshDb
     assert(db.stats == IntelDb.LookupStats(0, 0, 0, 0, 0, 0))
