@@ -82,7 +82,7 @@ object ScanMain {
     // S3: `--turns -` reads stdin line-per-turn (the reference's `-` path)
     val turns =
       if (turnsPath == "-") graft.sources.StdinSource.readTurns(spark)
-      else spark.read.parquet(turnsPath)
+      else ScanJob.readTurns(spark, turnsPath)
     val stats = ScanJob.run(spark,
       turns, dbs,
       opts.getOrElse("out", sys.error("--out <dir> is required")),

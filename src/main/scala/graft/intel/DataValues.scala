@@ -134,7 +134,7 @@ object DataValues {
     * Used by the opt-in byte-parity NDJSON mode; the default sink nests
     * dynamic keys under "extra" (schema-stable for parquet/SQL consumers).
     * Key collisions cannot occur: ingest excludes the fixed names from
-    * `extra` (IntelIngest.normalize's `known` set).
+    * `extra` (IntelIngest's `fixedColumns`).
     */
   def dataObjectJson(category: String, confidence: Int, source: String,
       threatLevel: String, extra: Map[String, String],

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.functions.{EntryMeta, GraftFunctions}
 import graft.intel.{IntelDb, IntelMetaRows}
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
@@ -32,6 +32,15 @@ import scala.jdk.CollectionConverters._
   *    hash(conv_id), and AQE skew handling stays on for the aggregates.
   */
 object ScanJob {
+
+  /** The transcript table at `path`, read with the declared
+    * [[graft.model.Turn]] schema: the read starts no schema-inference job.
+    */
+  def readTurns(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(turnSchema).parquet(path)
+
+  private lazy val turnSchema: StructType =
+    Encoders.product[graft.model.Turn].schema
 
   /** Extraction stage: one row per (turn, extracted indicator). */
   def candidates(turns: DataFrame): DataFrame =

@@ -502,8 +502,8 @@ object QueryDefs {
     * HashMap<String, DataValue> per entry, matchy-data-format/src/lib.rs:
     * 49-77) — a CSV feed with custom columns (campaign/actor/ttl/score/
     * verified) outside the fixed ThreatDB shape is ingested through the
-    * REAL CSV reader (IntelIngest.readCsv -> normalize -> `extra` +
-    * `extra_types` per-cell inference, match_cmd.rs:83-93), compiled into
+    * REAL CSV reader (IntelIngest.readCsv -> `extra` + `extra_types`
+    * per-cell inference, match_cmd.rs:83-93), compiled into
     * an IntelDb, and the TYPED values round-trip through the broadcast
     * metadata join: the projection below reads them back out of the
     * rendered `extra_json` variant (ttl bigint, score double, verified

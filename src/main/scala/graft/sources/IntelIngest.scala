@@ -1,14 +1,38 @@
 package graft.sources
 
+import com.univocity.parsers.csv.CsvParser
+import graft.intel.DataValues
 import graft.model.IntelEntry
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.io.Text
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.csv.{CSVExprUtils, CSVHeaderChecker, CSVOptions, UnivocityParser}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.util.FailureSafeParser
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode}
+import org.apache.spark.sql.execution.datasources.{HadoopFileLinesReader, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, DataType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+
+import scala.collection.mutable.ArrayBuffer
 
 /** Intel feed ingestion (SURVEY.md §2.1 S5-S7): CSV with an entry/key
   * column, JSON array of {key, data}, and plain text (one entry per line,
   * '#' comments skipped) — the auto-build inputs of the reference
   * (bin/commands/match_cmd.rs:38-155). The builder's "schema" analog is the
   * typed IntelEntry projection with ThreatDB defaults for missing fields.
+  *
+  * CSV and text feeds are parsed on the driver in one pass and come back
+  * as a local relation: a feed is the small side every task uses, built
+  * into an [[graft.intel.IntelDb]] on the driver right after, so it is
+  * never distributed just to be collected again (the reference's
+  * `matchy build` also reads its feed in one process). JSON feeds go
+  * through Spark's JSON reader for their per-value variant typing.
   */
 object IntelIngest {
 
@@ -16,17 +40,11 @@ object IntelIngest {
     "threat_level" -> "unknown", "category" -> "unknown",
     "source" -> "unknown")
 
-  /** Normalize an arbitrary feed DataFrame into the IntelEntry shape.
-    * Accepts `entry` or `key` as the key column; fills ThreatDB defaults.
-    *
-    * @param inferStringCells when true (CSV feeds: every cell is an
-    *   untyped string) string-typed extra columns get the reference's
-    *   per-cell DataValue inference (match_cmd.rs:83-93); when false
-    *   (JSON feeds: types are native, cli_utils.rs:213-243) a string
-    *   stays a string even when it looks numeric.
+  /** Normalize a Spark-read feed DataFrame (the JSON path) into the
+    * IntelEntry shape. Accepts `entry` or `key` as the key column; fills
+    * ThreatDB defaults.
     */
-  def normalize(df: DataFrame,
-      inferStringCells: Boolean = true): DataFrame = {
+  def normalize(df: DataFrame): DataFrame = {
     val keyCol =
       if (df.columns.contains("entry")) "entry"
       else if (df.columns.contains("key")) "key"
@@ -60,8 +78,8 @@ object IntelIngest {
     // HashMap<String, DataValue>, matchy-data-format/src/lib.rs:49-77):
     // every feed column OUTSIDE the fixed shape survives as a string
     // key/value in `extra` (null values dropped) instead of being lost,
-    // with its DataValue type captured in `extra_types` (S5 per-cell CSV
-    // inference / S6 per-VALUE JSON types — graft.intel.DataValues).
+    // with its DataValue type captured in `extra_types` (S6 per-VALUE JSON
+    // types — graft.intel.DataValues).
     // A feed that arrives with `extra`/`extra_types` ALREADY built (the
     // variant-based readJson path) passes them through untouched. The
     // prebuilt check is TYPE-gated: a feed whose own column happens to be
@@ -70,12 +88,11 @@ object IntelIngest {
     val prebuilt = df.schema.fields.exists(f =>
       f.name == "extra" &&
         f.dataType.isInstanceOf[org.apache.spark.sql.types.MapType])
-    val known = Set("entry", "threat_level", "category", "source",
-      "confidence", "to_ids", "comment", "attr_type", "attr_timestamp",
-      "tags") ++ (if (prebuilt) Set("extra", "extra_types") else Set.empty)
+    val known = fixedColumns ++
+      (if (prebuilt) Set("extra", "extra_types") else Set.empty)
     val extraCols = df.columns.filterNot(c =>
       known.contains(c) || c == keyCol).sorted
-    val fieldType: Map[String, org.apache.spark.sql.types.DataType] =
+    val fieldType: Map[String, DataType] =
       df.schema.fields.map(f => f.name -> f.dataType).toMap
     val extraExpr =
       if (prebuilt) col("extra")
@@ -95,8 +112,7 @@ object IntelIngest {
       else
         map_filter(
           map(extraCols.flatMap(c =>
-            Seq(lit(c),
-              tagExpr(col(s"`$c`"), fieldType(c), inferStringCells))): _*),
+            Seq(lit(c), tagExpr(col(s"`$c`"), fieldType(c)))): _*),
           (_, v) => v.isNotNull)
     // ONE withColumns call: both expressions must resolve against the
     // ORIGINAL columns — sequential withColumn would make typesExpr see
@@ -109,28 +125,24 @@ object IntelIngest {
       .where(col("entry").isNotNull && length(col("entry")) > 0)
   }
 
-  /** DataValue tag for one extra cell (null when the cell is null —
-    * matching the absent-key rule of `extra`).
-    *
-    *  - A string-typed source column (every CSV cell) gets the reference's
-    *    per-cell inference (match_cmd.rs:83-93) via [[inferTagUdf]] — a
-    *    tiny deterministic UDF, acceptable here because feeds are the
-    *    broadcast-small side evaluated once at ingest, never per scan row,
-    *    and the Rust parse grammars are not expressible in builtins.
-    *  - A natively-typed column (spark.read.json) maps by Spark type the
-    *    way cli_utils.rs:213-243 maps serde_json values: integrals →
-    *    Int32 (truncating), decimals beyond i64 → Uint64, floats →
-    *    Double, booleans → Bool. Nested arrays/structs are flattened to
-    *    their string cast (pre-existing behavior) and tagged String.
+  /** The columns of the fixed IntelEntry shape; every other feed column
+    * is an extra.
+    */
+  private val fixedColumns = Set("entry", "threat_level", "category",
+    "source", "confidence", "to_ids", "comment", "attr_type",
+    "attr_timestamp", "tags")
+
+  /** DataValue tag for one natively typed extra cell (null when the cell
+    * is null — matching the absent-key rule of `extra`). Spark types map
+    * the way cli_utils.rs:213-243 maps serde_json values: integrals →
+    * Int32 (truncating), decimals beyond i64 → Uint64, floats → Double,
+    * booleans → Bool. Strings, and nested arrays/structs (flattened to
+    * their string cast), are tagged String.
     */
   private def tagExpr(c: org.apache.spark.sql.Column,
-      dt: org.apache.spark.sql.types.DataType,
-      inferStringCells: Boolean): org.apache.spark.sql.Column = {
+      dt: DataType): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.types._
-    import graft.intel.DataValues
     dt match {
-      case StringType if inferStringCells => inferTagUdf(c)
-      case StringType => when(c.isNotNull, lit(DataValues.STR))
       case ByteType | ShortType | IntegerType | LongType =>
         when(c.isNotNull, lit(DataValues.I32))
       case d: DecimalType if d.scale == 0 =>
@@ -148,12 +160,131 @@ object IntelIngest {
     }
   }
 
-  private val inferTagUdf =
-    udf((s: String) => graft.intel.DataValues.inferTag(s))
+  /** CSV feed: header row, entry/key column + metadata columns (S5).
+    *
+    * The rows equal `normalize(spark.read.option("header", "true")
+    * .csv(path))` with every extra cell tagged by the reference's per-cell
+    * inference (match_cmd.rs:83-93), but no Spark job runs: lines, header
+    * names, blank lines, each file's header, the empty-cell null rule and
+    * ragged rows all go through Spark's own text-based CSV reader code
+    * (`CSVOptions`, `UnivocityParser`), and `confidence`, `to_ids` and
+    * `attr_timestamp` through Spark's `Cast` in the session's eval mode.
+    * A feed with no header line gives zero entries.
+    */
+  def readCsv(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sessionState.conf
+    val options = new CSVOptions(Map("header" -> "true"),
+      conf.csvColumnPruning, conf.sessionLocalTimeZone,
+      conf.columnNameOfCorruptRecord)
+    val out = ArrayBuffer[IntelEntry]()
+    var cols: CsvColumns = null
+    eachFileLines(spark, path) { (file, lines) =>
+      val strings = lines.map(t =>
+        new String(t.getBytes, 0, t.getLength, options.charset))
+      // every file drops its first non-blank line; the first one of all
+      // names the columns (Spark's schema inference)
+      CSVExprUtils.extractHeader(strings, options).foreach { header =>
+        if (cols == null)
+          cols = new CsvColumns(
+            CSVUtils.makeSafeHeader(
+              new CsvParser(options.asParserSettings).parseLine(header),
+              conf.caseSensitiveAnalysis, options),
+            options, EvalMode.fromSQLConf(conf))
+        else
+          new CSVHeaderChecker(cols.schema, options, file)
+            .checkHeaderColumnNames(header)
+        CSVExprUtils.filterCommentAndEmpty(strings, options)
+          .flatMap(cols.parse).foreach { row =>
+            val e = cols.entry(row)
+            if (e != null) out += e
+          }
+      }
+    }
+    entriesFrame(spark, out.toSeq)
+  }
 
-  /** CSV feed: header row, entry/key column + metadata columns (S5). */
-  def readCsv(spark: SparkSession, path: String): DataFrame =
-    normalize(spark.read.option("header", "true").csv(path))
+  /** One CSV feed's columns (Spark's header names) and the per-row
+    * normalization: the key is `entry`, else `key`, else the first column;
+    * the fixed fields are read by exact name with ThreatDB defaults; every
+    * other column is an extra, in name order, null cells dropped.
+    */
+  private final class CsvColumns(names: Array[String], options: CSVOptions,
+      evalMode: EvalMode.Value) {
+    val schema = StructType(names.map(StructField(_, StringType)))
+    private val parser = new UnivocityParser(schema, schema, options)
+    private val safeParser = new FailureSafeParser[String](
+      parser.parse(_).toList, options.parseMode, schema,
+      options.columnNameOfCorruptRecord)
+
+    /** The rows of one line, as Spark's PERMISSIVE reader gives them (a
+      * ragged row padded with nulls or cut short). Rows share one object.
+      */
+    def parse(line: String): Iterator[InternalRow] = safeParser.parse(line)
+
+    private val keyIdx = Seq("entry", "key").map(names.indexOf(_))
+      .find(_ >= 0).getOrElse(0)
+    private def fixed(name: String): Int =
+      names.indices.find(i => i != keyIdx && names(i) == name).getOrElse(-1)
+    private def cast(name: String, to: DataType): Cast = {
+      val i = fixed(name)
+      if (i < 0) null
+      else Cast(BoundReference(i, StringType, nullable = true), to,
+        Some(options.zoneId.getId), evalMode)
+    }
+    private val threatLevel = fixed("threat_level")
+    private val category = fixed("category")
+    private val source = fixed("source")
+    private val comment = fixed("comment")
+    private val attrType = fixed("attr_type")
+    private val tags = fixed("tags")
+    private val confidence = cast("confidence", IntegerType)
+    private val toIds = cast("to_ids", BooleanType)
+    private val attrTimestamp = cast("attr_timestamp", LongType)
+    private val extras = names.indices
+      .filter(i => i != keyIdx && !fixedColumns.contains(names(i)))
+      .sortBy(names(_)).toArray
+
+    private def str(row: InternalRow, i: Int, default: String): String =
+      if (i < 0 || row.isNullAt(i)) default
+      else row.getUTF8String(i).toString
+
+    /** The entry of one parsed row, or null when its key is null or
+      * empty. Rows are dropped before any cast, as the pushed-down key
+      * filter of the Spark read did.
+      */
+    def entry(row: InternalRow): IntelEntry = {
+      if (row.isNullAt(keyIdx) || row.getUTF8String(keyIdx).numBytes == 0)
+        return null
+      val extra = Map.newBuilder[String, String]
+      val extraTypes = Map.newBuilder[String, String]
+      extras.foreach { i =>
+        if (!row.isNullAt(i)) {
+          val v = row.getUTF8String(i).toString
+          extra += names(i) -> v
+          extraTypes += names(i) -> DataValues.inferTag(v)
+        }
+      }
+      IntelEntry(
+        entry = row.getUTF8String(keyIdx).toString,
+        threat_level = str(row, threatLevel, defaults("threat_level")),
+        category = str(row, category, defaults("category")),
+        source = str(row, source, defaults("source")),
+        confidence =
+          if (confidence == null) 0
+          else Option(confidence.eval(row)).fold(0)(_.asInstanceOf[Int]),
+        to_ids =
+          if (toIds == null) None
+          else Option(toIds.eval(row)).map(_.asInstanceOf[Boolean]),
+        comment = str(row, comment, ""),
+        attr_type = str(row, attrType, ""),
+        attr_timestamp =
+          if (attrTimestamp == null) -1L
+          else Option(attrTimestamp.eval(row)).fold(-1L)(_.asInstanceOf[Long]),
+        tags = str(row, tags, ""),
+        extra = extra.result(),
+        extra_types = extraTypes.result())
+    }
+  }
 
   /** JSON feed: [{"key": ..., "data": {...}}] or NDJSON of the same (S6).
     *
@@ -194,9 +325,9 @@ object IntelIngest {
       catch {
         case e: org.apache.spark.sql.AnalysisException
             if e.getMessage.contains("infer") =>
-          return emptyNormalized(spark)
+          return entriesFrame(spark, Nil)
       }
-    if (raw.columns.isEmpty) return emptyNormalized(spark)
+    if (raw.columns.isEmpty) return entriesFrame(spark, Nil)
     val nested = raw.columns.contains("data")
     val flat = if (nested) raw.select(col("key"), col("data.*")) else raw
     val keyCol =
@@ -214,7 +345,7 @@ object IntelIngest {
       !c.exists(ch => ch == '.' || ch == '\'' || ch == '"' || ch == '[' ||
         ch == ']' || ch == '$' || ch == '\\'))
     if (extraCols.isEmpty || !pathSafe)
-      return normalize(flat, inferStringCells = false)
+      return normalize(flat)
 
     val v0 = spark.read.format("json")
       .option("multiLine", multiLine.toString)
@@ -268,26 +399,13 @@ object IntelIngest {
         map_filter(
           map(extraCols.toSeq.flatMap(c => Seq(lit(c), tagOf(c))): _*),
           (_, x) => x.isNotNull).as("extra_types"): _*)
-    normalize(assembled, inferStringCells = false)
+    normalize(assembled)
   }
 
   /** First non-whitespace byte of `path` (a file, or the first file of a
     * directory) via the Hadoop FS API — works for any Spark-readable
     * location. 0 when empty/unreadable (callers treat that as NDJSON).
     */
-  /** The normalized frame of a zero-entry feed (schema identical to a
-    * normalized non-empty read).
-    */
-  private def emptyNormalized(spark: SparkSession): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("entry",
-        org.apache.spark.sql.types.StringType)))
-    normalize(
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema),
-      inferStringCells = false)
-  }
-
   private def firstNonWsByte(spark: SparkSession, path: String): Byte = {
     try {
       val p = new org.apache.hadoop.fs.Path(path)
@@ -316,18 +434,88 @@ object IntelIngest {
     } catch { case scala.util.control.NonFatal(_) => 0 }
   }
 
-  /** Text feed: one entry per line, '#' comments and blanks skipped (S7). */
-  def readText(spark: SparkSession, path: String): DataFrame =
-    normalize(
-      spark.read.text(path)
-        .select(trim(col("value")).as("entry"))
-        .where(length(col("entry")) > 0 && !col("entry").startsWith("#")))
+  /** Text feed: one entry per line, '#' comments and blanks skipped (S7).
+    * Each line is trimmed of spaces the way Spark's `trim` does; like
+    * [[readCsv]] it is read on the driver with no Spark job.
+    */
+  def readText(spark: SparkSession, path: String): DataFrame = {
+    val hash = UTF8String.fromString("#")
+    val out = ArrayBuffer[IntelEntry]()
+    eachFileLines(spark, path) { (_, lines) =>
+      lines.foreach { t =>
+        val v = UTF8String.fromBytes(t.getBytes, 0, t.getLength).trim()
+        if (v.numBytes > 0 && !v.startsWith(hash))
+          out += IntelEntry(v.toString, defaults("threat_level"),
+            defaults("category"), defaults("source"), 0)
+      }
+    }
+    entriesFrame(spark, out.toSeq)
+  }
+
+  /** Every line of every file a Spark read of `path` scans, file by file
+    * in [[feedFiles]] order, through Spark's own line reader (Hadoop's
+    * `LineRecordReader`: `\n`, `\r` and `\r\n` line ends, a leading UTF-8
+    * BOM dropped, compression codecs by file suffix). `f` gets the file's
+    * path and its lines; the reader reuses one `Text` for every line.
+    */
+  private def eachFileLines(spark: SparkSession, path: String)(
+      f: (String, Iterator[Text]) => Unit): Unit = {
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    feedFiles(hadoopConf, path).foreach { st =>
+      val reader = new HadoopFileLinesReader(
+        PartitionedFile(InternalRow.empty, SparkPath.fromFileStatus(st), 0,
+          st.getLen),
+        None, hadoopConf)
+      try f(st.getPath.toString, reader) finally reader.close()
+    }
+  }
+
+  /** The files a Spark file-source read of `path` scans, in the order its
+    * rows come back. `path` is a file, a directory (hidden `_`/`.` files
+    * skipped, as Spark's file index does) or a glob. Spark packs its
+    * splits largest first, so the rows come back largest file first.
+    */
+  private def feedFiles(hadoopConf: Configuration,
+      path: String): Seq[FileStatus] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(hadoopConf)
+    val roots = Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Nil)
+    if (roots.isEmpty)
+      throw new java.io.FileNotFoundException(s"Path does not exist: $path")
+    roots.flatMap { s =>
+      if (!s.isDirectory) Seq(s)
+      else fs.listStatus(s.getPath).toSeq
+        .filterNot(c => hiddenName(c.getPath.getName))
+        .map { c =>
+          if (c.isDirectory) throw new IllegalArgumentException(
+            s"feed $path: nested directory ${c.getPath} is not supported")
+          c
+        }
+    }.sortBy(-_.getLen)
+  }
+
+  /** Spark's file-index rule for names a directory read skips
+    * (HadoopFSUtils.shouldFilterOutPathName).
+    */
+  private def hiddenName(name: String): Boolean =
+    ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")) &&
+      !name.startsWith("_common_metadata") && !name.startsWith("_metadata")
+
+  /** Built once: deriving the encoder costs ~10 ms per call. */
+  private lazy val entryEncoder: Encoder[IntelEntry] =
+    ExpressionEncoder[IntelEntry]()
+
+  /** Entries as a local relation with the normalized columns: collecting
+    * it runs no Spark job.
+    */
+  private def entriesFrame(spark: SparkSession,
+      entries: Seq[IntelEntry]): DataFrame =
+    spark.createDataset(entries)(entryEncoder).toDF()
 
   /** Collect a normalized feed to typed entries (driver-side: feeds are
     * small by design — the broadcast side of the pipeline).
     */
-  def toEntries(df: DataFrame): Seq[IntelEntry] = {
-    import df.sparkSession.implicits._
-    df.as[IntelEntry].collect().toSeq
-  }
+  def toEntries(df: DataFrame): Seq[IntelEntry] =
+    df.as(entryEncoder).collect().toSeq
 }
