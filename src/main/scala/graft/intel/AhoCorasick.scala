@@ -5,7 +5,10 @@ package graft.intel
   * crates/matchy-paraglob, which compiles pattern meta-words into an AC
   * automaton and glob-verifies only candidate patterns; SURVEY.md §4.1).
   * Words and texts are UTF-8 ([[ProbeKey]] encoding), so the walk runs on a
-  * candidate's bytes where they lie.
+  * candidate's bytes where they lie. The one automaton of the engine:
+  * [[GlobIndex]] collects the words found in a key ([[findWords]]), and
+  * [[CleanPreScreen]] drives [[step]] itself, fused with its IP anchors,
+  * and stops at the first [[isMatch]].
   *
   * Build: trie + BFS fail links, per-node output lists merged through the
   * fail chain (so probing never walks fail links for outputs). Probe:
@@ -27,7 +30,16 @@ final class AhoCorasick private (
     val nWords: Int
 ) extends Serializable {
 
-  @inline private def step(state: Int, c: Int): Int = {
+  /** True when byte `c` starts some word (leaves the root). */
+  def startsWord(c: Int): Boolean = root(c) != 0
+
+  /** True when some word ends at `state` or on its fail chain (the output
+    * lists are merged down the fail chain at build time).
+    */
+  def isMatch(state: Int): Boolean = out(state).length != 0
+
+  /** The goto/fail transition on byte `c`; at the root it is `root(c)`. */
+  @inline def step(state: Int, c: Int): Int = {
     var s = state
     while (s != 0) {
       val key = (s.toLong << 8) | c
@@ -78,7 +90,9 @@ final class AhoCorasick private (
 
 object AhoCorasick {
 
-  /** Build from distinct non-empty words; word i gets id i. */
+  /** Build from distinct non-empty words; word i gets id i. With no words
+    * the root row is all zero, so no walk finds anything.
+    */
   def build(words: Array[Array[Byte]]): AhoCorasick = {
     // trie with per-node HashMap (construction only)
     val trans = new scala.collection.mutable.ArrayBuffer[java.util.HashMap[Integer, Integer]]()

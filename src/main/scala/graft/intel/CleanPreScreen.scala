@@ -9,8 +9,9 @@ import graft.extract.IocScanner
   * This is the zero-allocation byte form: ONE fused pass over the turn's
   * raw UTF-8 bytes drives (a) the IPv4 `digit.digit` anchor, (b) the IPv6
   * `::` anchor (the extractor only emits ::-compressed forms, so the anchor
-  * is total), and (c) a byte-level Aho-Corasick automaton over every
-  * literal value and every glob literal core, with a dense root row so
+  * is total), and (c) a walk of the engine's one byte automaton
+  * ([[AhoCorasick]], the one GlobIndex probes with) over every literal
+  * value and every glob literal core, whose dense root row makes
   * anchor-free bytes cost one array read. The previous String/token-based
   * form allocated a String per token plus a full lowercased copy of the
   * text per turn — measurably NOT cheap next to the 145 MB/s scanner it was
@@ -36,9 +37,12 @@ import graft.extract.IocScanner
   *  - every glob match implies the pattern's longest literal segment is a
   *    substring of the text under Glob's OWN normalization (exact bytes, or
   *    `asciiLower` when CI — Glob.scala:43-50), which the automaton's
-  *    ASCII fold reproduces exactly; a glob with no literal core disables
-  *    rejection for any turn that has a token (string-path candidates are
-  *    always boundary-delimited tokens).
+  *    ASCII fold reproduces exactly; a glob with no literal core, or whose
+  *    core holds an unpaired surrogate (it can match inside a surrogate
+  *    pair at the char level but never as bytes, see
+  *    [[ProbeKey.hasUnpairedSurrogate]]), disables rejection for any turn
+  *    that has a token (string-path candidates are always
+  *    boundary-delimited tokens).
   *
   * Off by default in front of the scan (`ScanJob.matched(prescreen =
   * false)`): measured on the bench corpus, the screen pass costs ~12% while
@@ -52,16 +56,7 @@ import graft.extract.IocScanner
   * extracted too.
   */
 final class CleanPreScreen private (
-    // dense state-0 transition row (b -> state; 0 = stay at root)
-    root: Array[Int],
-    // open-addressing edge table for states >= 1: key = state*256L + byte
-    keys: Array[Long],
-    vals: Array[Int],
-    mask: Int,
-    fail: Array[Int],
-    // hit(s) = some automaton word ends at state s or on its fail chain
-    hit: Array[Boolean],
-    hasAc: Boolean,
+    ac: AhoCorasick,
     anyTokenFallback: Boolean,
     needIpv4: Boolean,
     needIpv6: Boolean,
@@ -75,12 +70,10 @@ final class CleanPreScreen private (
     val t = new Array[Byte](256)
     if (needIpv4) t('.') = (t('.') | 1).toByte
     if (needIpv6) t(':') = (t(':') | 2).toByte
-    if (hasAc) {
-      var b = 0
-      while (b < 256) {
-        if (root(b) != 0) t(b) = (t(b) | 4).toByte
-        b += 1
-      }
+    var b = 0
+    while (b < 256) {
+      if (ac.startsWord(b)) t(b) = (t(b) | 4).toByte
+      b += 1
     }
     // CI soundness backstop: Java toLowerCase can map NON-ASCII text
     // characters INTO ASCII (U+212A KELVIN SIGN -> 'k', U+0130 -> 'i'), so
@@ -89,8 +82,8 @@ final class CleanPreScreen private (
     // toLowerCase normalization. The ASCII byte fold cannot see that, so
     // any >= 0x80 byte makes the turn pass outright (class bit 8) — a
     // cheap, sound widening; pure-ASCII text (the norm) is unaffected.
-    if (foldCase && hasAc) {
-      var b = 128
+    if (foldCase && ac.nWords > 0) {
+      b = 128
       while (b < 256) { t(b) = (t(b) | 8).toByte; b += 1 }
     }
     t
@@ -132,8 +125,8 @@ final class CleanPreScreen private (
             return true
           if ((c & 2) != 0 && i + 1 < n && bytes(i + 1) == ':') return true
           if ((c & 4) != 0) {
-            state = root(b)
-            if (hit(state)) return true
+            state = ac.step(0, b)
+            if (ac.isMatch(state)) return true
           }
         }
       } else {
@@ -146,41 +139,19 @@ final class CleanPreScreen private (
         } else if (b == ':') {
           if (needIpv6 && i + 1 < n && bytes(i + 1) == ':') return true
         }
-        state = step(state, b)
-        if (hit(state)) return true
+        state = ac.step(state, b)
+        if (ac.isMatch(state)) return true
       }
       i += 1
     }
     false
-  }
-
-  @inline private def step(s0: Int, b: Int): Int = {
-    var s = s0
-    while (s != 0) {
-      val next = probe(s, b)
-      if (next >= 0) return next
-      s = fail(s)
-    }
-    root(b)
-  }
-
-  @inline private def probe(s: Int, b: Int): Int = {
-    val key = s * 256L + b
-    var idx = java.lang.Long.hashCode(key * 0x9e3779b97f4a7c15L) & mask
-    while (true) {
-      val k = keys(idx)
-      if (k == key) return vals(idx)
-      if (k == -1L) return -1
-      idx = (idx + 1) & mask
-    }
-    -1
   }
 }
 
 object CleanPreScreen {
 
   def build(dbs: Seq[IntelDb]): CleanPreScreen = {
-    val words = scala.collection.mutable.LinkedHashSet[Seq[Byte]]()
+    val words = scala.collection.mutable.LinkedHashSet[String]()
     var anyToken = false
     dbs.foreach { db =>
       db.entries.foreach { m =>
@@ -195,7 +166,7 @@ object CleanPreScreen {
               key.toLowerCase(java.util.Locale.ROOT) else key
             if (norm.nonEmpty) {
               if (db.caseInsensitive && norm.exists(_ >= 128)) anyToken = true
-              else words += norm.getBytes("UTF-8").toSeq
+              else words += norm
             }
           case "glob" =>
             val pat = IntelDb.classify(m.entry) match {
@@ -203,10 +174,10 @@ object CleanPreScreen {
               case _                          => m.entry
             }
             Glob.parse(pat, db.caseInsensitive) match {
-              case Right(g) if g.prefilter.nonEmpty =>
-                val core = if (db.caseInsensitive) Glob.asciiLower(g.prefilter)
-                           else g.prefilter
-                words += core.getBytes("UTF-8").toSeq
+              case Right(g) if g.prefilter.nonEmpty &&
+                  !ProbeKey.hasUnpairedSurrogate(g.prefilter) =>
+                words += (if (db.caseInsensitive) Glob.asciiLower(g.prefilter)
+                          else g.prefilter)
               case _ => anyToken = true
             }
         }
@@ -234,85 +205,9 @@ object CleanPreScreen {
     // with the fold active globally, words from case-SENSITIVE dbs must be
     // stored folded too — that widens their screen to case-insensitive
     // (passes more turns: still a sound superset filter)
-    val normWords = words.toArray.map { w =>
-      if (ci) w.map(b => if (b >= 'A' && b <= 'Z') (b + 32).toByte else b)
-      else w
-    }.distinct
-    fromWords(normWords.map(_.toArray), anyToken, v4Real, v6Real, ci)
-  }
-
-  /** Assemble the automaton: trie -> BFS fail links -> packed tables. */
-  private def fromWords(words: Array[Array[Byte]], anyToken: Boolean,
-      needIpv4: Boolean, needIpv6: Boolean, ci: Boolean): CleanPreScreen = {
-    import scala.collection.mutable.ArrayBuffer
-    val edges = ArrayBuffer(new java.util.HashMap[Int, Int]())
-    val terminal = ArrayBuffer(false)
-    words.foreach { w =>
-      var s = 0
-      var i = 0
-      while (i < w.length) {
-        val b = w(i) & 0xff
-        val e = edges(s)
-        var next = e.getOrDefault(b, -1)
-        if (next < 0) {
-          next = edges.size
-          e.put(b, next)
-          edges += new java.util.HashMap[Int, Int]()
-          terminal += false
-        }
-        s = next
-        i += 1
-      }
-      terminal(s) = true
-    }
-    val n = edges.size
-    val fail = new Array[Int](n)
-    val hit = new Array[Boolean](n)
-    val queue = new java.util.ArrayDeque[Int]()
-    val rootEdges = edges(0)
-    rootEdges.forEach { (_, s) => fail(s) = 0; queue.add(s) }
-    hit(0) = terminal(0)
-    while (!queue.isEmpty) {
-      val s = queue.poll()
-      hit(s) = terminal(s) || hit(fail(s))
-      edges(s).forEach { (b, t) =>
-        // fail(t): walk s's fail chain for a b-edge
-        var f = fail(s)
-        var resolved = -1
-        while (resolved < 0) {
-          val nf = edges(f).getOrDefault(b, -1)
-          if (nf >= 0) resolved = nf
-          else if (f == 0) resolved = 0
-          else f = fail(f)
-        }
-        fail(t) = resolved
-        queue.add(t)
-      }
-    }
-    // pack: dense root row + open-addressing table for deeper states
-    val root = new Array[Int](256)
-    rootEdges.forEach { (b, s) => root(b) = s }
-    var nEdges = 0
-    var s = 1
-    while (s < n) { nEdges += edges(s).size; s += 1 }
-    var cap = 16
-    while (cap < nEdges * 2) cap <<= 1
-    val keys = Array.fill(cap)(-1L)
-    val vals = new Array[Int](cap)
-    val mask = cap - 1
-    s = 1
-    while (s < n) {
-      val st = s
-      edges(st).forEach { (b, t) =>
-        val key = st * 256L + b
-        var idx = java.lang.Long.hashCode(key * 0x9e3779b97f4a7c15L) & mask
-        while (keys(idx) != -1L) idx = (idx + 1) & mask
-        keys(idx) = key
-        vals(idx) = t
-      }
-      s += 1
-    }
-    new CleanPreScreen(root, keys, vals, mask, fail, hit, words.nonEmpty,
-      anyToken, needIpv4, needIpv6, ci)
+    val normWords =
+      (if (ci) words.toArray.map(Glob.asciiLower) else words.toArray).distinct
+    new CleanPreScreen(AhoCorasick.build(normWords.map(ProbeKey.encode)),
+      anyToken, v4Real, v6Real, ci)
   }
 }

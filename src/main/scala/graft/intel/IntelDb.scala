@@ -410,8 +410,8 @@ final class GlobIndex private (
   // boxed every matched id and its toArray unboxed them back (~7% of scan
   // CPU in the JFR profile)
   private[intel] final class Scratch {
-    val seenW = new Array[Int](if (ac == null) 0 else ac.nWords) // gen stamps
-    val foundW = new Array[Int](if (ac == null) 0 else ac.nWords)
+    val seenW = new Array[Int](ac.nWords) // gen stamps
+    val foundW = new Array[Int](ac.nWords)
     val seenP = new Array[Int](patterns.length) // gen stamps
     var gen = 0
     val hits = new Array[Int](math.max(4, patterns.length))
@@ -428,67 +428,60 @@ final class GlobIndex private (
     if (patterns.length == 0) return Array.emptyIntArray
     val hits = s.hits
     var nOut = 0
-    if (ac == null) {
-      // no meta-words anywhere: verify all (degenerate tiny sets)
-      var i = 0
-      while (i < patterns.length) { nOut = tryPattern(i, key, hits, nOut); i += 1 }
-    } else {
-      if (s.gen == Int.MaxValue) { // wrap: clear stamps, restart
-        java.util.Arrays.fill(s.seenW, 0)
-        java.util.Arrays.fill(s.seenP, 0)
-        s.gen = 0
-      }
-      s.gen += 1
-      val gen = s.gen
-      val seenW = s.seenW
-      if (ci) key.foldAscii()
-      val hay = if (ci) key.lower else key.bytes
-      val off = if (ci) 0 else key.from
-      val nFound = ac.findWords(hay, off, key.len, seenW, gen, s.foundW)
-      var f = 0
-      while (f < nFound) {
-        val pats = patternsOfWord(s.foundW(f))
-        var k = 0
-        while (k < pats.length) {
-          val p = pats(k)
-          if (s.seenP(p) != gen) {
-            s.seenP(p) = gen
-            // candidate iff ALL of p's words were found
-            val ws = wordsOfPattern(p)
-            var all = true
-            var j = 0
-            while (all && j < ws.length) {
-              if (seenW(ws(j)) != gen) all = false
-              j += 1
-            }
-            // every literal segment is a proven substring: the simple
-            // shapes decide on the bytes, the rest on the decoded text
-            if (all) {
-              val v = patterns(p).provenShape(hay, off, key.len)
-              if (v > 0 || (v < 0 && patterns(p).matchesAnchored(key.string))) {
-                hits(nOut) = entryIdx(p)
-                nOut += 1
-              }
+    if (s.gen == Int.MaxValue) { // wrap: clear stamps, restart
+      java.util.Arrays.fill(s.seenW, 0)
+      java.util.Arrays.fill(s.seenP, 0)
+      s.gen = 0
+    }
+    s.gen += 1
+    val gen = s.gen
+    val seenW = s.seenW
+    if (ci) key.foldAscii()
+    val hay = if (ci) key.lower else key.bytes
+    val off = if (ci) 0 else key.from
+    val nFound = ac.findWords(hay, off, key.len, seenW, gen, s.foundW)
+    var f = 0
+    while (f < nFound) {
+      val pats = patternsOfWord(s.foundW(f))
+      var k = 0
+      while (k < pats.length) {
+        val p = pats(k)
+        if (s.seenP(p) != gen) {
+          s.seenP(p) = gen
+          // candidate iff ALL of p's words were found
+          val ws = wordsOfPattern(p)
+          var all = true
+          var j = 0
+          while (all && j < ws.length) {
+            if (seenW(ws(j)) != gen) all = false
+            j += 1
+          }
+          // every literal segment is a proven substring: the simple
+          // shapes decide on the bytes, the rest on the decoded text
+          if (all) {
+            val v = patterns(p).provenShape(hay, off, key.len)
+            if (v > 0 || (v < 0 && patterns(p).matchesAnchored(key.string))) {
+              hits(nOut) = entryIdx(p)
+              nOut += 1
             }
           }
-          k += 1
         }
-        f += 1
+        k += 1
       }
-      var a = 0
-      while (a < alwaysCandidates.length) {
-        nOut = tryPattern(alwaysCandidates(a), key, hits, nOut)
-        a += 1
-      }
+      f += 1
+    }
+    var a = 0
+    while (a < alwaysCandidates.length) {
+      nOut = tryPattern(alwaysCandidates(a), key, hits, nOut)
+      a += 1
     }
     if (nOut == 0) Array.emptyIntArray
     else {
       // sorted ids (reference emits sorted-deduped pattern ids,
       // paraglob_offset.rs:1174-1182). Dedup is structural here: the seenP
-      // generation stamp (AC path) / single iteration (degenerate path)
-      // verifies each pattern at most once, and entry indexes are unique
-      // per pattern — `.distinct` was a pure per-call allocation tax
-      // (7% of scan CPU in the JFR profile).
+      // generation stamp verifies each pattern at most once, and entry
+      // indexes are unique per pattern — `.distinct` was a pure per-call
+      // allocation tax (7% of scan CPU in the JFR profile).
       val arr = new Array[Int](nOut)
       System.arraycopy(hits, 0, arr, 0, nOut)
       java.util.Arrays.sort(arr)
@@ -541,8 +534,9 @@ object GlobIndex {
       }.toArray
       p += 1
     }
-    val ac = if (wordsB.isEmpty) null
-      else AhoCorasick.build(wordsB.map(ProbeKey.encode).toArray)
+    // with no words (every pattern always a candidate) the automaton is
+    // empty and finds nothing
+    val ac = AhoCorasick.build(wordsB.map(ProbeKey.encode).toArray)
     val patternsOfWord = Array.fill(wordsB.length)(
       new mutable.ArrayBuffer[Int](2))
     var q = 0

@@ -30,6 +30,14 @@ class CleanPreScreenSpec extends AnyFunSuite {
     assert(hits(s, "host.evil-glob.net seen"))
     assert(hits(s, "ping mal7.example.com")) // core ".example.com"
     assert(!hits(s, "totally unrelated text"))
+    // a core with an unpaired surrogate matches inside a pair at the char
+    // level (here the high half of U+1F600) but never as bytes: it must
+    // take the any-token fallback
+    val sur = Seq(db("glob:*evil\uD83D*"))
+    val turn = graft.model.Turn("c", 0, "user", "see evil\uD83D\uDE00.com now", "",
+      new java.sql.Timestamp(0L))
+    assert(graft.oracle.Oracle.matched(Seq(turn), sur).size == 1)
+    assert(hits(CleanPreScreen.build(sur), turn.text))
   }
 
   test("pure-wildcard glob: any-token fallback") {

@@ -52,6 +52,16 @@ class GlobIndexSpec extends AnyFunSuite {
         s"text: '$t'")
   }
 
+  test("word-less pattern set: every pattern verified, same as brute force") {
+    val wordless = Seq("*" -> 0, "???" -> 1, "[ab]?" -> 2)
+    for (ci <- Seq(false, true)) {
+      val idx = GlobIndex.build(wordless, caseInsensitive = ci)
+      for (t <- texts ++ Seq("ax", "Bz", "b", "abcd"))
+        assert(idx.findAll(t).toSeq == bruteForce(wordless, ci, t).toSeq,
+          s"text: '$t', ci: $ci")
+    }
+  }
+
   test("randomized equivalence sweep (deterministic seeds)") {
     val alphabet = "abcx.*-"
     def synth(seed: Long, len: Int): String = {

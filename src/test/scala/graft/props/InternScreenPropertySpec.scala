@@ -66,7 +66,7 @@ class InternScreenPropertySpec extends AnyFunSuite {
     val lit = Gen.oneOf("evil.com", "EVIL.org", "abc.example.com",
       "5d41402abc4b2a76b9719d911017c592")
     val glob = Gen.oneOf("*.bad.net", "mal[0-9].x.com", "*core*", "err-*",
-      "*.suffix.io")
+      "*.suffix.io", "*evil\uD83D*")
     val ip = Gen.oneOf("192.0.2.0/24", "10.1.2.3", "2001:db8::/48")
     Gen.listOfN(4, Gen.oneOf(lit, glob, ip))
       .map(_.distinct.map(e => IntelEntry(e, "high", "t", "s", 90)))
@@ -74,7 +74,8 @@ class InternScreenPropertySpec extends AnyFunSuite {
   private val fillers = Vector("the", "quick", "relay", "node", "ok",
     "cache", "10.1.2.3", "x.bad.net", "mal7.x.com", "evil.com", "a-core-b",
     "err-77", "2001:db8::1", "sub.abc.example.com", "web.suffix.io",
-    "5d41402abc4b2a76b9719d911017c592", "clean.example.net", "192.0.2.55")
+    "5d41402abc4b2a76b9719d911017c592", "clean.example.net", "192.0.2.55",
+    "evil\uD83D\uDE00.com")
   private val textGen: Gen[String] =
     Gen.choose(1, 8).flatMap(n =>
       Gen.listOfN(n, Gen.oneOf(fillers)).map(_.mkString(" ")))
