@@ -16,8 +16,7 @@ object Sinks {
     matched
       // matched.col, not functions.col: a column literally named
       // "data.json" would otherwise parse as a nested-field path and fail
-      // resolution (IntelIngest.normalize quotes extra columns for the
-      // same reason)
+      // resolution
       .select(to_json(struct(matched.columns.map(matched.col): _*))
         .as("value"))
       .write.mode(SaveMode.Overwrite).text(path)

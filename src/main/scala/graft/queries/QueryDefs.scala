@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.functions.{EntryMeta, GraftFunctions, IntelLookup, IntelLookupMulti}
+import graft.functions.{EntryMeta, GraftFunctions, IntelLookupMulti}
 import graft.intel.IntelDb
 import graft.model.IntelEntry
 import graft.ops.{Dedup, Similarity, TextStats}
@@ -233,7 +233,8 @@ object QueryDefs {
     val meta = ScanJob.intelMetaDf(s, Seq(db))
     cands
       .withColumn("hit",
-        explode(IntelLookup.column(col("value"), col("indicator_type"), db)))
+        explode(IntelLookupMulti.column(col("value"), col("indicator_type"),
+          Seq(db))))
       .select(col("value"), col("hit.entry_idx").as("entry_idx"),
         col("hit.prefix_len").as("prefix_len"))
       .join(broadcast(meta.select("entry_idx", "entry")), Seq("entry_idx"))
@@ -254,7 +255,8 @@ object QueryDefs {
     val meta = ScanJob.intelMetaDf(s, Seq(db))
     cands
       .withColumn("hit",
-        explode(IntelLookup.column(col("value"), col("indicator_type"), db)))
+        explode(IntelLookupMulti.column(col("value"), col("indicator_type"),
+          Seq(db))))
       .select(col("value"), col("hit.entry_idx").as("entry_idx"))
       .join(broadcast(meta.select("entry_idx", "entry")), Seq("entry_idx"))
       .groupBy("entry").agg(count(lit(1)).as("n"))
@@ -491,7 +493,7 @@ object QueryDefs {
       lit(".ExAmple.com end")))
       .where(col("indicator_type") === "domain")
       .withColumn("hit", explode(
-        IntelLookup.column(col("value"), col("indicator_type"), db)))
+        IntelLookupMulti.column(col("value"), col("indicator_type"), Seq(db))))
       .select(col("value"), col("hit.entry_idx").as("entry_idx"))
       .join(broadcast(meta.select("entry_idx", "entry")), Seq("entry_idx"))
       .groupBy("value", "entry").agg(count(lit(1)).as("n"))
@@ -530,7 +532,7 @@ object QueryDefs {
     val extraV = parse_json(col("extra_json"))
     domainCands(s, dir)
       .withColumn("hit", explode(
-        IntelLookup.column(col("value"), col("indicator_type"), db)))
+        IntelLookupMulti.column(col("value"), col("indicator_type"), Seq(db))))
       .select(col("value"), col("hit.entry_idx").as("entry_idx"))
       .join(broadcast(meta.select(col("entry_idx"), col("category"),
         coalesce(try_variant_get(extraV, "$.campaign", "string"), lit(""))
@@ -791,8 +793,8 @@ object QueryDefs {
 
   /** q56: JSON-feed DataValue fidelity through the lookup flow — the S6
     * counterpart of q43's CSV path. The feed is written as real JSON and
-    * ingested through `IntelIngest.readJson`'s variant re-read, so typing
-    * is per VALUE (cli_utils.rs:213-243): `ttl` is Int32(3600) on host0
+    * ingested through `IntelIngest.readJson`, which types each value from
+    * its own parsed variant (cli_utils.rs:213-243): `ttl` is Int32(3600) on host0
     * but Double(7200.5) on host1 — a per-COLUMN inference would widen
     * host0 to 7200.5's double and render "3600.0"; the string projection
     * of the rendered `extra_json` variant distinguishes the two ("3600"
@@ -822,7 +824,7 @@ object QueryDefs {
     val extraV = parse_json(col("extra_json"))
     domainCands(s, dir)
       .withColumn("hit", explode(
-        IntelLookup.column(col("value"), col("indicator_type"), db)))
+        IntelLookupMulti.column(col("value"), col("indicator_type"), Seq(db))))
       .select(col("value"), col("hit.entry_idx").as("entry_idx"))
       .join(broadcast(meta.select(col("entry_idx"), col("category"),
         coalesce(try_variant_get(extraV, "$.ttl", "string"), lit(""))
@@ -1104,7 +1106,7 @@ object QueryDefs {
     graft.ops.LogParse.parse(lines, "line", pat)
       .where(col("_grok_matched"))
       .withColumn("hits",
-        IntelLookup.column(col("src"), lit("ipv4"), db))
+        IntelLookupMulti.column(col("src"), lit("ipv4"), Seq(db)))
       .withColumn("sink",
         when(size(col("hits")) > 0, "matched").otherwise("clean"))
       .withColumn("hit", explode_outer(col("hits")))

@@ -20,7 +20,7 @@ class GlobPropertySpec extends AnyFunSuite {
   private def checkProp(name: String, p: Prop): Unit = {
     val res = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(300), p)
-    assert(res.passed, s"$name failed: ${res.status}")
+    assert(res.passed, PropReport(s"$name failed: ${res.status}"))
   }
 
   private sealed trait Seg

@@ -17,7 +17,7 @@ class InternScreenPropertySpec extends AnyFunSuite {
   private def checkProp(name: String, p: Prop, min: Int = 300): Unit = {
     val res = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(min), p)
-    assert(res.passed, s"$name failed: ${res.status}")
+    assert(res.passed, PropReport(s"$name failed: ${res.status}"))
   }
 
   // adversarial generator: values drawn from a SMALL alphabet and length

@@ -4,7 +4,9 @@ import graft.{JobCounter, SparkTestBase}
 import graft.intel.DataValues
 import graft.model.IntelEntry
 import org.apache.spark.SparkThrowable
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.charset.StandardCharsets.UTF_8
@@ -43,13 +45,13 @@ class IngestDifferentialSpec extends AnyFunSuite {
   }.toArray
 
   private def sparkCsv(path: String): Seq[IntelEntry] =
-    IntelIngest.toEntries(IntelIngest.normalize(
+    IntelIngest.toEntries(IngestDifferentialSpec.normalize(
       spark.read.option("header", "true").csv(path)))
       .map(e => e.copy(extra_types =
         e.extra.map { case (k, v) => k -> DataValues.inferTag(v) }))
 
   private def sparkText(path: String): Seq[IntelEntry] =
-    IntelIngest.toEntries(IntelIngest.normalize(
+    IntelIngest.toEntries(IngestDifferentialSpec.normalize(
       spark.read.text(path).select(trim(col("value")).as("entry"))
         .where(length(col("entry")) > 0 && !col("entry").startsWith("#"))))
 
@@ -245,6 +247,9 @@ class IngestDifferentialSpec extends AnyFunSuite {
     val csv = write("jobs.csv",
       "entry,confidence,to_ids,note\na.com, 9 ,yes,1e3\nb.com,,,\n")
     val txt = write("jobs.txt", "a.com\nb.com\n")
+    val json = write("jobs.json",
+      "{\"key\": \"a.com\", \"data\": {\"confidence\": 9, \"note\": 1e3}}\n" +
+        "[{\"key\": \"b.com\"}]\n")
     val (entries, jobs) = JobCounter.count(spark)(
       IntelIngest.toEntries(IntelIngest.readCsv(spark, csv)))
     assert(entries.nonEmpty && jobs == 0, s"readCsv started $jobs jobs")
@@ -252,14 +257,153 @@ class IngestDifferentialSpec extends AnyFunSuite {
       IntelIngest.toEntries(IntelIngest.readText(spark, txt)))
     assert(lines.size == 2 && textJobs == 0,
       s"readText started $textJobs jobs")
+    val (records, jsonJobs) = JobCounter.count(spark)(
+      IntelIngest.toEntries(IntelIngest.readJson(spark, json)))
+    assert(records.size == 2 && jsonJobs == 0,
+      s"readJson started $jsonJobs jobs")
     // the counter does see the jobs of Spark's CSV reader
     assert(JobCounter.count(spark)(sparkCsv(csv))._2 > 0)
 
     def shape(df: org.apache.spark.sql.DataFrame) =
       df.schema.map(f => f.name -> f.dataType)
-    assert(shape(IntelIngest.readCsv(spark, csv)) == shape(
-      IntelIngest.normalize(spark.read.option("header", "true").csv(csv))))
+    assert(shape(IntelIngest.readCsv(spark, csv)) ==
+      shape(IngestDifferentialSpec.normalize(
+        spark.read.option("header", "true").csv(csv))))
     assert(shape(IntelIngest.readText(spark, txt)) ==
       shape(IntelIngest.readCsv(spark, csv)))
+    assert(shape(IntelIngest.readJson(spark, json)) ==
+      shape(IntelIngest.readCsv(spark, csv)))
   }
+}
+
+/** The Spark-side feed normalization that the driver-side readers
+  * replace, kept as the reference they are checked against.
+  */
+private object IngestDifferentialSpec {
+
+  private val defaults = Map(
+    "threat_level" -> "unknown", "category" -> "unknown",
+    "source" -> "unknown")
+
+  /** Normalize a Spark-read feed DataFrame (the JSON path) into the
+    * IntelEntry shape. Accepts `entry` or `key` as the key column; fills
+    * ThreatDB defaults.
+    */
+  def normalize(df: DataFrame): DataFrame = {
+    val keyCol =
+      if (df.columns.contains("entry")) "entry"
+      else if (df.columns.contains("key")) "key"
+      else df.columns.head
+    var out = df.withColumnRenamed(keyCol, "entry")
+    defaults.foreach { case (c, d) =>
+      out =
+        if (out.columns.contains(c)) out.withColumn(c, coalesce(col(c).cast("string"), lit(d)))
+        else out.withColumn(c, lit(d))
+    }
+    out = if (out.columns.contains("confidence"))
+      out.withColumn("confidence", coalesce(col("confidence").cast("int"), lit(0)))
+    else out.withColumn("confidence", lit(0))
+    // optional attribute-level metadata (MISP fidelity fields): honored when
+    // the feed carries them, defaulted to "absent" otherwise
+    out = if (out.columns.contains("to_ids"))
+      out.withColumn("to_ids", col("to_ids").cast("boolean"))
+    else out.withColumn("to_ids", lit(null).cast("boolean"))
+    Seq("comment" -> "", "attr_type" -> "", "tags" -> "").foreach {
+      case (c, d) =>
+        out =
+          if (out.columns.contains(c))
+            out.withColumn(c, coalesce(col(c).cast("string"), lit(d)))
+          else out.withColumn(c, lit(d))
+    }
+    out = if (out.columns.contains("attr_timestamp"))
+      out.withColumn("attr_timestamp",
+        coalesce(col("attr_timestamp").cast("long"), lit(-1L)))
+    else out.withColumn("attr_timestamp", lit(-1L))
+    // dynamic metadata passthrough (reference: arbitrary per-entry
+    // HashMap<String, DataValue>, matchy-data-format/src/lib.rs:49-77):
+    // every feed column OUTSIDE the fixed shape survives as a string
+    // key/value in `extra` (null values dropped) instead of being lost,
+    // with its DataValue type captured in `extra_types` (S6 per-VALUE JSON
+    // types — graft.intel.DataValues).
+    // A feed that arrives with `extra`/`extra_types` ALREADY built (the
+    // variant-based readJson path) passes them through untouched. The
+    // prebuilt check is TYPE-gated: a feed whose own column happens to be
+    // NAMED "extra" (a plain string) must keep the legacy behavior of
+    // being stringified into the extra map, not crash toEntries' upcast.
+    val prebuilt = df.schema.fields.exists(f =>
+      f.name == "extra" &&
+        f.dataType.isInstanceOf[org.apache.spark.sql.types.MapType])
+    val known = fixedColumns ++
+      (if (prebuilt) Set("extra", "extra_types") else Set.empty)
+    val extraCols = df.columns.filterNot(c =>
+      known.contains(c) || c == keyCol).sorted
+    val fieldType: Map[String, DataType] =
+      df.schema.fields.map(f => f.name -> f.dataType).toMap
+    val extraExpr =
+      if (prebuilt) col("extra")
+      else if (extraCols.isEmpty)
+        map().cast("map<string,string>")
+      else
+        map_filter(
+          map(extraCols.flatMap(c =>
+            Seq(lit(c), col(s"`$c`").cast("string"))): _*),
+          (_, v) => v.isNotNull)
+    val typesExpr =
+      if (prebuilt)
+        (if (df.columns.contains("extra_types")) col("extra_types")
+         else map().cast("map<string,string>"))
+      else if (extraCols.isEmpty)
+        map().cast("map<string,string>")
+      else
+        map_filter(
+          map(extraCols.flatMap(c =>
+            Seq(lit(c), tagExpr(col(s"`$c`"), fieldType(c)))): _*),
+          (_, v) => v.isNotNull)
+    // ONE withColumns call: both expressions must resolve against the
+    // ORIGINAL columns — sequential withColumn would make typesExpr see
+    // the already-replaced map when the feed has its own "extra" column
+    out = out.withColumns(Map("extra" -> extraExpr,
+      "extra_types" -> typesExpr))
+    out.select("entry", "threat_level", "category", "source", "confidence",
+      "to_ids", "comment", "attr_type", "attr_timestamp", "tags", "extra",
+      "extra_types")
+      .where(col("entry").isNotNull && length(col("entry")) > 0)
+  }
+
+  /** The columns of the fixed IntelEntry shape; every other feed column
+    * is an extra.
+    */
+  private val fixedColumns = Set("entry", "threat_level", "category",
+    "source", "confidence", "to_ids", "comment", "attr_type",
+    "attr_timestamp", "tags")
+
+  /** DataValue tag for one natively typed extra cell (null when the cell
+    * is null — matching the absent-key rule of `extra`). Spark types map
+    * the way cli_utils.rs:213-243 maps serde_json values: integrals →
+    * Int32 (truncating), decimals beyond i64 → Uint64, floats → Double,
+    * booleans → Bool. Strings, and nested arrays/structs (flattened to
+    * their string cast), are tagged String.
+    */
+  private def tagExpr(c: org.apache.spark.sql.Column,
+      dt: DataType): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case ByteType | ShortType | IntegerType | LongType =>
+        when(c.isNotNull, lit(DataValues.I32))
+      case d: DecimalType if d.scale == 0 =>
+        // beyond-i64 integrals: in [0, u64::MAX] → Uint64 (as_u64 path),
+        // negative or beyond u64 → Double (as_f64 fallback,
+        // cli_utils.rs:218-223 — as_u64 fails past 2^64-1 too)
+        when(c.isNull, lit(null).cast("string"))
+          .when(c >= 0 && c <= lit(new java.math.BigDecimal(DataValues.U64Max)),
+            lit(DataValues.U64))
+          .otherwise(lit(DataValues.F64))
+      case FloatType | DoubleType | _: DecimalType =>
+        when(c.isNotNull, lit(DataValues.F64))
+      case BooleanType => when(c.isNotNull, lit(DataValues.BOOL))
+      case _ => when(c.isNotNull, lit(DataValues.STR))
+    }
+  }
+
+
 }
