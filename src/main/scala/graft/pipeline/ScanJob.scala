@@ -33,14 +33,19 @@ import scala.jdk.CollectionConverters._
   */
 object ScanJob {
 
-  /** The transcript table at `path`, read with the declared
-    * [[graft.model.Turn]] schema: the read starts no schema-inference job.
+  /** The transcript table at `path`, read with [[turnSchema]]: the read
+    * starts no schema-inference job.
     */
   def readTurns(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(turnSchema).parquet(path)
 
-  private lazy val turnSchema: StructType =
-    Encoders.product[graft.model.Turn].schema
+  /** The transcript schema, derived from [[graft.model.Turn]] with every
+    * field nullable, so a JSON turn missing a field reads it as null.
+    */
+  lazy val turnSchema: StructType = {
+    val s = Encoders.product[graft.model.Turn].schema
+    StructType(s.fields.map(_.copy(nullable = true)))
+  }
 
   /** Extraction stage: one row per (turn, extracted indicator). */
   def candidates(turns: DataFrame): DataFrame =

@@ -5,7 +5,6 @@ import graft.pipeline.ScanJob
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import org.apache.spark.sql.types._
 
 /** Streaming variant of the scan job — the follow/tail -f analog (S4,
   * bin/match_processor/follow.rs): a Structured Streaming file source over
@@ -17,14 +16,6 @@ import org.apache.spark.sql.types._
   */
 object StreamingScan {
 
-  val turnSchema: StructType = StructType(Seq(
-    StructField("conv_id", StringType),
-    StructField("turn_idx", IntegerType),
-    StructField("role", StringType),
-    StructField("text", StringType),
-    StructField("tool", StringType),
-    StructField("ts", TimestampType)))
-
   /** Start a streaming scan over `inDir` (json-lines turn files), writing
     * matched rows to `outDir/matched_stream`. `dbsSupplier` is re-invoked
     * every micro-batch (hot reload).
@@ -33,7 +24,7 @@ object StreamingScan {
       dbsSupplier: () => Seq[IntelDb],
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val stream = spark.readStream
-      .schema(turnSchema)
+      .schema(ScanJob.turnSchema)
       .json(inDir)
     stream.writeStream
       .option("checkpointLocation", s"$outDir/_checkpoint")
@@ -71,7 +62,7 @@ object StreamingScan {
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     import org.apache.spark.sql.functions._
     val stream = spark.readStream
-      .schema(turnSchema)
+      .schema(ScanJob.turnSchema)
       .json(inDir)
     stream.writeStream
       .option("checkpointLocation", s"$outDir/_checkpoint_routed")
@@ -100,7 +91,7 @@ object StreamingScan {
   def windowedMatchCounts(spark: SparkSession, inDir: String, outDir: String,
       dbs: Seq[IntelDb],
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val stream = spark.readStream.schema(turnSchema).json(inDir)
+    val stream = spark.readStream.schema(ScanJob.turnSchema).json(inDir)
     val cands = stream
       .select(col("ts"), col("conv_id"), col("turn_idx"), col("role"),
         explode(graft.functions.GraftFunctions.extract_iocs(col("text")))
@@ -156,7 +147,7 @@ object StreamingScan {
       idleGapMs: Long = 60000L,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     import spark.implicits._
-    val stream = spark.readStream.schema(turnSchema).json(inDir)
+    val stream = spark.readStream.schema(ScanJob.turnSchema).json(inDir)
     val perTurn = stream
       // rows with no event time can neither advance nor respect the
       // watermark — and a null ts would NPE inside the state function
@@ -244,7 +235,7 @@ object StreamingScan {
   def conversationState(spark: SparkSession, inDir: String, outDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     import spark.implicits._
-    val stream = spark.readStream.schema(turnSchema).json(inDir)
+    val stream = spark.readStream.schema(ScanJob.turnSchema).json(inDir)
     val perTurn = stream
       // null ts cannot contribute to first/last (and would NPE the tuple
       // deserializer — poison pill); null text = no candidates (see the

@@ -56,7 +56,7 @@ class SourcesSinksSpec extends AnyFunSuite {
         "\n").getBytes("UTF-8"))
     gz.close()
     val turns = spark.read
-      .schema(graft.streaming.StreamingScan.turnSchema).json(dir)
+      .schema(ScanJob.turnSchema).json(dir)
     assert(turns.count() == 2)
     val db = graft.intel.IntelDb.build("t", Seq(
       graft.model.IntelEntry("192.0.2.0/24", "high", "c2", "f", 90)))
