@@ -58,58 +58,79 @@ object Sinks {
   def ndjsonMatched(matched: DataFrame, sourcePath: String,
       tsSeconds: Column, path: String,
       inlineExtra: Boolean = false): Unit = {
-    val extraField =
-      // typed path: `extra_json` (the per-entry DataValue
-      // rendering) parses to a VARIANT, which to_json serializes as raw
-      // typed JSON — `"ttl":3600`, `"verified":true` — matching the
-      // reference's serde DataValue serialization. The map fallback keeps
-      // pre-round-5 frames (all-string extras) working.
-      if (matched.columns.contains("extra_json"))
-        when(col("extra_json").isNotNull, parse_json(col("extra_json")))
-      else if (matched.columns.contains("extra"))
-        when(size(col("extra")) > 0, col("extra"))
-      else lit(null).cast("map<string,string>")
-    val dataObj =
+    // Each entry's data object becomes its JSON text here, and the typed
+    // renderings (`extra_json`, `data_json`: per-entry DataValue JSON —
+    // `"ttl":3600`, `"verified":true` — matching the reference's serde
+    // DataValue serialization) are spliced in as text. Read back through
+    // a variant (`to_json(parse_json(..))`) their strings would decode
+    // with the JVM's default charset and garble non-ASCII text wherever
+    // that is not UTF-8. The map fallback keeps pre-round-5 frames
+    // (all-string extras) working.
+    val dataText =
       if (inlineExtra) {
         require(matched.columns.contains("data_json"),
           "inlineExtra needs the data_json metadata column")
-        parse_json(col("data_json"))
-      } else struct(col("category"), col("confidence"),
-        extraField.as("extra"), col("source"), col("threat_level"))
+        col("data_json")
+      } else if (matched.columns.contains("extra_json"))
+        splice(to_json(struct(col("category"), col("confidence"),
+          placeholder(col("extra_json")).as("extra"), col("source"),
+          col("threat_level"))), "extra", col("extra_json"))
+      else {
+        val extra =
+          if (matched.columns.contains("extra"))
+            when(size(col("extra")) > 0, col("extra"))
+          else lit(null).cast("map<string,string>")
+        to_json(struct(col("category"), col("confidence"), extra.as("extra"),
+          col("source"), col("threat_level")))
+      }
     val grouped = matched.withColumn("__ts", tsSeconds)
       .groupBy(col("conv_id"), col("turn_idx"), col("span_start"),
         col("value"), col("database_id"), col("match_type"),
         col("prefix_len"), col("cidr"), col("__ts"))
       .agg(count(lit(1)).cast("int").as("pattern_count"),
         transform(
-          // array_sort with an explicit id comparator: the struct carries a
-          // map (extra), which sort_array's natural ordering cannot order
           array_sort(collect_list(struct(col("entry_idx").as("i"),
-            dataObj.as("d"))),
-            (l, r) => when(l("i") < r("i"), -1)
-              .when(l("i") > r("i"), 1).otherwise(0)),
+            dataText.as("d")))),
           x => x.getField("d")).as("data_arr"))
     val ts = format_string("%.3f", col("__ts").cast("double"))
-    val ipJson = to_json(struct(
+    val ipData = element_at(col("data_arr"), 1)
+    val ipJson = splice(to_json(struct(
       col("cidr"),
-      element_at(col("data_arr"), 1).as("data"),
+      placeholder(ipData).as("data"),
       col("match_type"),
       col("value").as("matched_text"),
       col("prefix_len"),
       lit(sourcePath).as("source"),
-      ts.as("timestamp")))
-    val patJson = to_json(struct(
-      col("data_arr").as("data"),
+      ts.as("timestamp"))), "data", ipData)
+    val patData =
+      concat(lit("["), array_join(col("data_arr"), ",", "null"), lit("]"))
+    val patJson = splice(to_json(struct(
+      placeholder(patData).as("data"),
       col("match_type"),
       col("value").as("matched_text"),
       col("pattern_count"),
       lit(sourcePath).as("source"),
-      ts.as("timestamp")))
+      ts.as("timestamp"))), "data", patData)
     grouped
       .select(when(col("match_type") === "ip", ipJson).otherwise(patJson)
         .as("value"))
       .write.mode(SaveMode.Overwrite).text(path)
   }
+
+  /** A string member's stand-in for JSON text spliced in later: U+0001,
+    * which `to_json` writes as `\u0001`; null (member omitted) where the
+    * text is null.
+    */
+  private def placeholder(text: Column): Column =
+    when(text.isNotNull, lit("\u0001"))
+
+  /** `json` with its `field` member's [[placeholder]] replaced by the JSON
+    * text in `text`. The placeholder cannot occur elsewhere in the line:
+    * inside a JSON string every quote is escaped.
+    */
+  private def splice(json: Column, field: String, text: Column): Column =
+    replace(json, lit(s""""$field":"\\u0001""""),
+      concat(lit(s""""$field":"""), coalesce(text, lit(""))))
 
   /** Extract sink (S11): candidate dump as json/csv/text with optional
     * dedup on value (extract_cmd.rs:133-137, 241-271).

@@ -8,25 +8,29 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.io.Text
 import org.apache.spark.paths.SparkPath
-import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.csv.{CSVExprUtils, CSVHeaderChecker, CSVOptions, UnivocityParser}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.variant.SchemaOfVariant
 import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JSONOptions}
-import org.apache.spark.sql.catalyst.util.FailureSafeParser
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.catalyst.util.{ArrayData, FailureSafeParser, MapData}
 import org.apache.spark.sql.execution.datasources.{CodecStreams, HadoopFileLinesReader, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.csv.CSVUtils
+import org.apache.spark.sql.graftbridge.FrameBridge
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.types.variant.{Variant, VariantBuilder, VariantUtil}
 import org.apache.spark.types.variant.VariantUtil.Type
-import org.apache.spark.unsafe.types.{UTF8String, VariantVal}
+import org.apache.spark.unsafe.types.{CalendarInterval, GeographyVal, GeometryVal, UTF8String, VariantVal}
 
 import java.io.CharConversionException
 import java.nio.charset.MalformedInputException
 import java.nio.charset.StandardCharsets.UTF_8
+import scala.collection.immutable.{AbstractSeq, ArraySeq, IndexedSeq}
 import scala.collection.mutable.ArrayBuffer
 
 /** Intel feed ingestion (SURVEY.md §2.1 S5-S7): CSV with an entry/key
@@ -104,7 +108,7 @@ object IntelIngest {
           }
       }
     }
-    entriesFrame(spark, out.toSeq)
+    entriesFrame(spark, out)
   }
 
   /** One feed's column names and the normalization of its rows, shared by
@@ -265,7 +269,7 @@ object IntelIngest {
       val e = cols.entry(new GenericInternalRow(values), types)
       if (e != null) out += e
     }
-    entriesFrame(spark, out.toSeq)
+    entriesFrame(spark, out)
   }
 
   private val U64Max = new java.math.BigDecimal(DataValues.U64Max)
@@ -368,7 +372,7 @@ object IntelIngest {
             defaults("category"), defaults("source"), 0)
       }
     }
-    entriesFrame(spark, out.toSeq)
+    entriesFrame(spark, out)
   }
 
   /** Every line of every file a Spark read of `path` scans, file by file
@@ -428,19 +432,84 @@ object IntelIngest {
       !name.startsWith("_common_metadata") && !name.startsWith("_metadata")
 
   /** Built once: deriving the encoder costs ~10 ms per call. */
-  private lazy val entryEncoder: Encoder[IntelEntry] =
+  private lazy val entryEncoder: ExpressionEncoder[IntelEntry] =
     ExpressionEncoder[IntelEntry]()
 
-  /** Entries as a local relation with the normalized columns: collecting
-    * it runs no Spark job.
+  /** Entries as a local relation with the normalized columns, the plan
+    * `spark.createDataset(entries)` builds, but whose rows are the entries
+    * themselves ([[EntryRows]]): [[toEntries]] of this frame returns them
+    * as parsed, and their Catalyst rows are rendered only if the frame is
+    * queried. Collecting it runs no Spark job.
     */
   private def entriesFrame(spark: SparkSession,
-      entries: Seq[IntelEntry]): DataFrame =
-    spark.createDataset(entries)(entryEncoder).toDF()
+      entries: Iterable[IntelEntry]): DataFrame =
+    FrameBridge.ofLocalRelation(spark, LocalRelation(
+      DataTypeUtils.toAttributes(entryEncoder.schema),
+      new EntryRows(ArraySeq.from(entries))))
+
+  /** A feed's entries as the rows of a local relation. The rows are
+    * rendered with the entry encoder's serializer, all at once, the first
+    * time a field of any of them is read, so a frame that only goes back
+    * to [[toEntries]] never renders them; the entries live as long as the
+    * frame's plan.
+    */
+  private final class EntryRows(val entries: ArraySeq[IntelEntry])
+      extends AbstractSeq[InternalRow] with IndexedSeq[InternalRow]
+      with Serializable {
+    lazy val rendered: Array[InternalRow] = {
+      val toRow = entryEncoder.createSerializer()
+      entries.map(toRow(_).copy()).toArray
+    }
+    def apply(i: Int): InternalRow = new EntryRow(this, i)
+    def length: Int = entries.length
+  }
+
+  /** Row `i` of `rows`. Spark visits every element of a relation's data
+    * whenever it builds a frame over it (`QueryPlan.expressions`), so an
+    * element renders nothing until one of its fields is read.
+    */
+  private final class EntryRow(rows: EntryRows, i: Int) extends InternalRow {
+    private def row: InternalRow = rows.rendered(i)
+    def numFields: Int = row.numFields
+    def setNullAt(o: Int): Unit = row.setNullAt(o)
+    def update(o: Int, v: Any): Unit = row.update(o, v)
+    def copy(): InternalRow = row.copy()
+    def isNullAt(o: Int): Boolean = row.isNullAt(o)
+    def getBoolean(o: Int): Boolean = row.getBoolean(o)
+    def getByte(o: Int): Byte = row.getByte(o)
+    def getShort(o: Int): Short = row.getShort(o)
+    def getInt(o: Int): Int = row.getInt(o)
+    def getLong(o: Int): Long = row.getLong(o)
+    def getFloat(o: Int): Float = row.getFloat(o)
+    def getDouble(o: Int): Double = row.getDouble(o)
+    def getDecimal(o: Int, p: Int, s: Int): Decimal = row.getDecimal(o, p, s)
+    def getUTF8String(o: Int): UTF8String = row.getUTF8String(o)
+    def getBinary(o: Int): Array[Byte] = row.getBinary(o)
+    def getGeography(o: Int): GeographyVal = row.getGeography(o)
+    def getGeometry(o: Int): GeometryVal = row.getGeometry(o)
+    def getInterval(o: Int): CalendarInterval = row.getInterval(o)
+    def getVariant(o: Int): VariantVal = row.getVariant(o)
+    def getStruct(o: Int, n: Int): InternalRow = row.getStruct(o, n)
+    def getArray(o: Int): ArrayData = row.getArray(o)
+    def getMap(o: Int): MapData = row.getMap(o)
+    def get(o: Int, t: DataType): AnyRef = row.get(o, t)
+    override def equals(o: Any): Boolean = o match {
+      case e: EntryRow => row == e.row
+      case r => row == r
+    }
+    override def hashCode: Int = row.hashCode
+    override def toString: String = row.toString
+  }
 
   /** Collect a normalized feed to typed entries (driver-side: feeds are
-    * small by design — the broadcast side of the pipeline).
+    * small by design — the broadcast side of the pipeline). A reader's
+    * frame, unchanged, gives back the entries the reader parsed and runs
+    * no query; any other frame (a `where`, a `select`, a union, a Spark
+    * read) is collected.
     */
   def toEntries(df: DataFrame): Seq[IntelEntry] =
-    df.as(entryEncoder).collect().toSeq
+    FrameBridge.logicalPlan(df) match {
+      case LocalRelation(_, rows: EntryRows, _, _) => rows.entries
+      case _ => df.as(entryEncoder).collect().toSeq
+    }
 }

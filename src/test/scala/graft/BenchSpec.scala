@@ -1,7 +1,11 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
+
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
 
 /** `Bench.timeQueries` times every query by writing its full output, and a
   * query that throws is reported only under `errors`.
@@ -37,5 +41,31 @@ class BenchSpec extends AnyFunSuite {
     assert(t.seconds.isEmpty)
     assert(t.errors.map(_._1) == Seq("q_raises"))
     assert(spark.range(3).selectExpr("raise_error('evaluated') AS v").count() == 3)
+  }
+
+  test("timeQueries runs one untimed warm-up job before the clock starts") {
+    // no queries: the warm-up job still runs, and the timings stay empty
+    val (empty, jobs) = JobCounter.count(spark)(
+      Bench.timeQueries(spark, sf, Map.empty))
+    assert(jobs >= 1, "no warm-up job ran")
+    assert(empty.seconds.isEmpty && empty.errors.isEmpty && empty.total == 0)
+
+    // with a query: a job (the warm-up) started before the query was built
+    val starts = new ConcurrentLinkedQueue[Long]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = starts.add(e.time)
+    }
+    @volatile var builtAt = Long.MaxValue
+    val q: (SparkSession, String) => DataFrame = (s, _) => {
+      builtAt = System.currentTimeMillis()
+      s.range(3).toDF()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val t = try JobCounter.count(spark)(
+      Bench.timeQueries(spark, sf, Map("q_only" -> q)))._1
+    finally spark.sparkContext.removeSparkListener(listener)
+    assert(t.seconds.map(_._1) == Seq("q_only") && t.errors.isEmpty)
+    assert(starts.asScala.exists(_ < builtAt),
+      s"no job started before the query ($builtAt): ${starts.asScala}")
   }
 }
