@@ -11,42 +11,34 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.AccumulatorV2
 
 /** Whole-turn scan in ONE expression: extraction (E1-E8) + multi-database
-  * lookup (L2/L3/L4 x L8) per text value, emitted in one of two shapes.
+  * lookup (L2/L3/L4 x L8) per text value, as `array<struct<indicator_type,
+  * value, matched_text, span_start, span_end, db_idx, entry_idx,
+  * prefix_len, match_type>>` — one element per (candidate x database hit),
+  * hitless candidates omitted (`scanFlat`). A turn with no hit gives an
+  * empty array, so `explode_outer` turns it into the one null row that is
+  * its clean-sink row: a turn's cleanliness is row-local, and the matched
+  * and clean sinks fan out from ONE pass with no per-turn aggregation,
+  * anti-join or second scan. This mirrors the reference worker loop, which
+  * knows a line is clean the moment its candidate loop ends
+  * (processing/parallel.rs:494-700).
   *
-  * Nested (`scan`, used by ScanJob.run, streaming and the queries):
-  * `array<struct<sink, indicator_type, value, matched_text, span_start,
-  * span_end, hits array<struct<db_idx, entry_idx, prefix_len,
-  * match_type>>>>` with
-  *  - one element per extracted candidate (sink = "cand"; `hits` lists every
-  *    database hit for that candidate, possibly empty);
-  *  - exactly one element with sink = "clean" and no candidate fields iff
-  *    the turn produced ZERO hits across all candidates and databases
-  *    (covers both "no candidates" and "candidates but nothing matched").
-  * This makes a turn's cleanliness row-local after the explode — the matched
-  * and clean sinks fan out from ONE pass with no per-turn aggregation, no
-  * anti-join, and no second scan of the input (the round-1 clean sink
-  * shuffled the whole table twice; see VERDICT round 1, "What's wrong" #4).
-  * Mirrors the reference worker loop, which knows a line is clean the moment
-  * its candidate loop ends (processing/parallel.rs:494-700).
+  * With `counts`, every extracted candidate, hit or not, is counted per
+  * extractor kind into that accumulator (`ScanJob.run`'s
+  * `candidates_<type>` stats).
   *
-  * Flat (`flat = true`, `scanFlat`, used by ScanJob.matched): one element
-  * per (candidate x database hit), hitless candidates and clean turns
-  * omitted — `array<struct<indicator_type, value, matched_text, span_start,
-  * span_end, db_idx, entry_idx, prefix_len, match_type>>`. Exploding the
-  * nested rows, filtering hitless candidates and exploding `hits` again
-  * materializes every intermediate row; the flat form emits only the
-  * surviving rows, so the plan is ONE Generate.
-  *
-  * Both shapes (and IntelLookupMulti) share ScanTurn's probe loops, which
+  * `scanFlat` and IntelLookupMulti share ScanTurn's probe loops, which
   * probe from the candidate's bytes in the scan buffer (the string path)
   * or its parsed address (the IP path); UTF8Strings are built only for
   * emitted rows. Codegen emits a direct static call, keeping the stage in
-  * whole-stage codegen.
+  * whole-stage codegen. The nested emitter `scan` (one row per candidate
+  * plus a clean marker) is no longer planned; it stays as the reference
+  * the shape tests and the benchmark's checks compare against.
   */
 case class ScanTurn(child: Expression, dbs: BcHandle[Array[IntelDb]],
-    config: ScanConfig, flat: Boolean = false)
+    config: ScanConfig, counts: CandidateCounts = null)
     extends UnaryExpression with ImplicitCastInputTypes {
 
   @transient private lazy val scanner = new IocScanner(config)
@@ -55,30 +47,26 @@ case class ScanTurn(child: Expression, dbs: BcHandle[Array[IntelDb]],
   // non-string child must fail analysis, not ClassCastException per task
   override def inputTypes: Seq[DataType] = Seq(StringType)
 
-  override def dataType: DataType =
-    if (flat) ScanTurn.flatSchema else ScanTurn.schema
+  override def dataType: DataType = ScanTurn.flatSchema
   override def nullable: Boolean = child.nullable
   override def prettyName: String =
-    (if (flat) "scan_turn_flat_" else "scan_turn_") +
-      dbs.get.map(_.databaseId).mkString("_")
-  // the shape is already in the name
+    "scan_turn_flat_" + dbs.get.map(_.databaseId).mkString("_")
   override protected def stringArgs: Iterator[Any] = Iterator(child, dbs, config)
 
-  override def nullSafeEval(input: Any): Any = {
-    val text = input.asInstanceOf[UTF8String]
-    if (flat) ScanTurn.scanFlat(scanner, dbs.get, text)
-    else ScanTurn.scan(scanner, dbs.get, text)
-  }
+  override def nullSafeEval(input: Any): Any =
+    ScanTurn.scanFlat(scanner, dbs.get, input.asInstanceOf[UTF8String], counts)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val scannerRef =
       ctx.addReferenceObj("scanner", scanner, classOf[IocScanner].getName)
     // broadcast HANDLE: dbs deserialize once per executor, not per task
     val dbsRef = ctx.addReferenceObj("inteldbs", dbs, "graft.intel.BcHandle")
-    val method = if (flat) "scanFlat" else "scan"
+    val countsRef =
+      if (counts == null) "null"
+      else ctx.addReferenceObj("candcounts", counts, classOf[CandidateCounts].getName)
     nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.ScanTurn.$method($scannerRef, " +
-        s"(graft.intel.IntelDb[]) $dbsRef.get(), $c);")
+      s"${ev.value} = graft.functions.ScanTurn.scanFlat($scannerRef, " +
+        s"(graft.intel.IntelDb[]) $dbsRef.get(), $c, $countsRef);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): ScanTurn =
@@ -86,17 +74,6 @@ case class ScanTurn(child: Expression, dbs: BcHandle[Array[IntelDb]],
 }
 
 object ScanTurn {
-  val elementSchema: StructType = StructType(Seq(
-    StructField("sink", StringType, nullable = false),
-    StructField("indicator_type", StringType, nullable = true),
-    StructField("value", StringType, nullable = true),
-    StructField("matched_text", StringType, nullable = true),
-    StructField("span_start", IntegerType, nullable = true),
-    StructField("span_end", IntegerType, nullable = true),
-    StructField("hits", IntelLookupMulti.schema, nullable = false)
-  ))
-  val schema: DataType = ArrayType(elementSchema, containsNull = false)
-
   val flatElementSchema: StructType = StructType(
     ExtractIoCs.elementSchema.fields ++ IntelLookupMulti.elementSchema.fields)
   val flatSchema: DataType = ArrayType(flatElementSchema, containsNull = false)
@@ -226,8 +203,11 @@ object ScanTurn {
 
   private def isIp(kind: Int): Boolean = kind == Kind.Ipv4 || kind == Kind.Ipv6
 
-  /** Nested rows; static entry point shared by interpreted eval and
-    * generated code.
+  /** Nested rows `struct<sink, indicator_type, value, matched_text,
+    * span_start, span_end, hits array<struct<db_idx, entry_idx, prefix_len,
+    * match_type>>>`: one per candidate (sink "cand", `hits` possibly empty)
+    * plus one "clean" marker row iff no candidate hit. No query plans it;
+    * it is the reference `scanFlat` is checked against.
     */
   def scan(scanner: IocScanner, dbs: Array[IntelDb],
       text: UTF8String): ArrayData = {
@@ -261,8 +241,7 @@ object ScanTurn {
     if (anyHit) new GenericArrayData(rows)
     else {
       // candidates but zero hits anywhere -> still a clean turn: append the
-      // clean marker row so the turn reaches the clean sink (candidate rows
-      // are kept for the stats observer and filtered before the write)
+      // clean marker row
       val withClean = Array.copyOf(rows, n + 1)
       withClean(n) = CLEAN_ROW
       new GenericArrayData(withClean)
@@ -270,10 +249,10 @@ object ScanTurn {
   }
 
   /** Flat rows; static entry point shared by interpreted eval and
-    * generated code.
+    * generated code. Adds each candidate's kind to `counts` if not null.
     */
-  def scanFlat(scanner: IocScanner, dbs: Array[IntelDb],
-      text: UTF8String): ArrayData = {
+  def scanFlat(scanner: IocScanner, dbs: Array[IntelDb], text: UTF8String,
+      counts: CandidateCounts = null): ArrayData = {
     val len = text.numBytes()
     val scr = ExtractIoCs.tlScratch.get()
     val buf = ExtractIoCs.copyToScratch(scr, text)
@@ -288,6 +267,7 @@ object ScanTurn {
     try {
       var i = 0
       while (i < sp.n) {
+        if (counts != null) counts.add(sp.kind(i))
         val nHits = probe(scr, dbs, sp, i, buf)
         if (nHits > 0) {
           val tpe = typeInterned(sp.kind(i))
@@ -323,8 +303,39 @@ object ScanTurn {
   }
 
   def column(text: Column, dbs: Seq[IntelDb],
-      config: ScanConfig = ScanConfig(), flat: Boolean = false): Column =
+      config: ScanConfig = ScanConfig(),
+      counts: CandidateCounts = null): Column =
     ExpressionUtils.column(
       ScanTurn(ExpressionUtils.expression(text), BcHandle.dbs(dbs), config,
-        flat))
+        counts))
+}
+
+/** Extracted candidates per extractor kind ([[IocScanner.Kind]]), summed
+  * over the tasks of a scan. Spark merges a task's counts only when the
+  * task succeeds, and for a result stage once per partition, so a retried
+  * task is not counted twice.
+  */
+final class CandidateCounts extends AccumulatorV2[Int, Array[Long]] {
+  private val n = new Array[Long](Kind.names.length)
+
+  override def isZero: Boolean = n.forall(_ == 0L)
+  override def copy(): CandidateCounts = {
+    val c = new CandidateCounts
+    System.arraycopy(n, 0, c.n, 0, n.length)
+    c
+  }
+  override def reset(): Unit = java.util.Arrays.fill(n, 0L)
+  override def add(kind: Int): Unit = n(kind) += 1
+  override def merge(other: AccumulatorV2[Int, Array[Long]]): Unit = {
+    val o = other.asInstanceOf[CandidateCounts].n
+    var k = 0
+    while (k < n.length) { n(k) += o(k); k += 1 }
+  }
+  override def value: Array[Long] = n.clone()
+
+  /** `candidates_<type>` -> count, for the kinds that had candidates. */
+  def byType: Map[String, Long] =
+    Kind.names.indices.collect {
+      case k if n(k) > 0 => s"candidates_${Kind.names(k)}" -> n(k)
+    }.toMap
 }

@@ -4,14 +4,12 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.types._
 
-/** The per-entry intel metadata columns every matched row carries — ONE
-  * field list that both renderings derive from, so they cannot drift:
-  *  - [[IntelDb.metaRows]]: Catalyst rows indexed by entry_idx, read in
-  *    place by the scan's `intel_meta(db_idx, entry_idx)` expression
-  *    (graft.functions.EntryMeta) — the analog of matchy reading a hit's
-  *    data by offset from the compiled database;
-  *  - `ScanJob.intelMetaDf`: the same rows as a (db_idx, entry_idx)-keyed
-  *    DataFrame, for queries that join metadata relationally.
+/** The per-entry intel metadata columns every matched row carries, as ONE
+  * field list. [[IntelDb.metaRows]] renders it to Catalyst rows indexed by
+  * entry_idx, which the `intel_meta(db_idx, entry_idx)` expression
+  * (graft.functions.EntryMeta) reads in place — the analog of matchy
+  * reading a hit's data by offset from the compiled database. The scan and
+  * every query attach metadata that way; none joins it relationally.
   */
 object IntelMetaRows {
 

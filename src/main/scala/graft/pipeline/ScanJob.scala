@@ -1,19 +1,17 @@
 package graft.pipeline
 
-import graft.functions.{EntryMeta, GraftFunctions}
-import graft.intel.{IntelDb, IntelMetaRows}
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode, SparkSession}
+import graft.functions.{CandidateCounts, EntryMeta, GraftFunctions, ScanTurn}
+import graft.intel.IntelDb
+import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
-
-import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.types.StructType
 
 /** The flagship scan pipeline (SURVEY.md §3.1), expressed as one declarative
   * Spark plan:
   *
   * {{{
   * turns                                            // table scan (S1)
-  *   .select(explode(scan_turn(text)))               // E1-E8 + L2/L3/L4
+  *   .select(explode_outer(scan_turn_flat(text)))    // E1-E8 + L2/L3/L4
   *                                                   // per db (L8), one pass
   *   .select(intel_meta(db_idx, entry_idx))          // metadata read in place
   *   -> fan-out writes per indicator_type + clean sink (R4)
@@ -25,8 +23,9 @@ import scala.jdk.CollectionConverters._
   *    codegen'd expressions) — ZERO shuffles until the final aggregate,
   *    mirroring the reference's embarrassingly-parallel workers
   *    (processing/parallel.rs:494-700);
-  *  - explode() drops empty arrays, so clean turns never produce candidate
-  *    rows (the "AC finds nothing => line is clean fast" behavior);
+  *  - the generator emits only (candidate x hit) rows, so a clean turn
+  *    produces no candidate rows, only its one clean row (the "AC finds
+  *    nothing => line is clean fast" behavior);
   *  - fan-out writes repartition by a conv_id bucket (checkpoint/resume
   *    unit) — skewed conversations are spread because the bucket key is
   *    hash(conv_id), and AQE skew handling stays on for the aggregates.
@@ -53,21 +52,6 @@ object ScanJob {
       .select(col("conv_id"), col("turn_idx"), col("role"),
         explode(GraftFunctions.extract_iocs(col("text"))).as("ioc"))
       .select(col("conv_id"), col("turn_idx"), col("role"), col("ioc.*"))
-
-  /** Intel metadata as a DataFrame, one row per (db_idx, entry_idx), with
-    * the columns the scan attaches in place ([[IntelMetaRows]]) — for
-    * queries that join entry metadata relationally.
-    */
-  def intelMetaDf(spark: SparkSession, dbs: Seq[IntelDb]): DataFrame = {
-    val rows = for {
-      (db, d) <- dbs.zipWithIndex
-      (m, i) <- db.entries.toSeq.zipWithIndex
-    } yield Row.fromSeq(d +: i +: IntelMetaRows.row(db, m).toSeq)
-    spark.createDataFrame(rows.asJava, StructType(
-      StructField("db_idx", IntegerType, nullable = false) +:
-        StructField("entry_idx", IntegerType, nullable = false) +:
-        IntelMetaRows.schema.fields.toSeq))
-  }
 
   /** Attach each hit's intel metadata in place — `intel_meta` reads the
     * entry's row from the broadcast databases the scan already carries, so
@@ -137,8 +121,7 @@ object ScanJob {
       }
     input
       .select(col("conv_id"), col("turn_idx"), col("role"),
-        explode(graft.functions.ScanTurn.column(col("text"), dbs, scanCfg,
-          flat = true)).as("m"))
+        explode(ScanTurn.column(col("text"), dbs, scanCfg)).as("m"))
       .select(col("conv_id"), col("turn_idx"), col("role"),
         col("m.indicator_type").as("indicator_type"),
         col("m.value").as("value"),
@@ -161,8 +144,7 @@ object ScanJob {
     *   backfill runs as K bucket-range jobs, each marking only its buckets
     *   done; a crashed job reruns only its own range (`resume = true` skips
     *   buckets already marked by earlier jobs either way).
-    */
-  /** @param ndjson when true, `run` also emits the reference-format NDJSON
+    * @param ndjson when true, `run` also emits the reference-format NDJSON
     *   match stream (S10 field shape, Sinks.ndjsonMatched) under
     *   `outDir/ndjson` — the flagship-job analog of the reference's stdout
     *   match lines (bin/match_processor/sequential.rs:154-187).
@@ -189,79 +171,64 @@ object ScanJob {
     * map-side pass (ScanTurn generator), metadata read in place (clean rows
     * get null metadata). Every pending turn contributes exactly one clean
     * row (sink="clean", text preserved) XOR >=1 matched rows
-    * (sink="matched"). `obsTurns`/`obsRows` attach the A1-A6 stat observers
-    * so `run` gets its stats for free on the write action — no second pass
-    * over the input.
+    * (sink="matched"). `obsTurns` observes the turn stats and `counts`
+    * counts the candidates, so `run` gets its stats from the write action
+    * itself — no second pass over the input.
     */
   private[pipeline] def routedFrame(spark: SparkSession, pending: DataFrame,
       dbs: Seq[IntelDb],
       obsTurns: Option[org.apache.spark.sql.Observation] = None,
-      obsRows: Option[org.apache.spark.sql.Observation] = None,
+      counts: Option[CandidateCounts] = None,
       config: Option[graft.extract.ScanConfig] = None): DataFrame =
-    withMeta(routedHits(pending, dbs, obsTurns, obsRows, config), dbs)
+    withMeta(routedHits(pending, dbs, obsTurns, counts, config), dbs)
       // clean rows have no indicator type; 'none' keeps the partition path tidy
       .withColumn("indicator_type",
         coalesce(col("indicator_type"), lit("none")))
 
   /** `routedFrame` before its metadata: matched rows keyed by (db_idx,
-    * entry_idx), clean rows with null keys.
+    * entry_idx), clean rows with null keys. `counts`, if given, is
+    * registered here and counts every candidate the scan extracts.
     */
   private[pipeline] def routedHits(pending: DataFrame, dbs: Seq[IntelDb],
       obsTurns: Option[org.apache.spark.sql.Observation],
-      obsRows: Option[org.apache.spark.sql.Observation],
+      counts: Option[CandidateCounts],
       config: Option[graft.extract.ScanConfig]): DataFrame = {
     // F3: derived fresh per call — streaming hot reload can change a db's
     // capabilities between micro-batches
     val scanCfg = config.getOrElse(capabilityConfig(dbs))
+    counts.foreach(pending.sparkSession.sparkContext.register(_,
+      "scan candidates"))
     val turnsIn = obsTurns.fold(pending)(o => pending.observe(o,
       count(lit(1)).as("lines_processed"),
       coalesce(sum(octet_length(col("text"))), lit(0L)).as("total_bytes")))
     val hasTool = pending.columns.contains("tool")
     val hasTs = pending.columns.contains("ts")
-    // null text routes to the clean sink like an empty line (the reference
-    // treats both as no-candidate input); without the coalesce, ScanTurn is
-    // null for null text and explode would DROP the turn from both sinks
-    // while the turn observer still counted it
-    val safeText = coalesce(col("text"), lit(""))
-    val flat = turnsIn
+    // explode_outer gives a turn without hits (null text included) one
+    // null row: that row is the turn's clean-sink row
+    val rows = turnsIn
       .select(Seq(col("bucket"), col("conv_id"), col("turn_idx"), col("role"),
         col("text"), spark_partition_id().as("partition_id"),
-        explode(graft.functions.ScanTurn.column(safeText, dbs, scanCfg))
-          .as("r")) ++
+        explode_outer(ScanTurn.column(col("text"), dbs, scanCfg,
+          counts.orNull)).as("r")) ++
         (if (hasTool) Seq(col("tool")) else Nil) ++
         (if (hasTs) Seq(col("ts")) else Nil): _*)
-      .select(Seq(col("bucket"), col("conv_id"), col("turn_idx"), col("role"),
-        col("partition_id"),
+    val clean = col("r").isNull
+    rows.select(Seq(col("bucket"), col("conv_id"), col("turn_idx"),
+        col("role"), col("partition_id"),
         // full turn rides only on clean rows (the clean sink IS the turn;
         // matched rows carry matched_text/spans instead)
-        when(col("r.sink") === "clean", col("text")).as("text"),
-        col("r.sink").as("sink"), col("r.indicator_type").as("indicator_type"),
+        when(clean, col("text")).as("text"),
+        when(clean, lit("clean")).otherwise(lit("matched")).as("sink"),
+        col("r.indicator_type").as("indicator_type"),
         col("r.value").as("value"), col("r.matched_text").as("matched_text"),
-        col("r.span_start").as("span_start"), col("r.span_end").as("span_end"),
-        col("r.hits").as("hits")) ++
-        (if (hasTool) Seq(when(col("r.sink") === "clean", col("tool")).as("tool")) else Nil) ++
+        col("r.span_start").as("span_start"), col("r.span_end").as("span_end")) ++
+        (if (hasTool) Seq(when(clean, col("tool")).as("tool")) else Nil) ++
         // event time rides ALL rows (matched rows need it for the NDJSON
         // sink's per-line timestamp; the reference stamps every match line)
-        (if (hasTs) Seq(col("ts")) else Nil): _*)
-    val observed = obsRows.fold(flat) { o =>
-      val perType = graft.model.IndicatorType.all.map(t =>
-        sum(when(col("indicator_type") === t, 1L).otherwise(0L))
-          .as(s"candidates_$t"))
-      flat.observe(o,
-        count(when(col("sink") === "clean", 1)).as("clean_turns"),
-        perType: _*)
-    }
-    observed
-      .where(col("sink") === "clean" || size(col("hits")) > 0)
-      .withColumn("sink",
-        when(col("sink") === "cand", lit("matched")).otherwise(col("sink")))
-      .withColumn("hit", explode_outer(col("hits")))
-      .drop("hits")
-      .select(col("*"), col("hit.db_idx").as("db_idx"),
-        col("hit.entry_idx").as("entry_idx"),
-        col("hit.prefix_len").as("prefix_len"),
-        col("hit.match_type").as("match_type"))
-      .drop("hit")
+        (if (hasTs) Seq(col("ts")) else Nil) ++
+        Seq(col("r.db_idx").as("db_idx"), col("r.entry_idx").as("entry_idx"),
+          col("r.prefix_len").as("prefix_len"),
+          col("r.match_type").as("match_type")): _*)
   }
 
   /** The routed frame without observers — the per-micro-batch body of the
@@ -285,13 +252,14 @@ object ScanJob {
     *   _buckets_done/<bucket>  completion markers (checkpoint/resume)
     *
     * Scale shape (the 100 TB story): the routed write is ONE pass — scan ->
-    * ScanTurn (extract+lookup, map-side broadcast structures) -> filter ->
-    * explode -> in-place metadata read -> partitioned write. No join and no
-    * shuffle anywhere in it (the round-1 clean-sink anti-join shuffled the
-    * full table twice).
-    * A1-A6 stats ride the same pass as `observe()` metrics; gold counts and
-    * lineage metrics aggregate the OUTPUT (matched rows + one row per clean
-    * turn), never rescanning the input.
+    * ScanTurn (extract+lookup, map-side broadcast structures) -> explode ->
+    * in-place metadata read -> partitioned write. No join and no shuffle
+    * anywhere in it (the round-1 clean-sink anti-join shuffled the full
+    * table twice).
+    * A1-A6 stats ride the same pass (an `observe()` metric and the
+    * candidate accumulator); gold counts and lineage metrics aggregate the
+    * OUTPUT (matched rows + one row per clean turn), never rescanning the
+    * input.
     */
   def run(spark: SparkSession, turns: DataFrame, dbs: Seq[IntelDb],
       outDir: String, cfg: RunConfig = RunConfig()): Map[String, Long] = {
@@ -360,9 +328,9 @@ object ScanJob {
     // --- THE single pass: extract + enrich + route + stats observers
     // (scanCfg = F3 capability defaults + CLI overrides, parsed above)
     val obsTurns = org.apache.spark.sql.Observation()
-    val obsRows = org.apache.spark.sql.Observation()
+    val counts = new CandidateCounts
     val routed = routedFrame(spark, pending, dbs, Some(obsTurns),
-      Some(obsRows), Some(scanCfg))
+      Some(counts), Some(scanCfg))
     // `extra_json`/`data_json` (the typed NDJSON renderings) are consumed
     // by exactly one sink each — drop whichever the configured mode won't
     // read from the parquet write, so matched rows don't store the extras
@@ -381,7 +349,8 @@ object ScanJob {
       .parquet(s"$outDir/routed")
 
     val turnStats = obsTurns.get
-    val rowStats = obsRows.get
+    // complete once the write returns: the write is one result stage
+    val candStats = counts.byType
 
     // --- aggregates over the OUTPUT (all buckets, resume-stable): gold
     // counts (A10) and global line counts come from the written sinks.
@@ -437,10 +406,6 @@ object ScanJob {
         count(when(col("sink") === "clean", 1)))
       .as[(Long, Long, Long)].head().productIterator.map(_.asInstanceOf[Long]).toSeq
 
-    val candStats = graft.model.IndicatorType.all
-      .map(t => s"candidates_$t" ->
-        rowStats.getOrElse(s"candidates_$t", 0L).asInstanceOf[Long])
-      .filter(_._2 > 0).toMap
     val stats: Map[String, Long] = Map(
       // global (derived from sinks; stable across resume runs)
       "lines_processed" -> (linesWithMatches + cleanTurns),

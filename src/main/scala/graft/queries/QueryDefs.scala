@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.functions.{EntryMeta, GraftFunctions, IntelLookupMulti}
+import graft.functions.{EntryMeta, GraftFunctions, IntelLookupMulti, ScanTurn}
 import graft.intel.IntelDb
 import graft.model.IntelEntry
 import graft.ops.{Dedup, Similarity, TextStats}
@@ -208,6 +208,13 @@ object QueryDefs {
       lit(".example.com and bare .com plus fake"), e % 9, lit(".notatld end")))
       .where(col("indicator_type") === "domain")
 
+  /** The metadata of the exploded `hit` column (an IntelLookupMulti
+    * element), read in place from the broadcast databases: no metadata
+    * relation and no join.
+    */
+  private def hitMeta(dbs: Seq[IntelDb]): Column =
+    EntryMeta.column(col("hit.db_idx"), col("hit.entry_idx"), dbs)
+
   def qLookupLiteral(s: SparkSession, dir: String): DataFrame = {
     val intel = t(s, dir, "nation").where(col("n_nationkey") < 5)
       .select(concat(lit("host"), col("n_nationkey"), lit(".example.com"))
@@ -230,14 +237,12 @@ object QueryDefs {
     val cands = extract(t(s, dir, "events"), concat(lit("src 10."), u % 200,
       lit("."), e % 250, lit("."), e % 100, lit(" seen")))
       .where(col("indicator_type") === "ipv4")
-    val meta = ScanJob.intelMetaDf(s, Seq(db))
     cands
       .withColumn("hit",
         explode(IntelLookupMulti.column(col("value"), col("indicator_type"),
           Seq(db))))
-      .select(col("value"), col("hit.entry_idx").as("entry_idx"),
-        col("hit.prefix_len").as("prefix_len"))
-      .join(broadcast(meta.select("entry_idx", "entry")), Seq("entry_idx"))
+      .select(col("value"), col("hit.prefix_len").as("prefix_len"),
+        hitMeta(Seq(db)).getField("entry").as("entry"))
       .groupBy("value", "prefix_len", "entry").agg(count(lit(1)).as("n"))
       .orderBy("value", "prefix_len")
   }
@@ -252,13 +257,11 @@ object QueryDefs {
     val cands = extract(t(s, dir, "events"), concat(lit("see host"), e % 50,
       lit(".glob"), e % 7, lit(".net ok")))
       .where(col("indicator_type") === "domain")
-    val meta = ScanJob.intelMetaDf(s, Seq(db))
     cands
       .withColumn("hit",
         explode(IntelLookupMulti.column(col("value"), col("indicator_type"),
           Seq(db))))
-      .select(col("value"), col("hit.entry_idx").as("entry_idx"))
-      .join(broadcast(meta.select("entry_idx", "entry")), Seq("entry_idx"))
+      .select(col("value"), hitMeta(Seq(db)).getField("entry").as("entry"))
       .groupBy("entry").agg(count(lit(1)).as("n"))
       .orderBy("entry")
   }
@@ -275,9 +278,8 @@ object QueryDefs {
     domainCands(s, dir)
       .select(col("value"), explode(IntelLookupMulti.column(
         col("value"), col("indicator_type"), dbs)).as("hit"))
-      .select(col("value"), EntryMeta.column(
-        col("hit.db_idx"), col("hit.entry_idx"), dbs)
-        .getField("database_id").as("database_id"))
+      .select(col("value"),
+        hitMeta(dbs).getField("database_id").as("database_id"))
       .groupBy("database_id", "value").agg(count(lit(1)).as("n"))
       .orderBy("database_id", "value")
   }
@@ -324,42 +326,40 @@ object QueryDefs {
       .orderBy("indicator_type", "role")
   }
 
-  /** Route counts in ONE pass: the ScanTurn generator makes both the
-    * matched-sink counts and the clean count row-local (round 1 rebuilt the
-    * whole extract+lookup subtree twice plus an anti-join).
+  /** Route counts in ONE pass: `explode_outer` over the ScanTurn generator
+    * gives one row per (candidate x hit) and one null row per clean turn,
+    * so both the matched-sink counts and the clean count are row-local
+    * (round 1 rebuilt the whole extract+lookup subtree twice plus an
+    * anti-join).
     */
   def qRouteCounts(s: SparkSession, dir: String): DataFrame = {
     val db = IntelDb.build("threats", goldIntel)
     goldTurns(s, dir)
-      .select(explode(
-        graft.functions.ScanTurn.column(col("text"), Seq(db))).as("r"))
-      .select(
-        when(col("r.sink") === "clean", lit("clean"))
-          .otherwise(col("r.indicator_type")).as("sink"),
-        when(col("r.sink") === "clean", lit(1L))
-          .otherwise(size(col("r.hits")).cast("long")).as("w"))
-      .where(col("w") > 0)
-      .groupBy("sink").agg(sum("w").as("n"))
+      .select(explode_outer(ScanTurn.column(col("text"), Seq(db))).as("r"))
+      .select(when(col("r").isNull, lit("clean"))
+        .otherwise(col("r.indicator_type")).as("sink"))
+      .groupBy("sink").agg(count(lit(1)).as("n"))
       .orderBy("sink")
   }
 
-  /** A1-A6 stats in ONE job (round 1 ran five separate actions): every turn
-    * emits >=1 ScanTurn row, so per-turn stats ride pos==0 rows and
-    * candidate/match stats ride sink=='cand' rows of the same explode.
+  /** A1-A6 stats in ONE job (round 1 ran five separate actions), one row
+    * per turn: a turn's ScanTurn array holds its (candidate x hit) rows,
+    * so it matched iff the array is non-empty, and `extract_iocs` (the
+    * same default extractor set) gives its candidates.
     */
   def qScanStats(s: SparkSession, dir: String): DataFrame = {
     val db = IntelDb.build("threats", goldIntel)
     goldTurns(s, dir)
       .select(octet_length(col("text")).cast("long").as("bytes"),
-        posexplode(graft.functions.ScanTurn.column(col("text"), Seq(db))))
+        size(GraftFunctions.extract_iocs(col("text"))).cast("long")
+          .as("cands"),
+        size(ScanTurn.column(col("text"), Seq(db))).cast("long").as("hits"))
       .agg(
-        count(when(col("col.sink") === "cand", 1)).as("candidates_tested"),
-        count(when(col("pos") === 0, 1)).as("lines_processed"),
-        (count(when(col("pos") === 0, 1)) -
-          count(when(col("col.sink") === "clean", 1))).as("lines_with_matches"),
-        sum(when(col("pos") === 0, col("bytes"))).as("total_bytes"),
-        coalesce(sum(when(col("col.sink") === "cand",
-          size(col("col.hits")).cast("long"))), lit(0L)).as("total_matches"))
+        sum("cands").as("candidates_tested"),
+        count(lit(1)).as("lines_processed"),
+        count(when(col("hits") > 0, 1)).as("lines_with_matches"),
+        sum("bytes").as("total_bytes"),
+        coalesce(sum("hits"), lit(0L)).as("total_matches"))
       .select(expr(
         """stack(5,
           |  'candidates_tested', candidates_tested,
@@ -488,14 +488,12 @@ object QueryDefs {
       IntelEntry("HOST3.ExAmple.COM", "high", "phishing", "feed", 90),
       IntelEntry("*.EXAMPLE.com", "low", "heuristic", "feed", 40)),
       caseInsensitive = true)
-    val meta = ScanJob.intelMetaDf(s, Seq(db))
     extract(t(s, dir, "events"), concat(lit("visit HoSt"), e % 10,
       lit(".ExAmple.com end")))
       .where(col("indicator_type") === "domain")
       .withColumn("hit", explode(
         IntelLookupMulti.column(col("value"), col("indicator_type"), Seq(db))))
-      .select(col("value"), col("hit.entry_idx").as("entry_idx"))
-      .join(broadcast(meta.select("entry_idx", "entry")), Seq("entry_idx"))
+      .select(col("value"), hitMeta(Seq(db)).getField("entry").as("entry"))
       .groupBy("value", "entry").agg(count(lit(1)).as("n"))
       .orderBy("value", "entry")
   }
@@ -528,13 +526,12 @@ object QueryDefs {
       writeFeed(s, "q43-feed.csv", csv))
     val db = IntelDb.build("feed",
       graft.sources.IntelIngest.toEntries(feed))
-    val meta = ScanJob.intelMetaDf(s, Seq(db))
-    val extraV = parse_json(col("extra_json"))
+    val extraV = parse_json(col("meta.extra_json"))
     domainCands(s, dir)
       .withColumn("hit", explode(
         IntelLookupMulti.column(col("value"), col("indicator_type"), Seq(db))))
-      .select(col("value"), col("hit.entry_idx").as("entry_idx"))
-      .join(broadcast(meta.select(col("entry_idx"), col("category"),
+      .select(col("value"), hitMeta(Seq(db)).as("meta"))
+      .select(col("value"), col("meta.category").as("category"),
         coalesce(try_variant_get(extraV, "$.campaign", "string"), lit(""))
           .as("campaign"),
         coalesce(try_variant_get(extraV, "$.actor", "string"), lit(""))
@@ -544,7 +541,7 @@ object QueryDefs {
         coalesce(try_variant_get(extraV, "$.score", "double"), lit(-1.0))
           .as("score"),
         coalesce(try_variant_get(extraV, "$.verified", "boolean"),
-          lit(false)).as("verified"))), Seq("entry_idx"))
+          lit(false)).as("verified"))
       .groupBy("value", "category", "campaign", "actor", "ttl", "score",
         "verified")
       .agg(count(lit(1)).as("n"))
@@ -820,13 +817,12 @@ object QueryDefs {
       writeFeed(s, "q56-feed.json", json))
     val db = IntelDb.build("feed",
       graft.sources.IntelIngest.toEntries(feed))
-    val meta = ScanJob.intelMetaDf(s, Seq(db))
-    val extraV = parse_json(col("extra_json"))
+    val extraV = parse_json(col("meta.extra_json"))
     domainCands(s, dir)
       .withColumn("hit", explode(
         IntelLookupMulti.column(col("value"), col("indicator_type"), Seq(db))))
-      .select(col("value"), col("hit.entry_idx").as("entry_idx"))
-      .join(broadcast(meta.select(col("entry_idx"), col("category"),
+      .select(col("value"), hitMeta(Seq(db)).as("meta"))
+      .select(col("value"), col("meta.category").as("category"),
         coalesce(try_variant_get(extraV, "$.ttl", "string"), lit(""))
           .as("ttl"),
         coalesce(try_variant_get(extraV, "$.verified", "string"), lit(""))
@@ -834,7 +830,7 @@ object QueryDefs {
         coalesce(try_variant_get(extraV, "$.port", "string"), lit(""))
           .as("port"),
         coalesce(try_variant_get(extraV, "$.big", "string"), lit(""))
-          .as("big"))), Seq("entry_idx"))
+          .as("big"))
       .groupBy("value", "category", "ttl", "verified", "port", "big")
       .agg(count(lit(1)).as("n"))
       .orderBy("value")
@@ -1102,7 +1098,6 @@ object QueryDefs {
       .as("line"))
     val pat = "%{TIMESTAMP_ISO8601:ts} %{LOGLEVEL:level} " +
       "src=%{IPV4:src} action=%{WORD:action}"
-    val meta = ScanJob.intelMetaDf(s, Seq(db))
     graft.ops.LogParse.parse(lines, "line", pat)
       .where(col("_grok_matched"))
       .withColumn("hits",
@@ -1110,9 +1105,8 @@ object QueryDefs {
       .withColumn("sink",
         when(size(col("hits")) > 0, "matched").otherwise("clean"))
       .withColumn("hit", explode_outer(col("hits")))
-      .withColumn("entry_idx", col("hit.entry_idx"))
-      .join(broadcast(meta.select("entry_idx", "entry")), Seq("entry_idx"),
-        "left")
+      // a clean row's null hit reads null metadata
+      .withColumn("entry", hitMeta(Seq(db)).getField("entry"))
       .groupBy("sink", "level", "action", "entry")
       .agg(count(lit(1)).as("n"))
       .orderBy("sink", "level", "action", "entry")

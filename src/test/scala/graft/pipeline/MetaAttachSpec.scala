@@ -1,28 +1,43 @@
 package graft.pipeline
 
 import graft.SparkTestBase
-import graft.intel.IntelDb
+import graft.intel.{IntelDb, IntelMetaRows}
 import graft.model.{IntelEntry, Turn}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 
-/** The in-place metadata read (`intel_meta`) must give exactly what the
-  * broadcast hash join against `ScanJob.intelMetaDf` gave: same columns in
-  * the same order with the same types, same row multiset, null metadata on
-  * clean routed rows, and the same NDJSON bytes out of `ScanJob.run`.
+/** The in-place metadata read (`intel_meta`) must give exactly what a
+  * broadcast hash join against the metadata as a relation gave: same
+  * columns in the same order with the same types, same row multiset, null
+  * metadata on clean routed rows, and the same NDJSON bytes out of
+  * `ScanJob.run`.
   */
 class MetaAttachSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
+
+  /** Intel metadata as a DataFrame, one row per (db_idx, entry_idx). */
+  private def intelMetaDf(dbs: Seq[IntelDb]): DataFrame = {
+    val rows = for {
+      (db, d) <- dbs.zipWithIndex
+      (m, i) <- db.entries.toSeq.zipWithIndex
+    } yield Row.fromSeq(d +: i +: IntelMetaRows.row(db, m).toSeq)
+    spark.createDataFrame(rows.asJava, StructType(
+      StructField("db_idx", IntegerType, nullable = false) +:
+        StructField("entry_idx", IntegerType, nullable = false) +:
+        IntelMetaRows.schema.fields.toSeq))
+  }
 
   /** The metadata attach as a join, kept here as the reference. */
   private def joinMeta(hits: DataFrame, dbs: Seq[IntelDb],
       how: String): DataFrame =
     hits
-      .join(broadcast(ScanJob.intelMetaDf(spark, dbs)),
+      .join(broadcast(intelMetaDf(dbs)),
         Seq("db_idx", "entry_idx"), how)
       .drop("db_idx")
       .withColumn("cidr",

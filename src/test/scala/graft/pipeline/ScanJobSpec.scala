@@ -205,6 +205,19 @@ class ScanJobSpec extends AnyFunSuite {
     assert(plan.toLowerCase.contains("scan_turn_flat"), plan.take(2000))
   }
 
+  test("routed frame: null and empty text each give one clean row, a " +
+    "turn with a hit only matched rows") {
+    val turns = Seq(("c", 0, null), ("c", 1, ""), ("c", 2, "see 192.0.2.1"))
+      .toDF("conv_id", "turn_idx", "text")
+      .withColumn("role", lit("user")).withColumn("bucket", lit(0L))
+    val rows = ScanJob.routedFrame(spark, turns, dbs)
+      .select("turn_idx", "sink", "text").as[(Int, String, String)]
+      .collect().toSeq.sortBy(r => (r._1, r._2))
+    assert(rows.take(2) == Seq((0, "clean", null), (1, "clean", "")), rows)
+    assert(rows.drop(2).nonEmpty &&
+      rows.drop(2).forall(_ == ((2, "matched", null))), rows)
+  }
+
   test("plan shape: run()'s routed frame is shuffle-free (single pass)") {
     val withBucket = turnsDf.withColumn("bucket",
       pmod(xxhash64(col("conv_id")), lit(8)))
@@ -213,12 +226,12 @@ class ScanJobSpec extends AnyFunSuite {
     assert(!plan.contains("Join"), plan.take(2000))
     assert(!plan.contains("BroadcastExchange"), plan.take(2000))
     assert(!plan.contains("Exchange hashpartitioning"), plan.take(2000))
-    // exactly one ScanTurn generator + one explode of its hits — the
+    // exactly one ScanTurn generator, exploded once — the
     // extraction/lookup subtree is NOT duplicated ("size >= 1" could not
     // catch a duplicated subtree; round-5 test-review find)
     assert("scan_turn_".r.findAllIn(plan.toLowerCase).size == 1,
       plan.take(2000))
-    assert("Generate ".r.findAllIn(plan).size == 2, plan.take(2000))
+    assert("Generate ".r.findAllIn(plan).size == 1, plan.take(2000))
   }
 
   test("crash-injection: run() killed mid-flight at sampled fs-op budgets, " +
