@@ -4,31 +4,37 @@ import graft.functions.{CandidateCounts, EntryMeta, GraftFunctions, ScanTurn}
 import graft.intel.IntelDb
 import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField,
+  StructType}
 
 /** The flagship scan pipeline (SURVEY.md §3.1), expressed as one declarative
   * Spark plan:
   *
   * {{{
   * turns                                            // table scan (S1)
-  *   .select(explode_outer(scan_turn_flat(text)))    // E1-E8 + L2/L3/L4
+  *   .select(posexplode_outer(scan_turn_flat(text))) // E1-E8 + L2/L3/L4
   *                                                   // per db (L8), one pass
+  *   .observe(per-bucket tally)                      // counted in the pass
   *   .select(intel_meta(db_idx, entry_idx))          // metadata read in place
   *   -> fan-out writes per indicator_type + clean sink (R4)
-  *   -> gold counts + stats (A1-A6, A10) + per-partition lineage metrics
+  *   -> gold counts + stats (A1-A6, A10) + per-partition lineage metrics,
+  *      folded on the driver from the tallies
   * }}}
   *
   * Scale notes (the 100 TB story):
   *  - extraction + both lookups are map-side (broadcast structures inside
-  *    codegen'd expressions) — ZERO shuffles until the final aggregate,
-  *    mirroring the reference's embarrassingly-parallel workers
-  *    (processing/parallel.rs:494-700);
+  *    codegen'd expressions) — ZERO shuffles in `run`, mirroring the
+  *    reference's embarrassingly-parallel workers, which also merge their
+  *    counters once at the end (processing/parallel.rs:494-700, 840-869);
   *  - the generator emits only (candidate x hit) rows, so a clean turn
   *    produces no candidate rows, only its one clean row (the "AC finds
   *    nothing => line is clean fast" behavior);
   *  - fan-out writes repartition by a conv_id bucket (checkpoint/resume
   *    unit) — skewed conversations are spread because the bucket key is
-  *    hash(conv_id), and AQE skew handling stays on for the aggregates.
+  *    hash(conv_id);
+  *  - the aggregates are NOT distributed: `run` folds its per-bucket
+  *    tallies on the driver, and they hold one entry per (input partition,
+  *    bucket) pair (see `run`'s driver bound).
   */
 object ScanJob {
 
@@ -143,7 +149,11 @@ object ScanJob {
     *   knob that makes bucket-granular resume real at 10^12 turns: a huge
     *   backfill runs as K bucket-range jobs, each marking only its buckets
     *   done; a crashed job reruns only its own range (`resume = true` skips
-    *   buckets already marked by earlier jobs either way).
+    *   buckets already marked by earlier jobs either way). Jobs may run
+    *   side by side: each folds the markers it lists once its own have
+    *   landed. Two jobs that end at nearly the same time may each list
+    *   before the other's markers land; a fully resumed run (nothing left
+    *   to scan) then refolds every marker.
     * @param ndjson when true, `run` also emits the reference-format NDJSON
     *   match stream (S10 field shape, Sinks.ndjsonMatched) under
     *   `outDir/ndjson` — the flagship-job analog of the reference's stdout
@@ -171,16 +181,18 @@ object ScanJob {
     * map-side pass (ScanTurn generator), metadata read in place (clean rows
     * get null metadata). Every pending turn contributes exactly one clean
     * row (sink="clean", text preserved) XOR >=1 matched rows
-    * (sink="matched"). `obsTurns` observes the turn stats and `counts`
-    * counts the candidates, so `run` gets its stats from the write action
-    * itself — no second pass over the input.
+    * (sink="matched"). `obsTurns` observes the turn stats, `counts` counts
+    * the candidates and `obsTally` observes the per-bucket tallies
+    * ([[BucketTally.column]]), so `run` gets its stats and aggregates from
+    * the write action itself — no second pass over the input or the output.
     */
   private[pipeline] def routedFrame(spark: SparkSession, pending: DataFrame,
       dbs: Seq[IntelDb],
       obsTurns: Option[org.apache.spark.sql.Observation] = None,
       counts: Option[CandidateCounts] = None,
-      config: Option[graft.extract.ScanConfig] = None): DataFrame =
-    withMeta(routedHits(pending, dbs, obsTurns, counts, config), dbs)
+      config: Option[graft.extract.ScanConfig] = None,
+      obsTally: Option[org.apache.spark.sql.Observation] = None): DataFrame =
+    withMeta(routedHits(pending, dbs, obsTurns, counts, config, obsTally), dbs)
       // clean rows have no indicator type; 'none' keeps the partition path tidy
       .withColumn("indicator_type",
         coalesce(col("indicator_type"), lit("none")))
@@ -192,7 +204,8 @@ object ScanJob {
   private[pipeline] def routedHits(pending: DataFrame, dbs: Seq[IntelDb],
       obsTurns: Option[org.apache.spark.sql.Observation],
       counts: Option[CandidateCounts],
-      config: Option[graft.extract.ScanConfig]): DataFrame = {
+      config: Option[graft.extract.ScanConfig],
+      obsTally: Option[org.apache.spark.sql.Observation] = None): DataFrame = {
     // F3: derived fresh per call — streaming hot reload can change a db's
     // capabilities between micro-batches
     val scanCfg = config.getOrElse(capabilityConfig(dbs))
@@ -203,18 +216,20 @@ object ScanJob {
       coalesce(sum(octet_length(col("text"))), lit(0L)).as("total_bytes")))
     val hasTool = pending.columns.contains("tool")
     val hasTs = pending.columns.contains("ts")
-    // explode_outer gives a turn without hits (null text included) one
-    // null row: that row is the turn's clean-sink row
+    // posexplode_outer gives a turn without hits (null text included) one
+    // null row: that row is the turn's clean-sink row. A turn's first hit
+    // row has pos 0, so the tally counts turns with a hit without a
+    // distinct count
     val rows = turnsIn
       .select(Seq(col("bucket"), col("conv_id"), col("turn_idx"), col("role"),
         col("text"), spark_partition_id().as("partition_id"),
-        explode_outer(ScanTurn.column(col("text"), dbs, scanCfg,
-          counts.orNull)).as("r")) ++
+        posexplode_outer(ScanTurn.column(col("text"), dbs, scanCfg,
+          counts.orNull)).as(Seq("pos", "r"))) ++
         (if (hasTool) Seq(col("tool")) else Nil) ++
         (if (hasTs) Seq(col("ts")) else Nil): _*)
     val clean = col("r").isNull
-    rows.select(Seq(col("bucket"), col("conv_id"), col("turn_idx"),
-        col("role"), col("partition_id"),
+    val routed = rows.select(Seq(col("bucket"), col("conv_id"),
+        col("turn_idx"), col("role"), col("partition_id"),
         // full turn rides only on clean rows (the clean sink IS the turn;
         // matched rows carry matched_text/spans instead)
         when(clean, col("text")).as("text"),
@@ -228,7 +243,9 @@ object ScanJob {
         (if (hasTs) Seq(col("ts")) else Nil) ++
         Seq(col("r.db_idx").as("db_idx"), col("r.entry_idx").as("entry_idx"),
           col("r.prefix_len").as("prefix_len"),
-          col("r.match_type").as("match_type")): _*)
+          col("r.match_type").as("match_type"), col("pos")): _*)
+    obsTally.fold(routed)(o =>
+      routed.observe(o, BucketTally.column(dbs).as("tally"))).drop("pos")
   }
 
   /** The routed frame without observers — the per-micro-batch body of the
@@ -249,21 +266,41 @@ object ScanJob {
     *              sink=matched  -> per-indicator-type match sinks (R4, S10)
     *              sink=clean    -> clean turns, text preserved    (R4)
     *   gold_counts/  (A10)   stats/  (A1-A6)   metrics/  (lineage)
-    *   _buckets_done/<bucket>  completion markers (checkpoint/resume)
+    *   _buckets_done/<bucket>  completion marker (checkpoint/resume): one
+    *              JSON document, the bucket's [[BucketTally]] — matched
+    *              rows by (database_id, indicator_type, role) and, per
+    *              input partition, matched rows, clean turns and turns
+    *              with a hit. Written under a hidden temporary name and
+    *              renamed once the routed write has committed, so a marker
+    *              is either absent or complete.
     *
     * Scale shape (the 100 TB story): the routed write is ONE pass — scan ->
     * ScanTurn (extract+lookup, map-side broadcast structures) -> explode ->
     * in-place metadata read -> partitioned write. No join and no shuffle
     * anywhere in it (the round-1 clean-sink anti-join shuffled the full
     * table twice).
-    * A1-A6 stats ride the same pass (an `observe()` metric and the
-    * candidate accumulator); gold counts and lineage metrics aggregate the
-    * OUTPUT (matched rows + one row per clean turn), never rescanning the
-    * input.
+    * Everything else rides the same pass: the per-run stats (an `observe()`
+    * metric and the candidate accumulator) and the per-bucket tallies (a
+    * second `observe()` metric). gold_counts/, the global stats and
+    * metrics/ fold the markers of every done bucket — this run's and
+    * earlier runs', listed after this run's have landed — on the driver, so
+    * resumed and sharded runs stay exact without reading `routed/` back
+    * (only the NDJSON sink reads it).
+    *
+    * Driver bound: the merged tally, the markers and their fold each hold
+    * one entry per (input partition, bucket) pair, about 75 bytes apiece.
+    * At 50,000 partitions x 64 buckets (3.2M pairs) that is ~0.24 GB and
+    * 2-5 s of driver time for each of the merge, the marker documents and
+    * their parse, plus ~0.45 GB for the `metrics/` rows (measured on a
+    * 4-vCPU host). So a run over ~10^5 input partitions needs a few GB of
+    * driver heap; larger inputs need larger splits
+    * (`spark.sql.files.maxPartitionBytes`) or fewer buckets. `metrics/` is
+    * written in slices of at most 100,000 rows per task.
     */
   def run(spark: SparkSession, turns: DataFrame, dbs: Seq[IntelDb],
       outDir: String, cfg: RunConfig = RunConfig()): Map[String, Long] = {
     import spark.implicits._
+    import org.apache.hadoop.fs.Path
     // validate CONFIG before any destructive fs op: a typo'd --extractors
     // (or an inline-extra flag without the ndjson sink it modifies) must
     // fail here, not after the previous run's routed/ has been wiped
@@ -273,17 +310,34 @@ object ScanJob {
       "--ndjson-inline-extra modifies the NDJSON stream; pass --ndjson too")
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(outDir), spark.sparkContext.hadoopConfiguration)
-    val donePath = new org.apache.hadoop.fs.Path(s"$outDir/_buckets_done")
-    val doneBuckets: Set[Int] =
-      if (cfg.resume && fs.exists(donePath))
-        fs.listStatus(donePath).map(_.getPath.getName.toInt).toSet
-      else Set.empty
+    val donePath = new Path(s"$outDir/_buckets_done")
+    def marker(b: Int) = new Path(donePath, b.toString)
+    // the marked buckets; hidden names (a marker's temporary `.<b>.tmp`)
+    // are not markers
+    def listMarked(): Set[Int] =
+      if (!fs.exists(donePath)) Set.empty
+      else fs.listStatus(donePath).map(_.getPath.getName)
+        .filterNot(n => n.startsWith(".") || n.startsWith("_"))
+        .map(n => n.toIntOption.getOrElse(throw new IllegalArgumentException(
+          s"${new Path(donePath, n)} is not a completion marker: remove it")))
+        .toSet
+    def tallyOf(b: Int): BucketTally = {
+      val in = fs.open(marker(b))
+      val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      BucketTally.parse(text, marker(b).toString)
+    }
+    // a FRESH full run (no resume, no shard restriction) owns the whole
+    // outDir: it clears routed data and completion markers up front (below)
+    // so dynamic partition overwrite can't leave stale partitions from a
+    // previous run with different input alive under the new aggregates
+    val fresh = !cfg.resume && cfg.onlyBuckets.isEmpty
+    val marked = if (fresh) Set.empty[Int] else listMarked()
+    val doneBuckets = if (cfg.resume) marked else Set.empty[Int]
     // a resumed run must keep the NDJSON mode of the run it resumes:
     // toggling it mid-resume would mix schemas inside routed/ (extra_json/
     // data_json present in some buckets only) and the NDJSON sink would
     // silently emit wrong extras. Fail fast on mismatch — before writing.
-    if (cfg.resume &&
-      fs.exists(new org.apache.hadoop.fs.Path(s"$outDir/routed"))) {
+    if (cfg.resume && fs.exists(new Path(s"$outDir/routed"))) {
       val existing = scala.util.Try(
         spark.read.parquet(s"$outDir/routed").schema.fieldNames.toSet)
         .getOrElse(Set.empty[String])
@@ -299,13 +353,20 @@ object ScanJob {
             s"[${want.mkString(",")}] — resume with the original flags")
       }
     }
-    // a FRESH full run (no resume, no shard restriction) owns the whole
-    // outDir: clear routed data and completion markers up front so dynamic
-    // partition overwrite can't leave stale partitions from a previous run
-    // with different input alive under the new gold/stats aggregates
-    if (!cfg.resume && cfg.onlyBuckets.isEmpty) {
-      fs.delete(new org.apache.hadoop.fs.Path(s"$outDir/routed"), true)
+    val covered = cfg.onlyBuckets.getOrElse((0 until cfg.buckets).toSet)
+    // the buckets this run (re)writes; every other marked bucket keeps its
+    // routed data, and its marker's tally goes into the aggregates. Those
+    // markers are checked before anything is deleted or written, so a
+    // marker without a tally (an older version's empty marker) fails the
+    // run here.
+    val rewrite = covered -- doneBuckets
+    (marked -- rewrite).foreach(tallyOf)
+    if (fresh) {
+      fs.delete(new Path(s"$outDir/routed"), true)
       fs.delete(donePath, true)
+    } else {
+      // a rewritten bucket is not done until its new marker lands
+      (marked & rewrite).foreach(b => fs.delete(marker(b), false))
     }
     // the NDJSON stream is derived from routed/ — a stale one from a
     // previous run must never survive next to updated routed/ data, so it
@@ -313,7 +374,7 @@ object ScanJob {
     // bucket-restricted reruns, which skip the routed/ wipe above) and
     // regenerated from the full routed output when ndjson is on
     if (!cfg.ndjson)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$outDir/ndjson"), true)
+      fs.delete(new Path(s"$outDir/ndjson"), true)
 
     val withBucket = turns
       .withColumn("bucket", pmod(xxhash64(col("conv_id")), lit(cfg.buckets)))
@@ -325,12 +386,13 @@ object ScanJob {
       if (doneBuckets.isEmpty) selected
       else selected.filter(!col("bucket").isInCollection(doneBuckets))
 
-    // --- THE single pass: extract + enrich + route + stats observers
+    // --- THE single pass: extract + enrich + route + stats/tally observers
     // (scanCfg = F3 capability defaults + CLI overrides, parsed above)
     val obsTurns = org.apache.spark.sql.Observation()
+    val obsTally = org.apache.spark.sql.Observation()
     val counts = new CandidateCounts
     val routed = routedFrame(spark, pending, dbs, Some(obsTurns),
-      Some(counts), Some(scanCfg))
+      Some(counts), Some(scanCfg), Some(obsTally))
     // `extra_json`/`data_json` (the typed NDJSON renderings) are consumed
     // by exactly one sink each — drop whichever the configured mode won't
     // read from the parquet write, so matched rows don't store the extras
@@ -343,37 +405,46 @@ object ScanJob {
     // dynamic partition overwrite: only the (sink, bucket, indicator_type)
     // partitions THIS run produced are replaced — sharded backfills and
     // shard reruns are idempotent, resumed runs never touch done buckets
+    val partitionCols = Seq("sink", "bucket", "indicator_type")
     toWrite.write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("sink", "bucket", "indicator_type")
+      .partitionBy(partitionCols: _*)
       .parquet(s"$outDir/routed")
 
+    // complete once the write returns: the write is one result stage, so
+    // each partition's observed metrics and accumulator updates count once
     val turnStats = obsTurns.get
-    // complete once the write returns: the write is one result stage
     val candStats = counts.byType
+    val tallies = obsTally.get("tally")
+      .asInstanceOf[scala.collection.Map[Int, String]]
 
-    // --- aggregates over the OUTPUT (all buckets, resume-stable): gold
-    // counts (A10) and global line counts come from the written sinks.
-    // A zero-row run (empty daily partition, empty shard) writes only
-    // _SUCCESS — parquet schema inference would throw "Unable to infer
-    // schema" and kill the job before stats/markers. Detect via one cheap
-    // recursive listing and substitute an empty frame with the written
-    // schema (bucket cast to int to match partition-column inference on
-    // the non-empty path) so an empty run still produces its zero-valued
-    // gold_counts/stats/metrics and completion markers.
-    val routedPath = new org.apache.hadoop.fs.Path(s"$outDir/routed")
-    def subtreeHasData(p: org.apache.hadoop.fs.Path): Boolean =
-      fs.listStatus(p).exists { st =>
-        val n = st.getPath.getName
-        !n.startsWith("_") && !n.startsWith(".") &&
-          (!st.isDirectory || subtreeHasData(st.getPath))
-      }
-    val routedHasData = fs.exists(routedPath) && subtreeHasData(routedPath)
-    val routedBack =
-      if (routedHasData) spark.read.parquet(s"$outDir/routed")
-      else toWrite.limit(0).withColumn("bucket", col("bucket").cast("int"))
-    val matchedBack = routedBack.where(col("sink") === "matched")
+    // --- completion markers (resume unit = bucket; only the buckets THIS
+    // run covered get marked — a sharded backfill's other ranges are owned
+    // by their own jobs). Each holds its bucket's tally, empty for a bucket
+    // without rows; the rename publishes it whole.
+    fs.mkdirs(donePath)
+    val written = rewrite.toSeq.sorted.map { b =>
+      val json = tallies.getOrElse(b, BucketTally.empty.json)
+      val tmp = new Path(donePath, s".$b.tmp")
+      val out = fs.create(tmp, true)
+      try out.write(json.getBytes("UTF-8")) finally out.close()
+      require(fs.rename(tmp, marker(b)),
+        s"could not rename $tmp to ${marker(b)}")
+      b -> BucketTally.parse(json, marker(b).toString)
+    }
+
     if (cfg.ndjson) {
+      // routed/ read with the schema it was written with (partition
+      // columns last, bucket as int): an empty routed/ reads as 0 rows and
+      // the read infers nothing
+      val readSchema = StructType((toWrite.schema
+        .filterNot(f => partitionCols.contains(f.name)) ++
+        Seq(StructField("sink", StringType),
+          StructField("bucket", IntegerType),
+          StructField("indicator_type", StringType)))
+        .map(_.copy(nullable = true)))
+      val matchedBack = spark.read.schema(readSchema)
+        .parquet(s"$outDir/routed").where(col("sink") === "matched")
       // per-line timestamp = the turn's event time (deterministic; the
       // reference stamps wall clock) — epoch seconds, 0.0 when absent
       val tsSec =
@@ -383,31 +454,30 @@ object ScanJob {
       graft.io.Sinks.ndjsonMatched(matchedBack, cfg.ndjsonSource, tsSec,
         s"$outDir/ndjson", inlineExtra = cfg.ndjsonInlineExtra)
     }
-    // gold counts, global line counts and lineage metrics all aggregate the
-    // routed output — share ONE column-pruned read across the three actions
-    // instead of three full parquet scans. The cache holds only the eight
-    // narrow key/partition columns (never `text`, which dominates the clean
-    // sink — at 100 TB the clean sink is input-sized, the projection isn't),
-    // spilling to disk if it outgrows memory. The NDJSON sink above stays a
-    // separate read: partition pruning on sink=matched means it never
-    // touches the clean partitions at all.
-    val aggBack = routedBack
-      .select("sink", "conv_id", "turn_idx", "partition_id", "bucket",
-        "database_id", "indicator_type", "role")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val gold = goldCounts(aggBack.where(col("sink") === "matched"))
-    gold.coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$outDir/gold_counts")
 
-    val Seq(totalMatches, linesWithMatches, cleanTurns) = aggBack
-      .agg(count(when(col("sink") === "matched", 1)),
-        countDistinct(when(col("sink") === "matched",
-          struct(col("conv_id"), col("turn_idx")))),
-        count(when(col("sink") === "clean", 1)))
-      .as[(Long, Long, Long)].head().productIterator.map(_.asInstanceOf[Long]).toSeq
+    // --- aggregates over every done bucket, folded from the tallies on the
+    // driver: gold counts (A10), global line counts and per-partition
+    // lineage metrics (R1/A7 analog: what each input partition contributed
+    // to each sink). The other buckets' markers are listed again now that
+    // this run's have landed, so a shard that ran beside this one and
+    // marked its buckets first is in the fold.
+    val kept = (listMarked() -- rewrite).toSeq.sorted.map(b => b -> tallyOf(b))
+    val all = kept ++ written
+    all.flatMap(_._2.gold).groupMapReduce(_._1)(_._2)(_ + _).toSeq
+      .map { case ((d, t, r), n) => (d, t, r, n) }
+      .toDF("database_id", "indicator_type", "role", "match_count")
+      .coalesce(1).write.mode(SaveMode.Overwrite)
+      .parquet(s"$outDir/gold_counts")
+    val lineage =
+      for ((b, t) <- all; (p, (m, c, h)) <- t.parts.toSeq.sortBy(_._1))
+        yield (p, b, m, c, h)
+    val totalMatches = lineage.map(_._3).sum
+    val cleanTurns = lineage.map(_._4).sum
+    val linesWithMatches = lineage.map(_._5).sum
 
     val stats: Map[String, Long] = Map(
-      // global (derived from sinks; stable across resume runs)
+      // global (folded from every done bucket's tally; stable across
+      // resume runs)
       "lines_processed" -> (linesWithMatches + cleanTurns),
       "total_matches" -> totalMatches,
       "lines_with_matches" -> linesWithMatches,
@@ -418,31 +488,19 @@ object ScanJob {
     stats.toSeq.toDF("stat", "value").coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(s"$outDir/stats")
 
-    // --- per-partition lineage metrics (R1/A7 analog): what each input
-    // partition contributed to each sink, aggregated from the routed output
-    // (output-sized, no input rescan)
-    aggBack
-      .groupBy("partition_id", "bucket")
-      .agg(count(when(col("sink") === "matched", 1)).as("matched_rows"),
-        count(when(col("sink") === "clean", 1)).as("clean_turns"),
-        countDistinct(when(col("sink") === "matched",
-          struct(col("conv_id"), col("turn_idx"))))
-          .as("turns_with_matches"))
+    // one row per (input partition, bucket), so it is written in slices of
+    // at most `lineageSlice` rows: no one task carries all of them
+    spark.sparkContext.parallelize(lineage,
+        math.max(1, (lineage.size + lineageSlice - 1) / lineageSlice))
+      .toDF("partition_id", "bucket", "matched_rows", "clean_turns",
+        "turns_with_matches")
       .withColumn("run_id", lit(cfg.runId))
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("run_id").parquet(s"$outDir/metrics")
-    aggBack.unpersist()
-
-    // --- completion markers (resume unit = bucket; only the buckets THIS
-    // run covered get marked — a sharded backfill's other ranges are owned
-    // by their own jobs)
-    fs.mkdirs(donePath)
-    val covered = cfg.onlyBuckets.getOrElse((0 until cfg.buckets).toSet)
-    covered.foreach { b =>
-      fs.create(new org.apache.hadoop.fs.Path(s"$outDir/_buckets_done/$b"),
-        true).close()
-    }
     stats
   }
+
+  /** Most `metrics/` rows one write task carries. */
+  private val lineageSlice = 100000
 }

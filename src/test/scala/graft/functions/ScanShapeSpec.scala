@@ -2,14 +2,12 @@ package graft.functions
 
 import graft.extract.{IocScanner, ScanConfig}
 import graft.intel.IntelDb
-import graft.model.{IntelEntry, Turn}
+import graft.model.IntelEntry
 import graft.pipeline.Fixtures
 import graft.props.ScanDifferentialSpec
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
-
-import scala.util.Random
 
 /** The three emitters over ScanTurn's one probe loop agree: for every
   * text, `scanFlat` is the flattening of `scan`'s candidate rows that have
@@ -47,15 +45,6 @@ class ScanShapeSpec extends AnyFunSuite {
     IntelDb.build("ci", ciFeed, caseInsensitive = true))
 
   private val scanner = new IocScanner(ScanConfig())
-
-  // ScanDifferentialSpec's private hostile generator, reused as it is
-  private def hostileTurns(seed: Long, n: Int): Seq[Turn] = {
-    val m = classOf[ScanDifferentialSpec].getDeclaredMethod("mkTurns",
-      classOf[Random], classOf[Int])
-    m.setAccessible(true)
-    m.invoke(new ScanDifferentialSpec, new Random(seed), Int.box(n))
-      .asInstanceOf[Seq[Turn]]
-  }
 
   private def hitsOf(a: ArrayData): Seq[Hit] =
     (0 until a.numElements()).map { k =>
@@ -120,7 +109,7 @@ class ScanShapeSpec extends AnyFunSuite {
   test("hostile turns: flat == flattened nested, clean iff no flat rows, " +
     "lookup == hits") {
     val (_, _, matchedTurns) =
-      checkAll(hostileTurns(0x5eed4007L, 3000).map(_.text))
+      checkAll(ScanDifferentialSpec.hostileCorpus()._1.map(_.text))
     assert(matchedTurns > 100, s"only $matchedTurns hostile turns matched")
   }
 

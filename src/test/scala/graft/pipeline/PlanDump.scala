@@ -22,8 +22,11 @@ object PlanDump {
       pmod(xxhash64(col("conv_id")), lit(8)))
     println("=== matched (ScanTurn single-expression extract+lookup) ===")
     ScanJob.matched(turns, dbs, spark).explain("formatted")
-    println("=== routedFrame (ScanJob.run single pass) ===")
-    ScanJob.routedFrame(spark, withBucket, dbs).explain("formatted")
+    println("=== routedFrame (ScanJob.run single pass, with its observers) ===")
+    ScanJob.routedFrame(spark, withBucket, dbs,
+      obsTurns = Some(org.apache.spark.sql.Observation()),
+      obsTally = Some(org.apache.spark.sql.Observation()))
+      .explain("formatted")
     println("=== goldCounts over matched (the one shuffle) ===")
     ScanJob.goldCounts(ScanJob.matched(turns, dbs, spark)).explain("formatted")
     spark.stop()

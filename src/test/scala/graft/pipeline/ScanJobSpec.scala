@@ -258,7 +258,7 @@ class ScanJobSpec extends AnyFunSuite {
 
     // geometric budget sweep (a full run is hundreds of mutating ops —
     // sampling doubles covers every phase: initial cleanup, the routed
-    // write, gold/stats/metrics, completion markers) until one run
+    // write, completion markers, gold/stats/metrics) until one run
     // completes unfaulted
     var budget = 1
     var cleanRun = false
@@ -276,10 +276,11 @@ class ScanJobSpec extends AnyFunSuite {
       // the REAL gate is the unconditional content equality below, which
       // runs for faulted AND unfaulted budgets alike)
       if (crashed) {
-        // resume over the plain scheme: markers are written LAST, so any
-        // crash point leaves either unmarked buckets (reprocessed, dynamic
-        // overwrite idempotent) or marked buckets with committed data;
-        // gold/stats/metrics are always recomputed from the routed output
+        // resume over the plain scheme: a bucket's marker is renamed into
+        // place only after the routed write has committed, so any crash
+        // point leaves either unmarked buckets (reprocessed, dynamic
+        // overwrite idempotent) or marked buckets with committed data and
+        // a whole tally; gold/stats/metrics are refolded from the markers
         ScanJob.run(spark, turnsDf, dbs, out,
           ScanJob.RunConfig(buckets = 8, resume = true,
             runId = s"resume-$budget"))

@@ -16,7 +16,8 @@ import java.util.concurrent.atomic.AtomicInteger
   * retried: a test-only UDF on `text` throws partway through the first
   * attempt of partition 0, in a `local[4,2]` session that retries it. `stats/` (every
   * `candidates_<type>`, which an accumulator counts inside the scan),
-  * `gold_counts/` and the routed rows (by `Reconcile` digest) must equal a
+  * `gold_counts/` and `metrics/` (folded from the per-bucket tallies the
+  * scan observes) and the routed rows (by `Reconcile` digest) must equal a
   * clean run's, and the candidate counts must equal the oracle's, on a
   * LocalRelation input and on a parquet input.
   */
@@ -77,7 +78,7 @@ class ScanRetrySpec extends AnyFunSuite {
         assert(retried == clean, name)
         assert(clean.filter(_._1.startsWith("candidates_")) == oracleCands,
           name)
-        for (sub <- Seq("stats", "gold_counts"))
+        for (sub <- Seq("stats", "gold_counts", "metrics"))
           assert(table(spark, s"$base/$name-retried/$sub") ==
             table(spark, s"$base/$name-clean/$sub"), s"$name $sub")
         val a = spark.read.parquet(s"$base/$name-clean/routed")

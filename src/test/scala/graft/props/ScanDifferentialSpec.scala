@@ -35,6 +35,53 @@ class ScanDifferentialSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
+  test("random hostile corpus: distributed candidates+matched == " +
+    "single-threaded scanner, exactly, twice (32 partitions, colliding values)") {
+    val (turnsSeq, dbs) = ScanDifferentialSpec.hostileCorpus()
+    val turnsDf = spark.createDataFrame(turnsSeq).repartition(32)
+
+    val oracleCands = Oracle.candidates(turnsSeq)
+    assert(oracleCands.size > 10000, // the corpus must be DENSE to stress
+      s"hostile corpus too sparse: ${oracleCands.size} candidates")
+    val oracleMatched = Oracle.matched(turnsSeq, dbs)
+    assert(oracleMatched.size > 200,
+      s"hostile corpus produced too few matches: ${oracleMatched.size}")
+    val oCandMs = oracleCands.groupBy(identity).view.mapValues(_.size).toMap
+    val oMatchMs = oracleMatched.groupBy(identity).view.mapValues(_.size).toMap
+
+    // two passes: pass 1 populates every per-thread cache with colliding
+    // values; pass 2 would surface any poisoned slot
+    for (pass <- 1 to 2) {
+      val cands = ScanJob.candidates(turnsDf)
+        .as[graft.model.Candidate].collect().toSeq
+      assert(cands.groupBy(identity).view.mapValues(_.size).toMap == oCandMs,
+        s"candidate multiset diverged on pass $pass")
+      val matched = ScanJob.matched(turnsDf, dbs, spark)
+        .withColumnRenamed("entry_idx", "pattern_id")
+        .select("conv_id", "turn_idx", "role", "indicator_type", "value",
+          "matched_text", "span_start", "span_end", "database_id",
+          "match_type", "prefix_len", "pattern_id", "threat_level",
+          "category", "source", "confidence")
+        .as[graft.model.Matched].collect().toSeq
+      assert(matched.groupBy(identity).view.mapValues(_.size).toMap == oMatchMs,
+        s"matched multiset diverged on pass $pass")
+    }
+  }
+}
+
+object ScanDifferentialSpec {
+  /** The seeded hostile corpus: 3,000 turns and three databases, the
+    * fixture feeds plus one drawn from the same random stream.
+    */
+  def hostileCorpus(): (Seq[Turn], Seq[IntelDb]) = {
+    val r = new Random(0x5eed4007L)
+    val turnsSeq = mkTurns(r, 3000)
+    (turnsSeq, Seq(
+      IntelDb.build("threats", graft.pipeline.Fixtures.intelThreats),
+      IntelDb.build("allowlist", graft.pipeline.Fixtures.intelAllowlist),
+      mkRandomDb(r)))
+  }
+
   private val hexDigits = "0123456789abcdef"
 
   private def hex(r: Random, n: Int): String =
@@ -111,43 +158,5 @@ class ScanDifferentialSpec extends AnyFunSuite {
       IntelEntry(s"${label(r)}.com", "medium", "rand", "rnd", 60)) ++
       (0 until 10).map(_ => IntelEntry(hex(r, 32), "high", "rand", "rnd", 70))
     IntelDb.build("rand", entries)
-  }
-
-  test("random hostile corpus: distributed candidates+matched == " +
-    "single-threaded scanner, exactly, twice (32 partitions, colliding values)") {
-    val r = new Random(0x5eed4007L)
-    val turnsSeq = mkTurns(r, 3000)
-    val dbs = Seq(
-      IntelDb.build("threats", graft.pipeline.Fixtures.intelThreats),
-      IntelDb.build("allowlist", graft.pipeline.Fixtures.intelAllowlist),
-      mkRandomDb(r))
-    val turnsDf = spark.createDataFrame(turnsSeq).repartition(32)
-
-    val oracleCands = Oracle.candidates(turnsSeq)
-    assert(oracleCands.size > 10000, // the corpus must be DENSE to stress
-      s"hostile corpus too sparse: ${oracleCands.size} candidates")
-    val oracleMatched = Oracle.matched(turnsSeq, dbs)
-    assert(oracleMatched.size > 200,
-      s"hostile corpus produced too few matches: ${oracleMatched.size}")
-    val oCandMs = oracleCands.groupBy(identity).view.mapValues(_.size).toMap
-    val oMatchMs = oracleMatched.groupBy(identity).view.mapValues(_.size).toMap
-
-    // two passes: pass 1 populates every per-thread cache with colliding
-    // values; pass 2 would surface any poisoned slot
-    for (pass <- 1 to 2) {
-      val cands = ScanJob.candidates(turnsDf)
-        .as[graft.model.Candidate].collect().toSeq
-      assert(cands.groupBy(identity).view.mapValues(_.size).toMap == oCandMs,
-        s"candidate multiset diverged on pass $pass")
-      val matched = ScanJob.matched(turnsDf, dbs, spark)
-        .withColumnRenamed("entry_idx", "pattern_id")
-        .select("conv_id", "turn_idx", "role", "indicator_type", "value",
-          "matched_text", "span_start", "span_end", "database_id",
-          "match_type", "prefix_len", "pattern_id", "threat_level",
-          "category", "source", "confidence")
-        .as[graft.model.Matched].collect().toSeq
-      assert(matched.groupBy(identity).view.mapValues(_.size).toMap == oMatchMs,
-        s"matched multiset diverged on pass $pass")
-    }
   }
 }
